@@ -218,14 +218,15 @@ def test_written_stats_tables_prune_and_skip_tokenize(spark, sf_dir):
     (VERDICT r05 ask #6)."""
     import os
 
+    from weaviate_spark import registry
     from weaviate_spark.operators import bm25 as bm25_mod
     from weaviate_spark.operators.bm25 import (
-        BM25_ARTIFACT_ROOT, BM25Prop, BM25Spec, bm25_search, invalidate_stats,
+        BM25_ARTIFACT_ROOT, BM25Prop, BM25Spec, bm25_search,
     )
 
     import shutil
 
-    invalidate_stats()
+    registry.clear()
     shutil.rmtree(BM25_ARTIFACT_ROOT, ignore_errors=True)
     # disable the local memory cache so the executed plan shows the
     # 100-TB shape: file-backed scans with term-bucket partition pruning
@@ -268,7 +269,7 @@ def test_written_stats_tables_prune_and_skip_tokenize(spark, sf_dir):
         assert os.path.getmtime(marker) == mtime
     finally:
         bm25_mod.CACHE_INDEX_TABLES = True
-        invalidate_stats()
+        registry.clear()
 
 
 def test_incremental_bm25_artifact_advance(spark, tmp_path):
@@ -279,13 +280,13 @@ def test_incremental_bm25_artifact_advance(spark, tmp_path):
     re-run (commit marker survives the rename untouched)."""
     import os
 
+    from weaviate_spark import registry
     from weaviate_spark.operators import bm25 as bm25_mod
     from weaviate_spark.operators.bm25 import (
         BM25Prop, BM25Spec, advance_bm25_artifacts, bm25_search,
-        invalidate_stats,
     )
 
-    invalidate_stats()
+    registry.clear()
     sf = str(tmp_path / "sf")
     os.makedirs(sf)
     spark.createDataFrame(
@@ -321,7 +322,7 @@ def test_incremental_bm25_artifact_advance(spark, tmp_path):
          (5, "unrelated background noise")],
         "doc_id long, text string",
     )
-    fp_before = bm25_mod._source_fingerprint(sf, "docs")
+    fp_before = registry.source_fingerprint(registry.table_path(sf, "docs"))
     batch.write.mode("append").parquet(f"{sf}/docs.parquet")
     advance_bm25_artifacts(batch, sf, "docs", fp_before)
 
@@ -340,7 +341,7 @@ def test_incremental_bm25_artifact_advance(spark, tmp_path):
         if tag in dirpath and "_ALL_TABLES_COMMITTED" in filenames:
             found.append((dirpath, sentinel_name in filenames))
     assert found == [(found[0][0], True)]
-    invalidate_stats()
+    registry.clear()
 
 
 def test_bm25_artifact_compaction(spark, tmp_path):
@@ -349,13 +350,14 @@ def test_bm25_artifact_compaction(spark, tmp_path):
     after (LSM-compaction value-identity)."""
     import os
 
+    from weaviate_spark import registry
     from weaviate_spark.operators import bm25 as bm25_mod
     from weaviate_spark.operators.bm25 import (
         BM25Prop, BM25Spec, advance_bm25_artifacts, bm25_search,
-        compact_bm25_artifacts, invalidate_stats,
+        compact_bm25_artifacts,
     )
 
-    invalidate_stats()
+    registry.clear()
     sf = str(tmp_path / "sf")
     os.makedirs(sf)
     spark.createDataFrame(
@@ -371,7 +373,7 @@ def test_bm25_artifact_compaction(spark, tmp_path):
     # two appended batches -> three delta generations in the stat tables
     for off, txt in ((3, "spark join order"), (4, "filter scan plans today")):
         batch = spark.createDataFrame([(off, txt)], "doc_id long, text string")
-        fp = bm25_mod._source_fingerprint(sf, "docs")
+        fp = registry.source_fingerprint(registry.table_path(sf, "docs"))
         batch.write.mode("append").parquet(f"{sf}/docs.parquet")
         advance_bm25_artifacts(batch, sf, "docs", fp)
 
@@ -393,4 +395,107 @@ def test_bm25_artifact_compaction(spark, tmp_path):
     assert len(ours) == 1
     tdf = spark.read.parquet(ours[0]).toPandas()
     assert not tdf.duplicated(subset=["prop", "term"]).any()
-    invalidate_stats()
+    registry.clear()
+
+
+def test_out_of_band_append_is_visible_on_stats_path(spark, tmp_path):
+    """A plain parquet append (what stream_ingest(upsert=False) does
+    without bm25=True) must not leave the default stats-table path
+    serving the pre-append index: it must equal the recompute path and
+    find the appended doc."""
+    import os
+
+    from weaviate_spark import registry
+    from weaviate_spark.operators.bm25 import BM25Prop, BM25Spec, bm25_search
+
+    registry.clear()
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    schema = "doc_id long, text string"
+    spark.createDataFrame(
+        [(1, "spark filter join engine"), (2, "filter pushdown scan"),
+         (3, "entirely different topic words")], schema,
+    ).write.parquet(f"{sf}/docs.parquet")
+    spec = BM25Spec(collection="docs", query="zebra", limit=20,
+                    properties=[BM25Prop("text")], id_col="doc_id")
+    assert bm25_search(spark, sf, spec).collect() == []  # index built
+
+    spark.createDataFrame([(4, "a zebra crossing")], schema).write.mode(
+        "append").parquet(f"{sf}/docs.parquet")
+    got = [(r["doc_id"], r["_score"])
+           for r in bm25_search(spark, sf, spec).collect()]
+    want = [(r["doc_id"], r["_score"])
+            for r in bm25_search(spark, sf, spec,
+                                 use_stats_tables=False).collect()]
+    assert got == want and [d for d, _ in got] == [4]
+    registry.clear()
+
+
+def test_compaction_beside_first_query_on_new_property_set(
+        spark, tmp_path, monkeypatch):
+    """Compaction holds the artifact lock and releases the collection's
+    bm25 entries, while a first query on a new property set holds its
+    entry's lock and waits for the artifact lock: both must finish, and
+    the query must score like the recompute path."""
+    import os
+    import threading
+
+    from weaviate_spark import registry
+    from weaviate_spark.operators import bm25 as bm25_mod
+    from weaviate_spark.operators.bm25 import (
+        BM25Prop, BM25Spec, bm25_search, compact_bm25_artifacts,
+    )
+
+    registry.clear()
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    spark.createDataFrame(
+        [(1, "spark filter", "join engine"), (2, "filter scan", "spark plans")],
+        "doc_id long, text string, title string",
+    ).write.parquet(f"{sf}/docs.parquet")
+
+    def spec(prop):
+        return BM25Spec(collection="docs", query="spark", limit=20,
+                        properties=[BM25Prop(prop)], id_col="doc_id")
+
+    bm25_search(spark, sf, spec("text")).collect()  # an artifact to compact
+
+    building = threading.Event()
+    real = bm25_mod._load_or_build_index_tables
+
+    def gated(*args, **kwargs):
+        building.set()  # inside the entry's build: its lock is held
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(bm25_mod, "_load_or_build_index_tables", gated)
+    got, errors = {}, []
+
+    def query():
+        try:
+            got["title"] = [(r["doc_id"], r["_score"]) for r in
+                            bm25_search(spark, sf, spec("title")).collect()]
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    def compact():
+        try:
+            with bm25_mod._artifact_lock:
+                querier.start()
+                assert building.wait(60)
+                got["compacted"] = compact_bm25_artifacts(spark, sf, "docs")
+        except Exception as exc:
+            errors.append(exc)
+
+    querier = threading.Thread(target=query, daemon=True)
+    compactor = threading.Thread(target=compact, daemon=True)
+    compactor.start()
+    compactor.join(120)
+    querier.join(120)
+    assert not compactor.is_alive() and not querier.is_alive(), "deadlock"
+    assert not errors
+    want = [(r["doc_id"], r["_score"]) for r in bm25_search(
+        spark, sf, spec("title"), use_stats_tables=False).collect()]
+    again = [(r["doc_id"], r["_score"])
+             for r in bm25_search(spark, sf, spec("title")).collect()]
+    assert got["compacted"] == 1 and got["title"] == want == again
+    registry.clear()

@@ -234,11 +234,11 @@ def test_neighbors_graph_route(client, spark, sf_dir):
     """query.neighbors: on-corpus neighbor lookup via the k-NN graph
     artifact — excludes the object itself and agrees with the exact
     top-k on this corpus (the measured recall-1.0 workload)."""
-    from weaviate_spark.operators.similarity import invalidate_nn_graphs
+    from weaviate_spark import registry
 
     emb = client.collections.get("embeddings").with_config(
         id_col="vec_id", vector_col="embedding")
-    invalidate_nn_graphs()
+    registry.clear()
     got = emb.query.neighbors(7, limit=5).collect()
     assert len(got) == 5
     assert all(r["vec_id"] != 7 for r in got)
@@ -256,7 +256,7 @@ def test_neighbors_graph_route(client, spark, sf_dir):
     import pytest as _pytest
     with _pytest.raises(KeyError):
         emb.query.neighbors(10_000_000_007)
-    invalidate_nn_graphs()
+    registry.clear()
 
 
 def test_get_meta(spark, tmp_path):

@@ -504,9 +504,11 @@ def test_incremental_dedup_index_append(spark):
     """append_to_dedup_index upserts new docs into the persisted
     shingle/signature tables; the queried pairs equal a from-scratch
     rebuild over the grown corpus (ingest-time incremental refresh)."""
+    from weaviate_spark import registry
     from weaviate_spark.operators.dedup import (
-        append_to_dedup_index, invalidate_dedup_index, minhash_lsh_pairs,
+        append_to_dedup_index, minhash_lsh_pairs,
     )
+    from weaviate_spark.sources.tables import source_paths
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
     corpus_a = spark.createDataFrame(
@@ -514,7 +516,7 @@ def test_incremental_dedup_index_append(spark):
         ["doc_id", "text"],
     )
     key = ("test-incremental", "docs")
-    invalidate_dedup_index()
+    registry.clear()
     pairs0 = minhash_lsh_pairs(
         corpus_a, "doc_id", "text", jaccard_threshold=0.5, table_key=key
     ).collect()
@@ -525,7 +527,8 @@ def test_incremental_dedup_index_append(spark):
         [(2, base + " tomorrow"), (3, base + " yesterday")],
         ["doc_id", "text"],
     )
-    append_to_dedup_index(new_docs, "doc_id", "text", 3, key)
+    append_to_dedup_index(new_docs, "doc_id", "text", 3, key,
+                          before=registry.stamp(source_paths(*key)))
     grown = corpus_a.where("doc_id != 3").unionByName(new_docs)
     got = sorted(
         (p["id_a"], p["id_b"])
@@ -534,7 +537,7 @@ def test_incremental_dedup_index_append(spark):
         ).collect()
     )
     # from-scratch rebuild over the same grown corpus
-    invalidate_dedup_index()
+    registry.clear()
     want = sorted(
         (p["id_a"], p["id_b"])
         for p in minhash_lsh_pairs(
@@ -543,7 +546,7 @@ def test_incremental_dedup_index_append(spark):
         ).collect()
     )
     assert got == want and (1, 2) in got and (1, 3) in got
-    invalidate_dedup_index()
+    registry.clear()
 
 
 def test_incremental_index_variants_and_segments(spark):
@@ -551,9 +554,11 @@ def test_incremental_index_variants_and_segments(spark):
     table_key are BOTH maintained through appends, and multiple pending
     segments merge last-write-wins per doc id (a doc replaced twice
     across segments indexes only its final text)."""
+    from weaviate_spark import registry
     from weaviate_spark.operators.dedup import (
-        append_to_dedup_index, invalidate_dedup_index, minhash_lsh_pairs,
+        append_to_dedup_index, minhash_lsh_pairs,
     )
+    from weaviate_spark.sources.tables import source_paths
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
     corpus = spark.createDataFrame(
@@ -561,7 +566,7 @@ def test_incremental_index_variants_and_segments(spark):
         ["doc_id", "text"],
     )
     key = ("variants", "docs")
-    invalidate_dedup_index()
+    registry.clear()
     # build two signature variants under the same key
     minhash_lsh_pairs(corpus, "doc_id", "text", num_hashes=16,
                       jaccard_threshold=0.5, table_key=key).collect()
@@ -574,12 +579,12 @@ def test_incremental_index_variants_and_segments(spark):
     append_to_dedup_index(
         spark.createDataFrame([(3, "interim text that will be replaced")],
                               ["doc_id", "text"]),
-        "doc_id", "text", 3, key)
+        "doc_id", "text", 3, key, before=registry.stamp(source_paths(*key)))
     append_to_dedup_index(
         spark.createDataFrame(
             [(3, base + " yesterday"), (2, base + " tomorrow")],
             ["doc_id", "text"]),
-        "doc_id", "text", 3, key)
+        "doc_id", "text", 3, key, before=registry.stamp(source_paths(*key)))
 
     logical = spark.createDataFrame(
         [(1, base), (2, base + " tomorrow"), (3, base + " yesterday")],
@@ -602,7 +607,7 @@ def test_incremental_index_variants_and_segments(spark):
         )
         assert got == want, (nh, got, want)
         assert {(a, b) for a, b, _ in got} == {(1, 2), (1, 3), (2, 3)}
-    invalidate_dedup_index()
+    registry.clear()
 
 
 def test_temperature_sample_flattens_mixture(spark):

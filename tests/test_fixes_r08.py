@@ -1,9 +1,9 @@
 """Round-8 regression pins for the r07 ADVICE findings:
 
-1. invalidate_indexes() must drop the SQ / IVF-PQ / NN-graph caches
-   too — SQ is the quantize="auto" route, so a write followed by a
-   nearVector search must see the new vectors (a stale checkpointed SQ
-   code table silently hides them from top-k forever).
+1. A write must rebuild the SQ / IVF-PQ / NN-graph state too — SQ is
+   the quantize="auto" route, so a write followed by a nearVector
+   search must see the new vectors (a stale checkpointed SQ code table
+   silently hides them from top-k forever).
 2. decode_gif_frame_stats must survive truncated headers
    (struct.error from unpack_from) per the "per-row codec failure must
    never kill a 100 TB pass" contract.
@@ -66,19 +66,70 @@ def test_write_invalidates_sq_index_new_vector_visible(spark, sf_dir, tmp_path):
     assert after[0]["_distance"] == 0.0
 
 
-def test_invalidate_indexes_clears_every_vector_family():
+@pytest.mark.parametrize("writer", ["crud", "out_of_band"])
+def test_write_rebuilds_each_dependent_entry_once(spark, sf_dir, tmp_path, writer):
+    """One write to `embeddings` (a crud upsert, or files rewritten
+    behind the engine's back) rebuilds each derived-state entry built
+    from that table exactly once on its next resolves, and no entry of
+    another table: `part`'s base plan, the near-dup index and BM25
+    handles over `documents`, and a BQ index on another collection."""
+    from weaviate_spark import registry
+    from weaviate_spark.operators.bm25 import BM25Prop, BM25Spec, bm25_search
+    from weaviate_spark.operators.dedup import with_shingle_table
     from weaviate_spark.operators.quantization import (
-        _sq_bounds_cache, _vector_tables,
+        sq_trained_bounds, with_bq_index,
     )
-    from weaviate_spark.operators.similarity import _nng_cache
-    from weaviate_spark.sources.crud import invalidate_indexes
+    from weaviate_spark.operators.similarity import nn_descent_graph
+    from weaviate_spark.sources.crud import upsert
+    from weaviate_spark.sources.tables import load_table
 
-    _sq_bounds_cache[("s", "d", "c", "v")] = (-1.0, 1.0)
-    _nng_cache[("probe",)] = object()
-    invalidate_indexes()
-    assert not _sq_bounds_cache
-    assert not _nng_cache
-    assert not _vector_tables._state
+    sf = str(tmp_path)
+    for src, dst in (("part", "part"), ("documents", "documents"),
+                     ("embeddings", "embeddings"), ("embeddings", "vecs2")):
+        spark.read.parquet(f"{sf_dir}/{src}.parquet").write.parquet(
+            f"{sf}/{dst}.parquet")
+    emb_path = registry.table_path(sf, "embeddings")
+    spec = BM25Spec(collection="documents", query="data", limit=5,
+                    properties=[BM25Prop("text")], id_col="doc_id")
+
+    def resolve_all():
+        load_table(spark, sf, "part").count()
+        load_table(spark, sf, "docs_embedded")
+        bm25_search(spark, sf, spec).collect()
+        with_shingle_table(load_table(spark, sf, "documents"), "doc_id",
+                           "text", 3, (sf, "documents"))
+        for coll in ("embeddings", "vecs2"):
+            with_bq_index(load_table(spark, sf, coll), "vec_id", "embedding",
+                          64, (sf, coll))
+        sq_trained_bounds(spark, sf, "embeddings")
+        nn_descent_graph(spark, sf, "embeddings", k=3, rounds=0, num_planes=2)
+
+    registry.clear()
+    resolve_all()
+    mine = [k for k in registry.builds if k[1][0].startswith(sf)]
+    assert {k[0] for k in mine} >= {"plan", "derived", "bm25", "dedup",
+                                    "vector", "sq_bounds", "nng"}
+    before = {k: registry.builds[k] for k in mine}
+
+    emb = spark.read.parquet(emb_path)
+    if writer == "crud":
+        upsert(spark, emb_path, emb.where("vec_id = 0"), "vec_id")
+    else:
+        rows = emb.collect()
+        spark.createDataFrame(rows, emb.schema).write.mode(
+            "overwrite").parquet(emb_path)
+    resolve_all()
+    resolve_all()
+
+    rebuilt = {k: registry.builds[k] - before[k] for k in mine}
+    dependent = {k for k in mine if emb_path in k[1]}
+    assert {k[0] for k in dependent} == {"plan", "derived", "vector",
+                                         "sq_bounds", "nng"}
+    assert {k: n for k, n in rebuilt.items() if k in dependent} == {
+        k: 1 for k in dependent}
+    assert {k: n for k, n in rebuilt.items() if k not in dependent} == {
+        k: 0 for k in mine if k not in dependent}
+    registry.clear()
 
 
 def test_gif_frame_stats_survives_truncated_header(spark):
@@ -109,8 +160,9 @@ def test_sq_auto_route_trains_bounds_for_unnormalized_corpus(spark, tmp_path):
     """Vectors in [0, 100]: fixed [-1, 1] saturates every component to
     code 255 (candidate scan degenerates to ties); trained bounds keep
     the auto route's top-k identical to the exact scan."""
+    from weaviate_spark import registry
     from weaviate_spark.operators.quantization import (
-        invalidate_sq_index, sq_topk, sq_trained_bounds,
+        sq_topk, sq_trained_bounds,
     )
     from weaviate_spark.operators.vector import NearVectorSpec, near_vector
 
@@ -120,7 +172,7 @@ def test_sq_auto_route_trains_bounds_for_unnormalized_corpus(spark, tmp_path):
     table_dir = str(tmp_path / "embeddings.parquet")
     spark.createDataFrame(rows, ["vec_id", "embedding"]).write.parquet(table_dir)
     my_sf = str(tmp_path)
-    invalidate_sq_index()
+    registry.clear()
 
     query = [rng.uniform(0.0, 100.0) for _ in range(dim)]
     lo, hi = sq_trained_bounds(spark, my_sf, "embeddings")
@@ -143,16 +195,15 @@ def test_sq_auto_route_trains_bounds_for_unnormalized_corpus(spark, tmp_path):
         metric="l2-squared", lo=-1.0, hi=1.0,
     ).select("vec_id").collect()
     assert [r["vec_id"] for r in naive] != [r["vec_id"] for r in exact]
-    invalidate_sq_index()
+    registry.clear()
 
 
 def test_sq_cosine_route_normalizes_varying_norm_corpus(spark, tmp_path):
     """Cosine over a corpus whose norms vary wildly: raw-value codes
     rank by raw L2 (wrong for cosine); the route must encode UNIT
     vectors so the code distance is monotone in cosine distance."""
-    from weaviate_spark.operators.quantization import (
-        invalidate_sq_index, sq_topk,
-    )
+    from weaviate_spark import registry
+    from weaviate_spark.operators.quantization import sq_topk
     from weaviate_spark.operators.vector import NearVectorSpec, near_vector
 
     rng = random.Random(7)
@@ -167,7 +218,7 @@ def test_sq_cosine_route_normalizes_varying_norm_corpus(spark, tmp_path):
     table_dir = str(tmp_path / "embeddings.parquet")
     spark.createDataFrame(rows, ["vec_id", "embedding"]).write.parquet(table_dir)
     my_sf = str(tmp_path)
-    invalidate_sq_index()
+    registry.clear()
 
     query = [rng.gauss(0, 1) for _ in range(dim)]
     exact = near_vector(spark, my_sf, NearVectorSpec(
@@ -185,21 +236,20 @@ def test_sq_cosine_route_normalizes_varying_norm_corpus(spark, tmp_path):
         metric="cosine", normalize=False,
     ).select("vec_id").collect()
     assert [r["vec_id"] for r in naive] != [r["vec_id"] for r in exact]
-    invalidate_sq_index()
+    registry.clear()
 
 
 def test_sq_trained_bounds_degenerate_corpus(spark, tmp_path):
-    from weaviate_spark.operators.quantization import (
-        invalidate_sq_index, sq_trained_bounds,
-    )
+    from weaviate_spark import registry
+    from weaviate_spark.operators.quantization import sq_trained_bounds
 
     table_dir = str(tmp_path / "embeddings.parquet")
     spark.createDataFrame(
         [(1, [2.5, 2.5]), (2, [2.5, 2.5])], ["vec_id", "embedding"]
     ).write.parquet(table_dir)
-    invalidate_sq_index()
+    registry.clear()
     assert sq_trained_bounds(spark, str(tmp_path), "embeddings") == (-1.0, 1.0)
-    invalidate_sq_index()
+    registry.clear()
 
 
 def test_zorder_key_caps_bits_to_63(spark):

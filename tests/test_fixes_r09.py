@@ -328,9 +328,8 @@ def test_sq_clipped_bounds_deterministic_sample(spark, tmp_path):
     embed lo/hi and must be reproducible)."""
     import random
 
-    from weaviate_spark.operators.quantization import (
-        _sq_bounds_cache, sq_trained_bounds,
-    )
+    from weaviate_spark import registry
+    from weaviate_spark.operators.quantization import sq_trained_bounds
 
     rng = random.Random(5)
     rows = [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(3000)]
@@ -339,7 +338,7 @@ def test_sq_clipped_bounds_deterministic_sample(spark, tmp_path):
     df.repartition(7).write.parquet(f"{sf}/embeddings.parquet")
     b1 = sq_trained_bounds(spark, sf, "embeddings", clip_quantile=0.01,
                            sample_cap=1000)
-    _sq_bounds_cache.clear()
+    registry.clear()
     sf2 = str(tmp_path / "re")
     df.repartition(31).write.parquet(f"{sf2}/embeddings.parquet")
     b2 = sq_trained_bounds(spark, sf2, "embeddings", clip_quantile=0.01,
@@ -355,9 +354,8 @@ def test_graph_expand_off_corpus_contract(spark, tmp_path):
     import random
     import warnings
 
-    from weaviate_spark.operators.similarity import (
-        graph_expand_topk, invalidate_nn_graphs,
-    )
+    from weaviate_spark import registry
+    from weaviate_spark.operators.similarity import graph_expand_topk
 
     rng = random.Random(3)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(64)]
@@ -367,7 +365,7 @@ def test_graph_expand_off_corpus_contract(spark, tmp_path):
     ).write.parquet(f"{sf}/embeddings.parquet")
     q = [rng.uniform(-1, 1) for _ in range(8)]
 
-    invalidate_nn_graphs()
+    registry.clear()
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         graph_expand_topk(spark, sf, "embeddings", q, k=3, seed_m=3,
@@ -381,7 +379,7 @@ def test_graph_expand_off_corpus_contract(spark, tmp_path):
                           seed_m=3, graph_k=2, num_planes=2,
                           on_corpus=True).count()
         assert not [x for x in w if issubclass(x.category, RuntimeWarning)]
-    invalidate_nn_graphs()
+    registry.clear()
 
 
 def test_near_vector_quantize_clip_route(spark, tmp_path):
@@ -389,7 +387,7 @@ def test_near_vector_quantize_clip_route(spark, tmp_path):
     l2 SQ route's bound training; default (None) stays exact min/max."""
     import random
 
-    from weaviate_spark.operators.quantization import _sq_bounds_cache
+    from weaviate_spark import registry
     from weaviate_spark.operators.vector import NearVectorSpec, near_vector
 
     rng = random.Random(21)
@@ -404,7 +402,7 @@ def test_near_vector_quantize_clip_route(spark, tmp_path):
         rows, "vec_id long, embedding array<float>"
     ).write.parquet(f"{sf}/embeddings.parquet")
     q = [rng.gauss(0, 1) for _ in range(8)]
-    _sq_bounds_cache.clear()
+    registry.clear()
     out = near_vector(spark, sf, NearVectorSpec(
         collection="embeddings", vector=q, metric="l2-squared", limit=5,
         quantize="sq", quantize_threshold=0, quantize_clip=0.01,
@@ -412,10 +410,11 @@ def test_near_vector_quantize_clip_route(spark, tmp_path):
     assert out.count() == 5
     # the clipped training actually happened: a cache entry with q=0.01
     # exists and its hi is far below the 300.0 outlier
-    # cache key is (..., q, sample_cap) since r10
-    clipped = [v for k, v in _sq_bounds_cache.items() if k[-2] == 0.01]
-    assert clipped and clipped[0][1] < 10.0, _sq_bounds_cache
-    _sq_bounds_cache.clear()
+    # entry variant is (vector_col, q, sample_cap)
+    bounds = registry.View("sq_bounds")
+    clipped = [v for k, v in bounds.items() if k[1][-2] == 0.01]
+    assert clipped and clipped[0][1] < 10.0, dict(bounds)
+    registry.clear()
 
 
 def test_bm25_consults_class_user_dict(spark, tmp_path):

@@ -201,6 +201,7 @@ def test_userdict_query_leaves_registry_clean(spark, sf_dir):
 
 
 def test_sq_bounds_validation_and_cache_key(spark, sf_dir):
+    from weaviate_spark import registry
     from weaviate_spark.operators import quantization as qz
 
     with pytest.raises(ValueError, match="clip_quantile"):
@@ -210,14 +211,14 @@ def test_sq_bounds_validation_and_cache_key(spark, sf_dir):
         qz.sq_trained_bounds(spark, sf_dir, "embeddings",
                              clip_quantile=-0.1)
 
-    qz._sq_bounds_cache.clear()
+    registry.clear()
     b1 = qz.sq_trained_bounds(spark, sf_dir, "embeddings",
                               clip_quantile=0.01, sample_cap=50)
     b2 = qz.sq_trained_bounds(spark, sf_dir, "embeddings",
                               clip_quantile=0.01, sample_cap=200_000)
     # distinct cache entries — a different sample_cap can no longer
     # silently serve bounds trained under the other cap
-    caps = {k[-1] for k in qz._sq_bounds_cache}
+    caps = {k[1][-1] for k in registry.View("sq_bounds")}
     assert caps == {50, 200_000}
     assert all(len(b) == 2 for b in (b1, b2))
 
@@ -288,9 +289,8 @@ def test_graph_expand_probe_radius_and_hops(spark, tmp_path):
     attempt mechanics (the 1M measurement lives in BENCH_ANN_1M_r10)."""
     import math
 
-    from weaviate_spark.operators.similarity import (
-        graph_expand_topk, invalidate_nn_graphs,
-    )
+    from weaviate_spark import registry
+    from weaviate_spark.operators.similarity import graph_expand_topk
 
     rows = []
     for i in range(96):
@@ -306,7 +306,7 @@ def test_graph_expand_probe_radius_and_hops(spark, tmp_path):
     q = [math.cos(a), math.sin(a)] + [0.0] * 6
 
     def ids(probe, hops):
-        invalidate_nn_graphs()
+        registry.clear()
         return [r["vec_id"] for r in graph_expand_topk(
             spark, d, "embeddings", q, k=5, probe=probe, hops=hops,
             on_corpus=False,
@@ -744,9 +744,8 @@ def test_graph_expand_hops_zero_is_entries_only(spark, tmp_path):
     """Review finding: hops=0 was silently coerced to one hop."""
     import math
 
-    from weaviate_spark.operators.similarity import (
-        graph_expand_topk, invalidate_nn_graphs,
-    )
+    from weaviate_spark import registry
+    from weaviate_spark.operators.similarity import graph_expand_topk
 
     rows = []
     for i in range(48):
@@ -756,7 +755,7 @@ def test_graph_expand_hops_zero_is_entries_only(spark, tmp_path):
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>"
     ).write.parquet(f"{d}/embeddings.parquet")
-    invalidate_nn_graphs()
+    registry.clear()
     q = rows[5][1]
     out = graph_expand_topk(spark, d, "embeddings", q, k=3, hops=0,
                             on_corpus=True)

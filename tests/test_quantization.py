@@ -312,18 +312,18 @@ def test_incremental_vector_index_append(spark):
     from pyspark.sql import functions as F
 
     from weaviate_spark.operators.pq_codebook import CODEBOOK
+    from weaviate_spark import registry
+    from weaviate_spark.sources.tables import source_paths
     from weaviate_spark.operators.quantization import (
-        append_to_vector_indexes, bq_encode, invalidate_bq_index,
-        invalidate_sq_index, sq_pack_py, with_bq_index, with_pq_index,
-        with_sq_index,
+        append_to_vector_indexes, bq_encode, sq_pack_py, with_bq_index,
+        with_pq_index, with_sq_index,
     )
 
     rng = random.Random(11)
     mk = lambda n, off: [  # noqa: E731
         (off + i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(n)
     ]
-    invalidate_bq_index()
-    invalidate_sq_index()
+    registry.clear()
     base_rows = mk(30, 0)
     df = spark.createDataFrame(base_rows, ["vec_id", "embedding"])
     key = ("vec-incr", "emb")
@@ -334,7 +334,8 @@ def test_incremental_vector_index_append(spark):
     # batch replaces vec_id 3 and adds 30/31
     batch_rows = [(3, [1.0] * 64)] + mk(2, 30)
     batch = spark.createDataFrame(batch_rows, ["vec_id", "embedding"])
-    assert append_to_vector_indexes(batch, key) == 3
+    before = registry.stamp(source_paths(*key))
+    assert append_to_vector_indexes(batch, key, before) == 3
 
     logical = {i: v for i, v in base_rows}
     logical.update({i: v for i, v in batch_rows})
@@ -357,7 +358,6 @@ def test_incremental_vector_index_append(spark):
         (r["_id"], tuple(r["_pq"]))
         for r in with_pq_index(df, "vec_id", "embedding", CODEBOOK, key).collect()
     }
-    invalidate_bq_index()
     want_pq = {
         (r["_id"], tuple(r["_pq"]))
         for r in with_pq_index(
@@ -375,37 +375,50 @@ def test_incremental_vector_index_append(spark):
         (i, *sq_pack_py(v, -1.0, 1.0)) for i, v in logical.items()
     }
     assert got_sq == want_sq and len(got_sq) == 32
-    invalidate_bq_index()
-    invalidate_sq_index()
+    registry.clear()
 
 
-def test_vector_index_family_invalidation(spark):
-    """Per-family invalidation: dropping the BQ family must not discard
-    the PQ entry sharing the segment store (and vice versa)."""
+def test_vector_index_family_invalidation(spark, tmp_path):
+    """Invalidation is per source table: rewriting the table under the
+    BQ index rebuilds that entry on its next resolve and leaves the PQ
+    entry built from another table alone."""
     import random
 
+    from weaviate_spark import registry
     from weaviate_spark.operators.pq_codebook import CODEBOOK
     from weaviate_spark.operators.quantization import (
-        _vector_tables, invalidate_bq_index, invalidate_pq_index,
-        invalidate_rq_index, with_bq_index, with_pq_index,
+        with_bq_index, with_pq_index,
     )
 
     rng = random.Random(7)
-    df = spark.createDataFrame(
-        [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(10)],
-        ["vec_id", "embedding"],
-    )
-    invalidate_bq_index(); invalidate_pq_index(); invalidate_rq_index()
-    key = ("fam", "emb")
-    with_bq_index(df, "vec_id", "embedding", 64, key)
-    with_pq_index(df, "vec_id", "embedding", CODEBOOK, key)
-    fams = sorted(st.family for st in _vector_tables._state.values())
-    assert fams == ["bq", "pq"]
-    invalidate_bq_index()
-    fams = sorted(st.family for st in _vector_tables._state.values())
-    assert fams == ["pq"]
-    invalidate_pq_index()
-    assert not _vector_tables._state
+    sf = str(tmp_path)
+    for coll in ("emb_bq", "emb_pq"):
+        spark.createDataFrame(
+            [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(10)],
+            ["vec_id", "embedding"],
+        ).write.parquet(f"{sf}/{coll}.parquet")
+
+    def resolve():
+        with_bq_index(spark.read.parquet(f"{sf}/emb_bq.parquet"), "vec_id",
+                      "embedding", 64, (sf, "emb_bq"))
+        with_pq_index(spark.read.parquet(f"{sf}/emb_pq.parquet"), "vec_id",
+                      "embedding", CODEBOOK, (sf, "emb_pq"))
+
+    registry.clear()
+    resolve()
+    kinds = sorted(v[0] for _, v in registry.View("vector"))
+    assert kinds == ["bq", "pq"]
+    builds = dict(registry.builds)
+    spark.read.parquet(f"{sf}/emb_bq.parquet").limit(3).write.mode(
+        "overwrite").parquet(f"{sf}/emb_bq.parquet.tmp")
+    spark.read.parquet(f"{sf}/emb_bq.parquet.tmp").write.mode(
+        "overwrite").parquet(f"{sf}/emb_bq.parquet")
+    resolve()
+    rebuilt = sorted(k[2][0] for k in registry.builds
+                     if registry.builds[k] != builds.get(k, 0))
+    assert rebuilt == ["bq"]
+    registry.clear()
+    assert not registry.View("vector")
 
 
 def test_ivfpq_topk_recall_and_pruning(spark, sf_dir):
@@ -481,8 +494,9 @@ def test_bq_artifact_staleness_by_fingerprint(spark, tmp_path):
     import os
     import time
 
+    from weaviate_spark import registry
     from weaviate_spark.operators.quantization import (
-        build_bq_artifact, bq_topk, invalidate_bq_index,
+        build_bq_artifact, bq_topk,
     )
 
     sf = str(tmp_path)
@@ -499,7 +513,7 @@ def test_bq_artifact_staleness_by_fingerprint(spark, tmp_path):
         [(7, [0.0, 1.0]), (8, [0.1, 0.9]), (9, [1.0, 1.0])],
         "vec_id long, embedding array<float>",
     ).coalesce(1).write.mode("overwrite").parquet(p)
-    invalidate_bq_index()
+    registry.clear()
     root2 = build_bq_artifact(spark, sf, "vecs", dim=2)
     assert root2 != root1
     got = {r["vec_id"] for r in bq_topk(
@@ -583,8 +597,9 @@ def test_sq_artifact_written_and_served(spark, tmp_path):
     import os
     import time
 
+    from weaviate_spark import registry
     from weaviate_spark.operators.quantization import (
-        build_sq_artifact, invalidate_sq_index, sq_topk, with_sq_index,
+        build_sq_artifact, sq_topk, with_sq_index,
     )
     from weaviate_spark.sources.tables import load_table
 
@@ -607,7 +622,7 @@ def test_sq_artifact_written_and_served(spark, tmp_path):
         [(7, [0.0, 1.0]), (8, [0.1, 0.9]), (9, [1.0, 1.0])],
         "vec_id long, embedding array<float>",
     ).coalesce(1).write.mode("overwrite").parquet(p)
-    invalidate_sq_index()
+    registry.clear()
     root2 = build_sq_artifact(spark, sf, "vecs", dim=2)
     assert root2 != root1
     got = {r["vec_id"] for r in sq_topk(

@@ -188,3 +188,38 @@ def test_grouped_bucketed_rank_matches_naive(spark, buckets):
     assert _rows(got.select("id", "g", "ra", "n")) == _rows(
         want.select("id", "g", "ra", "n")
     )
+
+
+@pytest.mark.parametrize("buckets", [1, 4])
+def test_grouped_helpers_keep_null_groups(spark, buckets):
+    """A NULL group is a group of its own under Window.partitionBy: both
+    grouped helpers must keep its rows and rank/sum them within it."""
+    from weaviate_spark.operators.running import (
+        grouped_bucketed_rank, grouped_unit_prefix_sum,
+    )
+
+    data = [(i, None if i % 3 == 0 else ["a", "b"][i % 2],
+             ((i * 7) % 10) / 10.0, i % 4) for i in range(30)]
+    df = spark.createDataFrame(data, "id long, g string, h double, tok long")
+
+    def rows(out, cols):
+        return sorted((tuple(r) for r in out.select(*cols).collect()),
+                      key=lambda t: tuple((x is None, x) for x in t))
+
+    w = Window.partitionBy("g").orderBy(F.col("h").asc(), F.col("id").asc())
+    got = grouped_unit_prefix_sum(
+        df, ["g"], F.col("h"), [F.col("id").asc()], F.col("tok"),
+        "before", buckets=buckets,
+    )
+    want = df.withColumn("before", F.coalesce(F.sum("tok").over(
+        w.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)))
+    assert rows(got, ["id", "g", "before"]) == rows(want, ["id", "g", "before"])
+
+    got = grouped_bucketed_rank(
+        df, ["g"], F.col("h"), [F.col("id").asc()], "ra", "n",
+        buckets=buckets,
+    )
+    want = df.withColumn("ra", F.row_number().over(w)).withColumn(
+        "n", F.count(F.lit(1)).over(Window.partitionBy("g")))
+    assert rows(got, ["id", "g", "ra", "n"]) == rows(want, ["id", "g", "ra", "n"])
+    assert got.count() == len(data)

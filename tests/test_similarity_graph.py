@@ -46,15 +46,14 @@ def _true_knn(rows, k):
 def test_nn_descent_refines_toward_true_graph(spark, ring_dir):
     """One NN-descent round recovers a strictly better graph than the
     LSH-bucket seed alone, and a healthy fraction of true edges."""
-    from weaviate_spark.operators.similarity import (
-        invalidate_nn_graphs, nn_descent_graph,
-    )
+    from weaviate_spark import registry
+    from weaviate_spark.operators.similarity import nn_descent_graph
 
     rows = _ring_vectors(64)
     truth = _true_knn(rows, 3)
 
     def accuracy(rounds):
-        invalidate_nn_graphs()
+        registry.clear()
         g = nn_descent_graph(spark, ring_dir, "embeddings", k=3,
                              rounds=rounds).collect()
         got = {}
@@ -66,15 +65,14 @@ def test_nn_descent_refines_toward_true_graph(spark, ring_dir):
     a0, a1 = accuracy(0), accuracy(1)
     assert a1 >= a0
     assert a1 > 0.5
-    invalidate_nn_graphs()
+    registry.clear()
 
 
 def test_graph_rank_and_determinism(spark, ring_dir):
-    from weaviate_spark.operators.similarity import (
-        invalidate_nn_graphs, nn_descent_graph,
-    )
+    from weaviate_spark import registry
+    from weaviate_spark.operators.similarity import nn_descent_graph
 
-    invalidate_nn_graphs()
+    registry.clear()
     g = nn_descent_graph(spark, ring_dir, "embeddings", k=3, rounds=1)
     rows = g.collect()
     per = {}
@@ -87,7 +85,7 @@ def test_graph_rank_and_determinism(spark, ring_dir):
         # ranks follow (distance, id) order
         assert lst == sorted(lst, key=lambda x: (x[2], x[1]))
         assert all(n != node for _, n, _ in lst)
-    invalidate_nn_graphs()
+    registry.clear()
 
 
 def test_graph_expand_recovers_cross_bucket_recall(spark, ring_dir):
@@ -95,30 +93,30 @@ def test_graph_expand_recovers_cross_bucket_recall(spark, ring_dir):
     across a boundary; one hop through the graph recovers them —
     expanded recall@k must be >= the unexpanded probe's recall and
     close to exact."""
-    from weaviate_spark.operators.similarity import (
-        graph_expand_topk, invalidate_nn_graphs,
-    )
+    from weaviate_spark import registry
+    from weaviate_spark.operators.similarity import graph_expand_topk
 
     rows = _ring_vectors(64)
     q = rows[7][1]  # on-corpus query: exact top-k = ids around 7
     truth = set(_true_knn(rows, 5)[7]) | {7}
 
-    invalidate_nn_graphs()
+    registry.clear()
     out = graph_expand_topk(spark, ring_dir, "embeddings", q, k=6,
                             seed_m=6, graph_k=3, rounds=1, on_corpus=True)
     got = {r["vec_id"] for r in out.collect()}
     assert len(got & truth) >= 4  # near-exact on the ring
-    invalidate_nn_graphs()
+    registry.clear()
 
 
 def test_hubness_histogram_counts_all_nodes(spark, ring_dir):
     """Histogram covers every indexed node (orphans at in-degree 0) and
     total in-links equal the edge count."""
+    from weaviate_spark import registry
     from weaviate_spark.operators.similarity import (
-        invalidate_nn_graphs, knn_graph_hubness, nn_descent_graph,
+        knn_graph_hubness, nn_descent_graph,
     )
 
-    invalidate_nn_graphs()
+    registry.clear()
     hist = {r["in_degree"]: r["n_nodes"]
             for r in knn_graph_hubness(spark, ring_dir, "embeddings",
                                        k=3, rounds=1).collect()}
@@ -126,4 +124,4 @@ def test_hubness_histogram_counts_all_nodes(spark, ring_dir):
     edges = nn_descent_graph(spark, ring_dir, "embeddings", k=3,
                              rounds=1).count()
     assert sum(d * n for d, n in hist.items()) == edges
-    invalidate_nn_graphs()
+    registry.clear()

@@ -71,8 +71,9 @@ def test_stream_ingest_maintains_dedup_index(spark, tmp_path):
     PERSISTED shingle/signature tables already contain the new docs and
     a minhash query finds the cross-batch near-dup pair — equal to a
     from-scratch rebuild."""
+    from weaviate_spark import registry
     from weaviate_spark.operators.dedup import (
-        invalidate_dedup_index, minhash_lsh_pairs, with_shingle_table,
+        minhash_lsh_pairs, with_shingle_table,
     )
     from weaviate_spark.streaming.ingest import stream_ingest_with_dedup_index
 
@@ -80,7 +81,7 @@ def test_stream_ingest_maintains_dedup_index(spark, tmp_path):
     schema = "doc_id long, text string"
     src, tgt = str(tmp_path / "src"), str(tmp_path / "tgt")
     key = ("stream-dedup", "docs")
-    invalidate_dedup_index()
+    registry.clear()
 
     # standing corpus: doc 1 (indexed at rest)
     corpus0 = spark.createDataFrame([(1, base)], schema)
@@ -106,7 +107,7 @@ def test_stream_ingest_maintains_dedup_index(spark, tmp_path):
             grown, "doc_id", "text", jaccard_threshold=0.5, table_key=key
         ).collect()
     )
-    invalidate_dedup_index()
+    registry.clear()
     want = sorted(
         (p["id_a"], p["id_b"])
         for p in minhash_lsh_pairs(
@@ -115,7 +116,7 @@ def test_stream_ingest_maintains_dedup_index(spark, tmp_path):
         ).collect()
     )
     assert got == want == [(1, 2)]
-    invalidate_dedup_index()
+    registry.clear()
 
 
 def test_stream_ingest_upsert_sink_replaces_by_id(spark, tmp_path):
@@ -123,8 +124,9 @@ def test_stream_ingest_upsert_sink_replaces_by_id(spark, tmp_path):
     (crud MERGE per batch) and the maintained index matches a rebuild
     over the upserted table — table and index stay consistent for
     update streams."""
+    from weaviate_spark import registry
     from weaviate_spark.operators.dedup import (
-        invalidate_dedup_index, minhash_lsh_pairs, with_shingle_table,
+        minhash_lsh_pairs, with_shingle_table,
     )
     from weaviate_spark.streaming.ingest import stream_ingest_with_dedup_index
 
@@ -132,7 +134,7 @@ def test_stream_ingest_upsert_sink_replaces_by_id(spark, tmp_path):
     schema = "doc_id long, text string"
     src, tgt = str(tmp_path / "src"), str(tmp_path / "tgt")
     key = ("stream-upsert", "docs")
-    invalidate_dedup_index()
+    registry.clear()
 
     # standing corpus: doc 1 + doc 2 (doc 2 unrelated), indexed at rest
     spark.createDataFrame(
@@ -162,7 +164,7 @@ def test_stream_ingest_upsert_sink_replaces_by_id(spark, tmp_path):
             table, "doc_id", "text", jaccard_threshold=0.5, table_key=key
         ).collect()
     )
-    invalidate_dedup_index()
+    registry.clear()
     want = sorted(
         (p["id_a"], p["id_b"])
         for p in minhash_lsh_pairs(
@@ -171,7 +173,7 @@ def test_stream_ingest_upsert_sink_replaces_by_id(spark, tmp_path):
         ).collect()
     )
     assert got == want == [(1, 2)]
-    invalidate_dedup_index()
+    registry.clear()
 
 
 def test_stream_ingest_maintains_bm25_and_dedup(spark, tmp_path):
@@ -184,11 +186,10 @@ def test_stream_ingest_maintains_bm25_and_dedup(spark, tmp_path):
     import re
 
     from weaviate_spark.operators import bm25 as bm25_mod
-    from weaviate_spark.operators.bm25 import (
-        BM25Prop, BM25Spec, bm25_search, invalidate_stats,
-    )
+    from weaviate_spark import registry
+    from weaviate_spark.operators.bm25 import BM25Prop, BM25Spec, bm25_search
     from weaviate_spark.operators.dedup import (
-        invalidate_dedup_index, minhash_lsh_pairs, with_shingle_table,
+        minhash_lsh_pairs, with_shingle_table,
     )
     from weaviate_spark.streaming.ingest import (
         stream_ingest_with_index_maintenance,
@@ -200,8 +201,7 @@ def test_stream_ingest_maintains_bm25_and_dedup(spark, tmp_path):
     os.makedirs(sf)
     src, tgt = str(tmp_path / "src"), f"{sf}/docs.parquet"
     key = ("stream-bm25", "docs")
-    invalidate_stats()
-    invalidate_dedup_index()
+    registry.clear()
 
     spark.createDataFrame([(1, base)], schema).write.parquet(tgt)
     spec = BM25Spec(
@@ -255,8 +255,7 @@ def test_stream_ingest_maintains_bm25_and_dedup(spark, tmp_path):
         ).collect()
     )
     assert pairs == [(1, 2)]
-    invalidate_stats()
-    invalidate_dedup_index()
+    registry.clear()
 
 
 def test_stream_ingest_maintains_vector_index(spark, tmp_path):
@@ -266,9 +265,8 @@ def test_stream_ingest_maintains_vector_index(spark, tmp_path):
     vector first — equal to the no-index recompute."""
     import random
 
-    from weaviate_spark.operators.quantization import (
-        bq_topk, invalidate_bq_index, with_bq_index,
-    )
+    from weaviate_spark import registry
+    from weaviate_spark.operators.quantization import bq_topk, with_bq_index
     from weaviate_spark.streaming.ingest import (
         stream_ingest_with_index_maintenance,
     )
@@ -280,7 +278,7 @@ def test_stream_ingest_maintains_vector_index(spark, tmp_path):
     sf = str(tmp_path / "sf")
     src, tgt = str(tmp_path / "src"), f"{sf}/vecs.parquet"
     key = (sf, "vecs")
-    invalidate_bq_index()
+    registry.clear()
 
     base = [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(20)]
     spark.createDataFrame(base, schema).write.parquet(tgt)
@@ -300,11 +298,63 @@ def test_stream_ingest_maintains_vector_index(spark, tmp_path):
 
     got = [(r["vec_id"], r["_distance"])
            for r in bq_topk(spark, sf, "vecs", q, k=5, table_key=key).collect()]
-    invalidate_bq_index()
+    registry.clear()
     want = [(r["vec_id"], r["_distance"])
             for r in bq_topk(spark, sf, "vecs", q, k=5).collect()]
     assert got == want and got[0][0] == 100
-    invalidate_bq_index()
+    registry.clear()
+
+
+def test_upsert_sink_carries_its_maintained_index(spark, tmp_path):
+    """upsert=True with vector_index_key on the target table itself:
+    the sink's own crud write does not rebuild the BQ index it
+    maintains (the appends re-stamp it, O(batch)), and the maintained
+    index serves the upserted vectors exactly like a fresh build."""
+    import random
+
+    from weaviate_spark import registry
+    from weaviate_spark.operators.quantization import bq_topk, with_bq_index
+    from weaviate_spark.streaming.ingest import (
+        stream_ingest_with_index_maintenance,
+    )
+
+    rng = random.Random(9)
+    dim = 64
+    q = [rng.uniform(-1, 1) for _ in range(dim)]
+    schema = "vec_id long, embedding array<float>"
+    sf = str(tmp_path / "sf")
+    src, tgt = str(tmp_path / "src"), f"{sf}/vecs.parquet"
+    key = (sf, "vecs")
+    registry.clear()
+
+    base = [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(20)]
+    spark.createDataFrame(base, schema).write.parquet(tgt)
+    with_bq_index(spark.read.parquet(tgt), "vec_id", "embedding", dim, key)
+    entry = ("vector", (registry.table_path(sf, "vecs"),), ("bq", dim))
+    built = registry.builds[entry]
+    assert built >= 1
+
+    # id 3 is REPLACED by a near-copy of the query; id 100 is new
+    spark.createDataFrame(
+        [(3, [x + 0.01 for x in q]),
+         (100, [rng.uniform(-1, 1) for _ in range(dim)])],
+        schema,
+    ).write.parquet(src)
+    stream = stream_ingest_with_index_maintenance(
+        spark, src, schema, tgt, "vec_id", vector_index_key=key,
+        checkpoint_dir=str(tmp_path / "ckpt"), upsert=True,
+    )
+    assert stream.awaitTermination(120)  # False = still running: timed out
+
+    got = [(r["vec_id"], r["_distance"])
+           for r in bq_topk(spark, sf, "vecs", q, k=5, table_key=key).collect()]
+    assert registry.builds[entry] == built  # carried, not rebuilt
+    registry.clear()
+    want = [(r["vec_id"], r["_distance"])
+            for r in bq_topk(spark, sf, "vecs", q, k=5, table_key=key).collect()]
+    assert got == want and got[0][0] == 3
+    assert spark.read.parquet(tgt).count() == 21
+    registry.clear()
 
 
 def test_stream_stream_left_outer_emits_unattributed(spark, sf_dir, tmp_path):

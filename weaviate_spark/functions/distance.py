@@ -108,7 +108,3 @@ def distance(a: Column, b: Column, metric: str = "cosine") -> Column:
 def certainty_to_distance(c: float) -> float:
     """cosine-only (distance.go:14-29): dist = (1 - certainty) * 2."""
     return (1.0 - c) * 2.0
-
-
-def distance_to_certainty(d: Column) -> Column:
-    return F.lit(1.0) - d / 2

@@ -1,14 +1,14 @@
-"""Generic LSM-shaped incremental store for session index tables.
+"""LSM-shaped incremental maintenance for single-frame session indexes.
 
 The reference indexes writes asynchronously: a batch lands in the object
 store and an index queue applies it to the vector index in the
 background (adapters/repos/db/vector_index_queue.go), so searches never
 pay a full-corpus re-encode after ingest. The Spark analogue for the
-session-persisted encoded tables (BQ/PQ/RQ codes — which also back the
-IVF cell assignment): each append lands as a small immutable SEGMENT
-(one localCheckpoint'ed encoded frame per micro-batch, O(batch) work)
-and queries read a compacted generation. Compaction (last-write-wins by
-id) runs lazily at the next resolve, or inside append once
+session-persisted encoded tables (BQ/SQ/PQ/RQ codes — which also back
+the IVF cell assignment): each append lands as a small immutable
+SEGMENT (one localCheckpoint'ed encoded frame per micro-batch, O(batch)
+work) and queries read a compacted generation. Compaction (last-write-
+wins by id) runs lazily at the next resolve, or inside append once
 ``_MAX_SEGMENTS`` pile up — the only O(corpus) step, amortized exactly
 like LSM compaction.
 
@@ -18,151 +18,108 @@ root in the dead stream), and replaced generations are reclaimed by
 Spark's ContextCleaner when the last reference drops — no explicit
 unpersist can race a query holding last generation's frame.
 
-Locking is PER ENTRY: a long build/compaction of one index never blocks
-queries on a different corpus or variant — the global lock guards only
-the registry dict (microseconds), the per-entry lock guards that
-entry's eager Spark jobs.
-
-The near-dup index keeps its own multi-table variant of this pattern
-(operators/dedup.py) because its three tables must swap as one atomic
-generation; this store handles the single-frame indexes.
+Each index is one derived-state registry entry (weaviate_spark/
+registry.py), which owns its key, stamp and lock; this module holds the
+append and compaction logic. The near-dup index keeps its own
+multi-table variant of this pattern (operators/dedup.py) because its
+three tables must swap as one atomic generation.
 """
 
 from __future__ import annotations
 
-import threading
 from functools import reduce
-from typing import Callable, Optional
+from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from weaviate_spark import registry
+from weaviate_spark.sources.tables import source_paths
+
 _MAX_SEGMENTS = 16
+FAMILY = "vector"
 
 
 def _ckpt(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-class _Entry:
-    __slots__ = ("frame", "segments", "base", "id_col", "encode", "family", "lock")
+class _Segments:
+    """A compacted index frame, its pending append segments, and the
+    ``encode`` closure (the exact build pipeline over a batch) so
+    appends re-encode only the batch — the caller of ``append`` never
+    needs to know which variants (quantizers, dims, normalizations)
+    were built under a corpus key."""
 
-    def __init__(self, base: tuple, id_col: str, encode, family: str):
-        self.frame: Optional[DataFrame] = None
+    __slots__ = ("frame", "segments", "id_col", "encode")
+
+    def __init__(self, frame: DataFrame, id_col: str, encode):
+        self.frame = frame
         self.segments: list[DataFrame] = []
-        self.base = tuple(base)
         self.id_col = id_col
         self.encode = encode
-        self.family = family
-        self.lock = threading.RLock()
 
 
-class SegmentStore:
-    """Session store of compacted index frames + pending append
-    segments. Each entry remembers its ``encode`` closure (the exact
-    build pipeline over a batch) so appends re-encode only the batch —
-    the caller of ``append`` never needs to know which variants
-    (quantizers, dims, normalizations) were built under a corpus key."""
+def resolve(
+    spark,
+    table_key: tuple,
+    variant: tuple,
+    id_col: str,
+    build: Callable[[], DataFrame],
+    encode: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The compacted frame of index (table_key, variant), built on first
+    use and merging any pending segments first. ``encode`` maps a batch
+    DataFrame to rows in the frame's schema."""
+    def _current(st: _Segments) -> DataFrame:
+        if st.segments:
+            _compact(st)
+        return st.frame
 
-    def __init__(self, name: str):
-        self.name = name
-        self._registry_lock = threading.RLock()
-        self._state: dict[tuple, _Entry] = {}
+    return registry.resolve(
+        spark, FAMILY, source_paths(*table_key[:2]),
+        (*table_key[2:], *variant),
+        lambda: _Segments(_ckpt(build()), id_col, encode), use=_current,
+    )
 
-    def resolve(
-        self,
-        key: tuple,
-        base: tuple,
-        id_col: str,
-        build: Callable[[], DataFrame],
-        encode: Callable[[DataFrame], DataFrame],
-        family: str = "",
-    ) -> DataFrame:
-        """Return the compacted frame for ``key``, building it on first
-        use and merging any pending segments first. ``base`` is the
-        prefix appends match on (session + corpus key); ``encode`` maps
-        a batch DataFrame to rows in the frame's schema. The eager Spark
-        work runs under the ENTRY's lock only."""
-        with self._registry_lock:
-            st = self._state.get(key)
-            if st is None:
-                st = _Entry(base, id_col, encode, family)
-                self._state[key] = st
-        with st.lock:
-            if st.frame is None:
-                st.frame = _ckpt(build())
-            elif st.segments:
-                self._compact(st)
-            return st.frame
 
-    def append(self, base_prefix: tuple, batch_df: DataFrame) -> int:
-        """Record ``batch_df`` as a pending segment for every index
-        whose base starts with ``base_prefix``; O(batch) per index (one
-        encode pass into a checkpointed segment). Returns the number of
-        indexes appended to — 0 means nothing was ever built under the
-        prefix (the next query builds from the full table anyway)."""
-        prefix = tuple(base_prefix)
-        with self._registry_lock:
-            targets = [
-                st for st in self._state.values()
-                if st.base[: len(prefix)] == prefix
-            ]
-        n = 0
-        for st in targets:
-            with st.lock:
-                if st.frame is None and not st.segments:
-                    continue  # invalidated since the snapshot
-                st.segments.append(_ckpt(st.encode(batch_df)))
-                if len(st.segments) >= _MAX_SEGMENTS:
-                    self._compact(st)
-                n += 1
-        return n
+def append(table_key: tuple, batch_df: DataFrame, before: tuple) -> int:
+    """Record ``batch_df`` as a pending segment for every index built
+    under ``table_key`` (a key prefix); O(batch) per
+    index (one encode pass into a checkpointed segment). ``before`` is
+    the registry stamp taken before the batch was written. Returns the
+    number of indexes appended to — 0 means nothing was built under the
+    key (the next query builds from the full table anyway)."""
+    def _add(st: _Segments, _variant: tuple) -> None:
+        st.segments.append(_ckpt(st.encode(batch_df)))
+        if len(st.segments) >= _MAX_SEGMENTS:
+            _compact(st)
 
-    def _compact(self, st: _Entry) -> None:
-        """Merge pending segments into a new generation (caller holds
-        the entry lock): last-write-wins per id across segments (a
-        re-arrived id is a replacement — the reference's object-upsert
-        semantics), then replaced/new ids evict their old-generation
-        rows via a broadcast anti-join."""
-        idc = st.id_col
-        tagged = [
-            s.withColumn("_seq", F.lit(i)) for i, s in enumerate(st.segments)
-        ]
-        allr = reduce(lambda a, b: a.unionByName(b), tagged)
-        w = Window.partitionBy(idc).orderBy(F.col("_seq").desc())
-        latest = (
-            allr.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_seq", "_rn")
-        )
-        ids = latest.select(idc)
-        st.frame = _ckpt(
-            st.frame.join(F.broadcast(ids), idc, "left_anti").unionByName(latest)
-        )
-        st.segments = []
+    return registry.advance(
+        batch_df.sparkSession, FAMILY, source_paths(*table_key[:2]),
+        tuple(table_key[2:]), _add, before,
+    )
 
-    def invalidate(self, family: Optional[str] = None) -> None:
-        """Drop entries — all of them, or only one index family's (so
-        invalidating a cheap BQ table does not also discard an expensive
-        PQ/RQ encode of an unrelated collection)."""
-        with self._registry_lock:
-            if family is None:
-                victims = list(self._state.items())
-                self._state.clear()
-            else:
-                victims = [
-                    (k, st) for k, st in self._state.items()
-                    if st.family == family
-                ]
-                for k, _ in victims:
-                    del self._state[k]
-        for _, st in victims:
-            with st.lock:
-                for frame in [st.frame, *st.segments]:
-                    if frame is None:
-                        continue
-                    try:
-                        frame.unpersist()
-                    except Exception:
-                        pass
-                st.frame, st.segments = None, []
+
+def _compact(st: _Segments) -> None:
+    """Merge pending segments into a new generation (caller holds the
+    entry lock): last-write-wins per id across segments (a re-arrived id
+    is a replacement — the reference's object-upsert semantics), then
+    replaced/new ids evict their old-generation rows via a broadcast
+    anti-join."""
+    idc = st.id_col
+    tagged = [
+        s.withColumn("_seq", F.lit(i)) for i, s in enumerate(st.segments)
+    ]
+    allr = reduce(lambda a, b: a.unionByName(b), tagged)
+    w = Window.partitionBy(idc).orderBy(F.col("_seq").desc())
+    latest = (
+        allr.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_seq", "_rn")
+    )
+    ids = latest.select(idc)
+    st.frame = _ckpt(
+        st.frame.join(F.broadcast(ids), idc, "left_anti").unionByName(latest)
+    )
+    st.segments = []

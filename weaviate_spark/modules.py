@@ -454,69 +454,3 @@ def spellcheck_dummy(query: str) -> dict:
 
 
 SPELLCHECKERS["text-spellcheck-dummy"] = spellcheck_dummy
-
-
-def ref2vec_centroid(
-    parents: DataFrame,
-    parent_id: str,
-    refs_col: str,
-    targets: DataFrame,
-    target_id: str,
-    vector_col: str,
-) -> DataFrame:
-    """ref2vec-centroid (modules/ref2vec-centroid, calculation method
-    "mean"): a parent object's vector = element-wise MEAN of its
-    referenced objects' vectors. Returns (parent_id, _vector).
-
-    Plan: explode the ref set -> equi-join target vectors -> posexplode
-    -> per-(parent, position) avg -> reassemble ordered by position.
-    Two shuffles (ref join + the (parent, pos) agg), both map-side
-    combined; no vector ever moves whole through the agg — positions
-    distribute, so even high-fan-in parents (one parent referencing
-    millions of objects) never funnel raw vectors through one reducer.
-    """
-    ex = parents.select(F.col(parent_id), F.explode(refs_col).alias("_ref"))
-    joined = ex.join(
-        targets.select(
-            F.col(target_id).alias("_ref"), F.col(vector_col).alias("_v")
-        ),
-        "_ref",
-    )
-    long = joined.select(parent_id, F.posexplode("_v").alias("_pos", "_x"))
-    agg = long.groupBy(parent_id, "_pos").agg(
-        F.avg(F.col("_x").cast("double")).alias("_c")
-    )
-    return (
-        agg.groupBy(parent_id)
-        .agg(F.array_sort(F.collect_list(F.struct("_pos", "_c"))).alias("_a"))
-        .select(parent_id, F.transform("_a", lambda s: s["_c"]).alias("_vector"))
-    )
-
-
-def generate_grouped(
-    hits: DataFrame,
-    order_col: str,
-    text_col: str,
-    prompt_template: str,
-    sep: str = " | ",
-) -> DataFrame:
-    """Grouped generative task (search_get.proto GenerativeSearch grouped
-    result; generative.go groupedResult): ONE prompt filled with ALL
-    results' text joined in rank order — versus the per-result
-    singleResult path (generative_dummy). Returns one row (task_result).
-
-    `hits` is an already-capped result set (<= limit rows), so the
-    collect_list aggregate is driver-scale by construction; the template
-    fill is a pure JVM concat (no UDF)."""
-    one = hits.agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(F.col(order_col).alias("_r"), F.col(text_col).alias("_t"))
-            )
-        ).alias("_a")
-    )
-    joined = F.array_join(F.transform(F.col("_a"), lambda s: s["_t"]), sep)
-    before, _, after = prompt_template.partition("{text}")
-    return one.select(
-        F.concat(F.lit(before), joined, F.lit(after)).alias("task_result")
-    )

@@ -70,7 +70,8 @@ from weaviate_spark.functions.text import (
     tokenize_for_class,
     tokenize_py,
 )
-from weaviate_spark.sources.tables import load_table
+from weaviate_spark import registry
+from weaviate_spark.sources.tables import load_table, source_paths
 
 K1_DEFAULT = 1.2
 B_DEFAULT = 0.75
@@ -266,10 +267,11 @@ def load_stats(
 # partitioned by a 64-way term hash bucket so a query's term lookup
 # partition-prunes; doclen partitioned by prop), built once at first use
 # per (source fingerprint, property set) and SURVIVING the session —
-# exactly like the reference's LSM inverted segments. The in-memory dict
-# only memoizes the per-session DataFrame handles. A write path must
-# call invalidate_stats() (the reference refreshes its tracker on
-# ingest), which drops both the handles and the written artifact.
+# exactly like the reference's LSM inverted segments. The session
+# handles are a registry entry stamped with the source fingerprint: a
+# write to the table, through crud or out of band, makes the next query
+# reload them (an appended stream's advanced artifact) or rebuild them.
+# Written artifacts of a superseded fingerprint are GC'd at build time.
 BM25_ARTIFACT_ROOT = "/root/repo/.artifacts/bm25"
 TERM_BUCKETS = 64
 # bump on any stored-table schema change: the version feeds the artifact
@@ -281,8 +283,6 @@ ARTIFACT_FORMAT = 2
 # disable to exercise the pure file-backed partition-pruned scans
 CACHE_INDEX_TABLES = True
 
-_stats_tables: dict[tuple, tuple[DataFrame, DataFrame, DataFrame, DataFrame]] = {}
-_stats_memo: dict[tuple, "CorpusStats"] = {}
 # serializes artifact-DIRECTORY mutations (build / advance / compact)
 # within the session: the advance's rename must not race a concurrent
 # build's mkdir for the same collection, and vice versa. Cross-process
@@ -291,39 +291,6 @@ _stats_memo: dict[tuple, "CorpusStats"] = {}
 import threading  # noqa: E402
 
 _artifact_lock = threading.RLock()
-
-
-def invalidate_stats() -> None:
-    """Drop the session handles/memos. The WRITTEN artifacts stay:
-    their path embeds a source mtime+size fingerprint, so a rewritten
-    table naturally resolves to a NEW artifact dir and stale ones are
-    never served (deleting the whole root here would also destroy the
-    committed artifacts of every UNCHANGED collection — a single write
-    to one tmp table must not force a corpus-wide re-tokenize).
-    Superseded hash dirs are garbage-collected at build time."""
-    for frames in _stats_tables.values():
-        for frame in frames:
-            try:
-                frame.unpersist()
-            except Exception:
-                pass
-    _stats_tables.clear()
-    _stats_memo.clear()
-
-
-def _source_fingerprint(sf_dir: str, collection: str) -> str | None:
-    """mtime+size fingerprint of the source parquet — stale written
-    stats are rebuilt when the source changes out-of-band."""
-    import os
-
-    path = f"{sf_dir}/{collection}.parquet"
-    if not os.path.exists(path):
-        return None
-    if os.path.isdir(path):
-        stats = [os.stat(os.path.join(path, f)) for f in sorted(os.listdir(path))]
-    else:
-        stats = [os.stat(path)]
-    return str(sum(s.st_mtime_ns + s.st_size for s in stats))
 
 
 def _load_or_build_index_tables(
@@ -339,7 +306,7 @@ def _load_or_build_index_tables(
 
     sf_dir, collection = table_key
     props_key = tuple(sorted((p.name, p.tokenization) for p in spec.properties))
-    fp = _source_fingerprint(sf_dir, collection)
+    fp = registry.source_fingerprint(registry.table_path(sf_dir, collection))
     spark = corpus.sparkSession
     if fp is None:
         # synthetic / in-memory corpus: session-scoped build, no artifact
@@ -433,7 +400,7 @@ def compact_bm25_artifacts(
     import re
     import shutil
 
-    fp = _source_fingerprint(sf_dir, collection)
+    fp = registry.source_fingerprint(registry.table_path(sf_dir, collection))
     if fp is None:
         return 0
     tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir.strip("/"))
@@ -489,37 +456,20 @@ def _compact_under(spark, sf_dir: str, collection: str, fp_root: str) -> int:
         dl.repartition("prop").write.partitionBy("prop").parquet(f"{staging}/doclen")
         shutil.copy(f"{root}/props.json", f"{staging}/props.json")
         open(f"{staging}/_ALL_TABLES_COMMITTED", "w").close()
-        # drop cached handles BEFORE the swap so no query resolves a
+        # release cached handles BEFORE the swap so no query resolves a
         # frame rooted in the dir being replaced; a crash between the
         # two renames leaves only dotted dirs (cleaned above) and the
         # next query rebuilds from the table — never a half-swapped
         # committed-looking artifact
-        invalidate_stats_for(sf_dir, collection)
+        registry.release(registry.table_path(sf_dir, collection), "bm25")
         backup = f"{root}.old"
         os.rename(root, backup)
         os.rename(staging, root)
         shutil.rmtree(backup)
         n += 1
     if n:
-        invalidate_stats_for(sf_dir, collection)
+        registry.release(registry.table_path(sf_dir, collection), "bm25")
     return n
-
-
-def invalidate_stats_for(sf_dir: str, collection: str) -> None:
-    """Drop the session handles/memos of ONE collection (after its
-    artifact advanced in place, the cached frames point at re-rooted
-    paths); other collections' warm handles survive."""
-    def _hit(key: tuple) -> bool:
-        return len(key) >= 3 and key[1] == sf_dir and key[2] == collection
-
-    for k in [k for k in _stats_tables if _hit(k)]:
-        for frame in _stats_tables.pop(k):
-            try:
-                frame.unpersist()
-            except Exception:
-                pass
-    for mk in [mk for mk in _stats_memo if _hit(mk[0])]:
-        _stats_memo.pop(mk)
 
 
 def advance_bm25_artifacts(
@@ -541,15 +491,17 @@ def advance_bm25_artifacts(
       mergeable sums, load_stats sums per key at read (O(batch) write,
       the per-query read stays a few rows)
     * the artifact dir is renamed from the pre-write source fingerprint
-      to the post-write one (O(1)), so the next query resolves the
-      ADVANCED artifact instead of rebuilding the corpus from scratch.
+      to the post-write one (O(1)): the artifact is re-stamped, so the
+      session handles (stale by their own stamp) reload the ADVANCED
+      artifact at the next query instead of re-tokenizing the corpus.
 
     ``fp_before`` is the source fingerprint captured BEFORE the batch
     was appended to the table (the sink captures it; by call time the
     live fingerprint already reflects the append). No-op when the
     collection has no committed artifacts. Append-only contract: a
-    re-arrived id would double-count df/doclen — update streams must
-    invalidate instead (the upsert sink path does, via crud)."""
+    re-arrived id would double-count df/doclen — update streams are not
+    advanced (the upsert sink does not call this), so the next query
+    rebuilds from the merged table."""
     import hashlib
     import json
     import os
@@ -557,7 +509,7 @@ def advance_bm25_artifacts(
 
     if fp_before is None:
         return
-    fp_after = _source_fingerprint(sf_dir, collection)
+    fp_after = registry.source_fingerprint(registry.table_path(sf_dir, collection))
     if fp_after is None or fp_after == fp_before:
         return
     tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir.strip("/"))
@@ -570,15 +522,13 @@ def advance_bm25_artifacts(
         if os.path.isdir(new_root):
             # a build for the post-append fingerprint already happened
             # (or is committed): it was built FROM the appended table,
-            # so it already covers the batch — just re-point the session
-            invalidate_stats_for(sf_dir, collection)
+            # so it already covers the batch
             return
         try:
             os.rename(old_root, new_root)
         except OSError:
             # old_root vanished (GC by a concurrent build) — the next
             # query rebuilds from the full table; nothing to advance
-            invalidate_stats_for(sf_dir, collection)
             return
         for props_h in os.listdir(new_root):
             if "." in props_h:
@@ -610,7 +560,6 @@ def advance_bm25_artifacts(
             )
             dl.write.partitionBy("prop").mode("append").parquet(f"{root}/doclen")
             open(done, "w").close()
-        invalidate_stats_for(sf_dir, collection)
 
 
 def with_materialized_stats(
@@ -631,9 +580,10 @@ def with_materialized_stats(
     # removing a class dict re-tokenizes the corpus, so cached handles
     # from the other dict state must not be served (AddCustomDict
     # rebuilds the reference's tokenizers the same way)
-    key = (session_key(corpus.sparkSession), *table_key, props_key,
-           spec.fold, user_dict_digest(spec.collection))
-    if key not in _stats_tables:
+    variant = (*table_key[2:], props_key, spec.fold,
+               user_dict_digest(spec.collection))
+
+    def _build():
         cs, tdf, post, dl = _load_or_build_index_tables(corpus, spec, table_key)
         cs, tdf = cs.cache(), tdf.cache()
         cs.count(), tdf.count()
@@ -644,16 +594,19 @@ def with_materialized_stats(
             # partition pruning of the file-backed scan, which
             # tests/test_bm25.py pins with the flag disabled
             post, dl = post.cache(), dl.cache()
-        _stats_tables[key] = (cs, tdf, post, dl)
-    cs, tdf, post, dl = _stats_tables[key]
+        return cs, tdf, post, dl, {}
+
+    cs, tdf, post, dl, memo = registry.resolve(
+        corpus.sparkSession, "bm25", source_paths(*table_key[:2]), variant,
+        _build)
     needed = {p: sorted(t) for p, t in _query_analysis(spec).items() if t}
-    memo_key = (key, tuple(sorted((p, tuple(t)) for p, t in needed.items())))
-    if memo_key not in _stats_memo:
-        # two tiny collects (one stats row per prop + one df row per query
-        # term); memoized per term set so repeated queries skip the jobs
-        _stats_memo[memo_key] = load_stats(cs, tdf, needed)
-    stats = _stats_memo[memo_key]
-    return replace(spec, stats=replace(stats, postings=post, doclen=dl))
+    terms = tuple(sorted((p, tuple(t)) for p, t in needed.items()))
+    if terms not in memo:
+        # two tiny collects (one stats row per prop + one df row per
+        # query term), outside the entry lock; memoized per term set so
+        # repeated queries skip the jobs (a race computes it twice)
+        memo[terms] = load_stats(cs, tdf, needed)
+    return replace(spec, stats=replace(memo[terms], postings=post, doclen=dl))
 
 
 def _resolve_spec(spec: BM25Spec) -> BM25Spec:

@@ -34,14 +34,15 @@ collision behavior; mirrored exactly in SQL via
 
 from __future__ import annotations
 
-import threading
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from weaviate_spark.cache import ensure_min_partitions, register_cache, session_key
+from weaviate_spark import registry
+from weaviate_spark.cache import ensure_min_partitions, register_cache
 from weaviate_spark.functions.text import tokenize
+from weaviate_spark.sources.tables import source_paths
 
 
 # ---------------------------------------------------------------------------
@@ -126,12 +127,11 @@ def minhash_signatures(
     return hashed.groupBy("_doc", "_i").agg(F.min("_h").alias("_minhash"))
 
 
-# Session-level incremental near-dup index, keyed by
-# (session, *corpus key, shingle_n) — the persisted dedup-index
-# analogue: an incremental near-dup pipeline keeps per-doc
-# shingle/signature/set tables and refreshes them on ingest, so the
-# tokenize+shingle pass is index maintenance, not query work. NOT in
-# the per-query cache registry (persists deliberately).
+# The persisted dedup-index analogue, one derived-state registry entry
+# per (corpus key, shingle_n): an incremental near-dup pipeline keeps
+# per-doc shingle/signature/set tables and refreshes them on ingest, so
+# the tokenize+shingle pass is index maintenance, not query work. NOT
+# in the per-query cache registry (persists deliberately).
 #
 # The maintenance is LSM-shaped (the reference's analogue is per-write
 # inverted/LSM segment flush + background compaction,
@@ -146,14 +146,11 @@ def minhash_signatures(
 # a defunct foreachBatch don't root in the dead stream), and replaced
 # generations are reclaimed by Spark's ContextCleaner when the last
 # reference drops — so a query still holding last generation's frames
-# never races an explicit unpersist. Locking is PER INDEX: the global
-# lock guards only the registry dict (microseconds); each index's own
-# lock serializes its builds/appends/compactions and gives resolvers a
+# never races an explicit unpersist. The registry's per-entry lock
+# serializes an index's builds/appends/compactions and gives resolvers a
 # consistent sh/sig/sets generation — a long compaction of corpus A
 # never blocks the first query on corpus B.
 _MAX_SEGMENTS = 16
-_dedup_lock = threading.RLock()
-_dedup_indexes: dict[tuple, "_DedupIndex"] = {}
 
 
 class _DedupIndex:
@@ -161,16 +158,15 @@ class _DedupIndex:
     signature variants derived from it (keyed by num_hashes — ALL
     variants are maintained through compaction, none go stale), the
     shingle-set table, and the not-yet-merged append segments. All field
-    access happens under ``lock``."""
+    access happens under the registry entry's lock."""
 
-    __slots__ = ("sh", "sig", "sets", "pending", "lock")
+    __slots__ = ("sh", "sig", "sets", "pending")
 
-    def __init__(self):
-        self.sh = None                # (_doc, _shingle), compacted
+    def __init__(self, sh: DataFrame):
+        self.sh = sh                  # (_doc, _shingle), compacted
         self.sig = {}                 # num_hashes -> wide signature table
         self.sets = None              # (_doc, _ss) or None (built on demand)
         self.pending = []             # [(ids, shingle frame), ...] arrival order
-        self.lock = threading.RLock()
 
 
 def _ckpt(df: DataFrame) -> DataFrame:
@@ -191,27 +187,9 @@ def _sig_agg(sh: DataFrame, num_hashes: int) -> DataFrame:
     )
 
 
-def invalidate_dedup_index() -> None:
-    with _dedup_lock:
-        victims = list(_dedup_indexes.values())
-        _dedup_indexes.clear()
-    for idx in victims:
-        with idx.lock:
-            frames = [idx.sh, idx.sets, *idx.sig.values()]
-            frames += [f for seg in idx.pending for f in seg]
-            for frame in frames:
-                if frame is None:
-                    continue
-                try:
-                    frame.unpersist()
-                except Exception:
-                    pass
-            idx.sh, idx.sig, idx.sets, idx.pending = None, {}, None, []
-
-
 def _compact(idx: "_DedupIndex") -> None:
     """Merge pending segments into the next generation (caller holds
-    the INDEX's lock). Last-write-wins per doc id: a doc takes its rows
+    the index entry's lock). Last-write-wins per doc id: a doc takes its rows
     from the latest segment that carries its id (matching the
     reference's object-upsert semantics — a re-arrived id is a
     replacement), ids in any segment drop their old-generation rows via
@@ -266,16 +244,8 @@ def _resolve_index(
     building, compacting, or extending (a new num_hashes variant, the
     sets table) under the index lock, so a query never mixes tables
     from two generations while a streaming append runs."""
-    key = (session_key(df.sparkSession), *table_key, n)
-    with _dedup_lock:
-        idx = _dedup_indexes.get(key)
-        if idx is None:
-            idx = _DedupIndex()
-            _dedup_indexes[key] = idx
-    with idx.lock:
-        if idx.sh is None:
-            idx.sh = _ckpt(shingle_df(df, id_col, text_col, n))
-        elif idx.pending:
+    def _current(idx: _DedupIndex):
+        if idx.pending:
             _compact(idx)
         if num_hashes is not None and num_hashes not in idx.sig:
             idx.sig[num_hashes] = _ckpt(_sig_agg(idx.sh, num_hashes))
@@ -286,6 +256,13 @@ def _resolve_index(
             idx.sig.get(num_hashes) if num_hashes is not None else None,
             idx.sets if want_sets else None,
         )
+
+    return registry.resolve(
+        df.sparkSession, "dedup", source_paths(*table_key[:2]),
+        (*table_key[2:], n),
+        lambda: _DedupIndex(_ckpt(shingle_df(df, id_col, text_col, n))),
+        use=_current,
+    )
 
 
 def with_shingle_table(
@@ -302,6 +279,8 @@ def append_to_dedup_index(
     n: int,
     table_key: tuple,
     num_hashes: int = 16,
+    *,
+    before: tuple,
 ) -> None:
     """INCREMENTAL index maintenance: record `new_docs` as an append
     segment for EVERY index built under `table_key` (all shingle_n
@@ -319,25 +298,23 @@ def append_to_dedup_index(
     corpus tables and sees the new docs anyway.
 
     `n`/`num_hashes` are accepted for call-site symmetry but existing
-    indexes dictate which variants are maintained."""
-    spark = new_docs.sparkSession
-    prefix = (session_key(spark), *table_key)
-    with _dedup_lock:
-        targets = [
-            (k[-1], idx) for k, idx in _dedup_indexes.items()
-            if k[:-1] == prefix
-        ]
-    if not targets:
-        return
-    ids = _ckpt(new_docs.select(F.col(id_col).alias("_doc")).distinct())
-    for seg_n, idx in targets:
-        seg_sh = _ckpt(shingle_df(new_docs, id_col, text_col, seg_n))
-        with idx.lock:
-            if idx.sh is None and not idx.pending:
-                continue  # invalidated since the snapshot
-            idx.pending.append((ids, seg_sh))
-            if len(idx.pending) >= _MAX_SEGMENTS:
-                _compact(idx)
+    indexes dictate which variants are maintained. ``before`` is the
+    registry stamp of the table taken before the batch was written; the
+    advanced indexes are re-stamped to the table as written."""
+    ids = None
+
+    def _append(idx: _DedupIndex, variant: tuple) -> None:
+        nonlocal ids
+        if ids is None:
+            ids = _ckpt(new_docs.select(F.col(id_col).alias("_doc")).distinct())
+        seg_sh = _ckpt(shingle_df(new_docs, id_col, text_col, variant[-1]))
+        idx.pending.append((ids, seg_sh))
+        if len(idx.pending) >= _MAX_SEGMENTS:
+            _compact(idx)
+
+    registry.advance(new_docs.sparkSession, "dedup",
+                     source_paths(*table_key[:2]), tuple(table_key[2:]),
+                     _append, before)
 
 
 def minhash_lsh_pairs(
@@ -364,8 +341,9 @@ def minhash_lsh_pairs(
     if table_key is not None:
         # persisted shingle + signature + set tables (ingest-time
         # artifacts) — survive across queries, refreshed incrementally by
-        # append_to_dedup_index, dropped by invalidate_dedup_index(). One
-        # resolver call = one generation (no torn reads vs streaming).
+        # append_to_dedup_index, rebuilt when the table is written
+        # otherwise. One resolver call = one generation (no torn reads
+        # vs streaming).
         sh, sig, sets = _resolve_index(
             df, id_col, text_col, shingle_n, table_key,
             num_hashes=num_hashes, want_sets=True,

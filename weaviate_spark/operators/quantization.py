@@ -41,10 +41,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from weaviate_spark.functions.distance import distance
-from weaviate_spark.sources.tables import load_table
+from weaviate_spark.sources.tables import load_table, source_paths
 
-from weaviate_spark.cache import lit_double_array, session_key
-from weaviate_spark.incremental import SegmentStore
+from weaviate_spark import incremental, registry
+from weaviate_spark.cache import lit_double_array
 
 BITS_PER_WORD = 32
 
@@ -89,11 +89,11 @@ def hamming_col(word_cols: Sequence[Column], query_words: Sequence[int]) -> Colu
     return acc
 
 
-# session-persisted encoded tables (ingest-time artifact). Incremental:
-# streaming appends land as O(batch) segments via append_to_vector_indexes
-# (the async vector-index-queue analogue, vector_index_queue.go) and merge
-# at the next resolve — see weaviate_spark/incremental.py.
-_vector_tables = SegmentStore("quantized-vector-indexes")
+# session-persisted encoded tables (ingest-time artifact), registry
+# family incremental.FAMILY. Incremental: streaming appends land as O(batch)
+# segments via append_to_vector_indexes (the async vector-index-queue
+# analogue, vector_index_queue.go) and merge at the next resolve — see
+# weaviate_spark/incremental.py.
 
 # Written BQ artifact (the flat index's compress-at-ingest analogue,
 # flat/index.go:60-78, persisted like the BM25 postings tables): the
@@ -141,9 +141,9 @@ def _vec_artifact_dir(
     import re
     import shutil
 
-    from weaviate_spark.operators.bm25 import _artifact_lock, _source_fingerprint
+    from weaviate_spark.operators.bm25 import _artifact_lock
 
-    fp = _source_fingerprint(sf_dir, collection)
+    fp = registry.source_fingerprint(registry.table_path(sf_dir, collection))
     if fp is None:
         return None
     tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir.strip("/"))
@@ -191,25 +191,15 @@ def _bq_code_frame(
     )
 
 
-def invalidate_bq_index() -> None:
-    # the three quantized families share one store but invalidate
-    # independently: dropping a cheap BQ table must not discard an
-    # expensive mapInPandas-built PQ/RQ encode of another collection
-    _vector_tables.invalidate(family="bq")
-
-
-def append_to_vector_indexes(batch_df: DataFrame, table_key: tuple) -> int:
-    """Record an append segment against EVERY quantized index (BQ/PQ/RQ,
-    any dim/codebook/normalization variant) built under ``table_key`` —
-    each entry re-encodes only the batch with its own stored encode
-    pipeline. Returns the number of indexes advanced (0 = none built)."""
-    from weaviate_spark.operators.vector import invalidate_corpus_stats
-
-    base = (session_key(batch_df.sparkSession), *table_key)
-    # the memoized corpus row count (quantized-routing threshold) is
-    # stale after an append; next query re-counts
-    invalidate_corpus_stats()
-    return _vector_tables.append(base, batch_df)
+def append_to_vector_indexes(batch_df: DataFrame, table_key: tuple,
+                             before: tuple) -> int:
+    """Record an append segment against EVERY quantized index (BQ/SQ/PQ/
+    RQ/IVF-PQ, any dim/codebook/normalization variant) built under
+    ``table_key`` — each entry re-encodes only the batch with its own
+    stored encode pipeline, and is re-stamped to the table as written
+    (``before``: the registry stamp taken before the batch was written).
+    Returns the number of indexes advanced (0 = none built)."""
+    return incremental.append(table_key, batch_df, before)
 
 
 def with_bq_index(
@@ -220,8 +210,6 @@ def with_bq_index(
     compresses at ingest, not per query; the session build is the
     fallback for fingerprint-less test corpora). Streaming appends
     layer on top as O(batch) segments either way."""
-    key = (session_key(df.sparkSession), *table_key, dim)
-
     def _encode(rows: DataFrame) -> DataFrame:
         return _bq_code_frame(rows, id_col, vector_col, dim)
 
@@ -234,10 +222,9 @@ def with_bq_index(
                 return df.sparkSession.read.parquet(f"{root}/codes")
         return _encode(df)
 
-    return _vector_tables.resolve(
-        key, key[: len(table_key) + 1], id_col, _build, _encode,
-        family="bq",
-    )
+    return incremental.resolve(
+        df.sparkSession, table_key, ("bq", dim), id_col, _build,
+        _encode)
 
 
 def bq_topk(
@@ -498,15 +485,6 @@ def build_sq_artifact(
     )
 
 
-def invalidate_sq_index() -> None:
-    _vector_tables.invalidate(family="sq")
-    _sq_bounds_cache.clear()
-
-
-# (session, sf_dir, collection, vector_col) -> trained (lo, hi)
-_sq_bounds_cache: dict[tuple, tuple[float, float]] = {}
-
-
 def sq_trained_bounds(
     spark: SparkSession,
     sf_dir: str,
@@ -539,17 +517,17 @@ def sq_trained_bounds(
     the artifact fingerprint stays reproducible. The reference samples
     for the same reason (its Fit never sees the full 100-TB column).
     Degenerate corpora (empty / all-null / constant) fall back to
-    [-1, 1]. Cached per (session, table, column, q, sample_cap);
-    cleared with the SQ family on writes (crud.invalidate_indexes)."""
+    [-1, 1]. A registry entry per (session, table, column, q,
+    sample_cap), stamped with the table's file fingerprint: any write
+    to the table retrains the bounds at the next call."""
     q = float(clip_quantile)
     if not 0.0 <= q < 0.5:
         raise ValueError(
             f"clip_quantile must be in [0, 0.5), got {clip_quantile!r} "
             "(q >= 0.5 would make the lower bound meet or cross the "
             "upper bound)")
-    key = (session_key(spark), sf_dir, collection, vector_col,
-           q, int(sample_cap))
-    if key not in _sq_bounds_cache:
+
+    def _train() -> tuple[float, float]:
         base = load_table(spark, sf_dir, collection)
         vals = base.where(F.col(vector_col).isNotNull())
         if clip_quantile > 0.0:
@@ -558,7 +536,6 @@ def sq_trained_bounds(
                 m = -(-n // sample_cap)  # ceil -> ~sample_cap rows kept
                 vals = vals.where(
                     F.pmod(F.xxhash64(F.col(vector_col)), F.lit(m)) == 0)
-            q = float(clip_quantile)
             row = (
                 vals.select(F.explode(F.col(vector_col)).alias("_x"))
                 .agg(F.expr(
@@ -574,8 +551,11 @@ def sq_trained_bounds(
             lo, hi = row["lo"], row["hi"]
         if lo is None or hi is None or not float(hi) > float(lo):
             lo, hi = -1.0, 1.0
-        _sq_bounds_cache[key] = (float(lo), float(hi))
-    return _sq_bounds_cache[key]
+        return float(lo), float(hi)
+
+    return registry.resolve(
+        spark, "sq_bounds", source_paths(sf_dir, collection),
+        (vector_col, q, int(sample_cap)), _train)
 
 
 def with_sq_index(
@@ -586,9 +566,6 @@ def with_sq_index(
     written ingest artifact when the source has one; session build is
     the fallback for fingerprint-less test corpora. Streaming appends
     layer on as O(batch) segments (incremental.py)."""
-    key = (session_key(df.sparkSession), *table_key, dim,
-           float(lo), float(hi), bool(normalize))
-
     def _encode(rows: DataFrame) -> DataFrame:
         return _sq_code_frame(rows, id_col, vector_col, dim, lo, hi,
                               normalize=normalize)
@@ -609,10 +586,10 @@ def with_sq_index(
                 return df.sparkSession.read.parquet(f"{root}/codes")
         return _encode(df)
 
-    return _vector_tables.resolve(
-        key, key[: len(table_key) + 1], id_col, _build, _encode,
-        family="sq",
-    )
+    return incremental.resolve(
+        df.sparkSession, table_key,
+        ("sq", dim, float(lo), float(hi), bool(normalize)), id_col, _build,
+        _encode)
 
 
 def sq_topk(
@@ -791,10 +768,6 @@ def _pq_encode_kernel(codebook, normalize: bool = True):
 
 
 
-def invalidate_pq_index() -> None:
-    _vector_tables.invalidate(family="pq")
-
-
 def with_pq_index(
     df: DataFrame, id_col: str, vector_col: str, codebook, table_key: tuple,
     normalize: bool = True,
@@ -803,7 +776,6 @@ def with_pq_index(
     (the restored-codebook ingest artifact of pq_data.go). Null vectors
     are dropped (nothing to index); ``_v`` keeps the ORIGINAL vector for
     the exact rescore."""
-    key = (session_key(df.sparkSession), *table_key, "pq", normalize)
 
     def _encode(rows: DataFrame) -> DataFrame:
         return rows.select(
@@ -813,10 +785,9 @@ def with_pq_index(
             "_id long, _v array<float>, _pq array<int>",
         )
 
-    return _vector_tables.resolve(
-        key, key[: len(table_key) + 1], "_id", lambda: _encode(df), _encode,
-        family="pq",
-    )
+    return incremental.resolve(
+        df.sparkSession, table_key, ("pq", normalize), "_id",
+        lambda: _encode(df), _encode)
 
 
 def pq_lut_py(vector: Sequence[float], codebook, round_digits: int = 6,
@@ -996,15 +967,10 @@ def _rq_encode_kernel(M, normalize: bool = True):
 
 
 
-def invalidate_rq_index() -> None:
-    _vector_tables.invalidate(family="rq")
-
-
 def with_rq_index(
     df: DataFrame, id_col: str, vector_col: str, M, table_key: tuple,
     normalize: bool = True,
 ) -> DataFrame:
-    key = (session_key(df.sparkSession), *table_key, "rq", normalize)
     rot = [list(map(float, r)) for r in M]
 
     def _encode(rows: DataFrame) -> DataFrame:
@@ -1016,10 +982,9 @@ def with_rq_index(
             "_lower double, _step double",
         )
 
-    return _vector_tables.resolve(
-        key, key[: len(table_key) + 1], "_id", lambda: _encode(df), _encode,
-        family="rq",
-    )
+    return incremental.resolve(
+        df.sparkSession, table_key, ("rq", normalize), "_id",
+        lambda: _encode(df), _encode)
 
 
 def rq_topk(
@@ -1124,10 +1089,6 @@ def _ivfpq_encode_kernel(ivf_centroids, codebook, normalize: bool = True):
     return gen
 
 
-def invalidate_ivfpq_index() -> None:
-    _vector_tables.invalidate(family="ivfpq")
-
-
 def with_ivfpq_index(
     df: DataFrame, id_col: str, vector_col: str, ivf_centroids, codebook,
     table_key: tuple, normalize: bool = True,
@@ -1135,7 +1096,6 @@ def with_ivfpq_index(
     """(_id, _v, _cell, _pq) — the session-persisted IVF-PQ table. At
     real scale this is written partitionBy(_cell) so a probe is a
     partition-pruned directory read, exactly like the tenant routing."""
-    key = (session_key(df.sparkSession), *table_key, "ivfpq", normalize)
 
     def _encode(rows: DataFrame) -> DataFrame:
         return rows.select(
@@ -1145,10 +1105,9 @@ def with_ivfpq_index(
             "_id long, _v array<float>, _cell int, _pq array<int>",
         )
 
-    return _vector_tables.resolve(
-        key, key[: len(table_key) + 1], "_id", lambda: _encode(df), _encode,
-        family="ivfpq",
-    )
+    return incremental.resolve(
+        df.sparkSession, table_key, ("ivfpq", normalize), "_id",
+        lambda: _encode(df), _encode)
 
 
 def ivfpq_topk(

@@ -105,6 +105,20 @@ def _bucket_expr(lead: Column, boundaries: list[float]) -> Column:
     return search(0, len(boundaries))
 
 
+def _join_offsets(rows: DataFrame, off: DataFrame, gcols: list[str],
+                  rb: str) -> DataFrame:
+    """Attach the per-(group, bucket) offsets to the rows, NULL-safe on
+    the group columns: a NULL group is a group of its own, as in
+    ``Window.partitionBy(group)``, where a name-list inner join would
+    drop its rows."""
+    ren = {g: f"_off_g{i}" for i, g in enumerate(gcols)}
+    o = off.select(*[F.col(c).alias(ren.get(c, "_off_rb" if c == rb else c))
+                     for c in off.columns])
+    cond = [F.col(rb) == F.col("_off_rb")] + [
+        F.col(g).eqNullSafe(F.col(ren[g])) for g in gcols]
+    return rows.join(F.broadcast(o), cond).drop(*ren.values(), "_off_rb")
+
+
 def grouped_unit_prefix_sum(
     df: DataFrame,
     group_cols: Sequence[str],
@@ -164,7 +178,7 @@ def grouped_unit_prefix_sum(
         *gcols, "_gu_rb", F.sum("_gu_bt").over(woff).alias("_gu_off")
     )
     return (
-        loc.join(F.broadcast(off), [*gcols, "_gu_rb"])
+        _join_offsets(loc, off, gcols, "_gu_rb")
         .withColumn(
             out,
             F.coalesce(F.col("_gu_loc"), F.lit(0))
@@ -241,7 +255,7 @@ def grouped_bucketed_rank(
         F.sum("_gr_bn").over(wall).alias(total_col),
     )
     return (
-        loc.join(F.broadcast(off), [*gcols, "_gr_rb"])
+        _join_offsets(loc, off, gcols, "_gr_rb")
         .withColumn(rank_col, F.col("_gr_lr") + F.col("_gr_off"))
         .drop("_gr_rb", "_gr_lr", "_gr_off")
     )

@@ -729,14 +729,8 @@ def multiprobe_topk(
 # hnsw/); the batch-engine analogue is the materialized k-NN graph —
 # the artifact 100-TB pipelines actually want (dedup clustering,
 # hubness stats, hard negatives, graph-expanded retrieval), built in
-# O(rounds) joins instead of per-insert graph surgery.
-
-# (session, params) -> localCheckpointed graph frame
-_nng_cache: dict = {}
-
-
-def invalidate_nn_graphs() -> None:
-    _nng_cache.clear()
+# O(rounds) joins instead of per-insert graph surgery. Each graph is a
+# derived-state registry entry stamped with the source table's files.
 
 
 def nn_descent_graph(
@@ -771,15 +765,23 @@ def nn_descent_graph(
     joins (N*k edges -> <= N*k^2 + 2*N*k candidate pairs, deduped
     before any distance math) + one bounded window; per-round
     localCheckpoint caps plan depth. No stage is ever corpus^2."""
+    from weaviate_spark import registry
+    from weaviate_spark.sources.tables import source_paths
+
+    return registry.resolve(
+        spark, "nng", source_paths(sf_dir, collection),
+        (k, rounds, id_col, vector_col, num_planes, seed, seed_cap),
+        lambda: _build_nn_graph(spark, sf_dir, collection, k, rounds, id_col,
+                                vector_col, num_planes, seed, seed_cap))
+
+
+def _build_nn_graph(spark, sf_dir: str, collection: str, k: int,
+                    rounds: int, id_col: str, vector_col: str,
+                    num_planes: int | None, seed: int,
+                    seed_cap: int) -> DataFrame:
     from pyspark.sql import Window
 
-    from weaviate_spark.cache import session_key
     from weaviate_spark.sources.tables import load_table
-
-    memo = (session_key(spark), sf_dir, collection, k, rounds, id_col,
-            vector_col, num_planes, seed, seed_cap)
-    if memo in _nng_cache:
-        return _nng_cache[memo]
 
     # written ingest artifact (the BQ-words pattern): the graph is an
     # index a live cluster builds when the collection lands, not per
@@ -793,9 +795,7 @@ def nn_descent_graph(
         import os
 
         if os.path.exists(f"{art}/_COMMITTED"):
-            out = spark.read.parquet(f"{art}/graph")
-            _nng_cache[memo] = out
-            return out
+            return spark.read.parquet(f"{art}/graph")
 
     base = load_table(spark, sf_dir, collection).where(
         F.col(vector_col).isNotNull())
@@ -816,9 +816,7 @@ def nn_descent_graph(
         import os
 
         if art is not None and os.path.exists(f"{art}/_COMMITTED"):
-            out = spark.read.parquet(f"{art}/graph")
-            _nng_cache[memo] = out
-            return out
+            return spark.read.parquet(f"{art}/graph")
     dim_row = base.select(F.size(vector_col).alias("d")).limit(1).collect()
     dim = int(dim_row[0]["d"]) if dim_row else 0
     idx = build_lsh_index(base, id_col, vector_col,
@@ -898,7 +896,6 @@ def nn_descent_graph(
                 out.write.mode("overwrite").parquet(f"{art}/graph")
                 open(f"{art}/_COMMITTED", "w").close()
         out = spark.read.parquet(f"{art}/graph")
-    _nng_cache[memo] = out
     return out
 
 
@@ -912,10 +909,10 @@ def _nng_artifact_dir(sf_dir: str, collection: str, k: int, rounds: int,
     import os
     import re
 
-    from weaviate_spark.operators.bm25 import _source_fingerprint
+    from weaviate_spark import registry
     from weaviate_spark.operators.quantization import VECTOR_ARTIFACT_ROOT
 
-    fp = _source_fingerprint(sf_dir, collection)
+    fp = registry.source_fingerprint(registry.table_path(sf_dir, collection))
     if fp is None:
         return None
     tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir.strip("/"))
@@ -941,13 +938,12 @@ def _lsh_bucket_artifact(
     artifact; None for fingerprint-less in-memory corpora."""
     import os
 
-    from weaviate_spark.operators.bm25 import (
-        _artifact_lock, _source_fingerprint,
-    )
+    from weaviate_spark import registry
+    from weaviate_spark.operators.bm25 import _artifact_lock
     from weaviate_spark.operators.quantization import VECTOR_ARTIFACT_ROOT
     from weaviate_spark.sources.tables import load_table
 
-    fp = _source_fingerprint(sf_dir, collection)
+    fp = registry.source_fingerprint(registry.table_path(sf_dir, collection))
     if fp is None:
         return None
     import hashlib

@@ -38,10 +38,11 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from weaviate_spark.cache import local_df, lit_double_array, session_key
+from weaviate_spark import registry
+from weaviate_spark.cache import local_df, lit_double_array
 from weaviate_spark.filters import Clause, apply_where
 from weaviate_spark.functions.distance import certainty_to_distance, distance
-from weaviate_spark.sources.tables import load_table
+from weaviate_spark.sources.tables import load_table, source_paths
 
 
 # Above this corpus size, cosine nearVector defaults to the packed-int8
@@ -94,20 +95,12 @@ class NearVectorSpec:
     quantize_clip: float | None = None
 
 
-# (session, sf_dir, collection) -> row count (table-stats stand-in;
-# at real scale this is catalog metadata, not a count job)
-_corpus_rows_cache: dict[tuple, int] = {}
-
-
-def invalidate_corpus_stats() -> None:
-    _corpus_rows_cache.clear()
-
-
 def _corpus_rows(spark: SparkSession, sf_dir: str, collection: str, df: DataFrame) -> int:
-    key = (session_key(spark), sf_dir, collection)
-    if key not in _corpus_rows_cache:
-        _corpus_rows_cache[key] = df.count()
-    return _corpus_rows_cache[key]
+    """Row count of the collection (a table-stats stand-in; at real
+    scale this is catalog metadata, not a count job), a registry entry
+    re-counted after any write to the table."""
+    return registry.resolve(spark, "rows", source_paths(sf_dir, collection),
+                            (), df.count)
 
 
 def with_distance(df: DataFrame, spec: NearVectorSpec) -> DataFrame:

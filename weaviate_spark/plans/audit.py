@@ -67,9 +67,3 @@ def executed_node_counts(df: DataFrame) -> dict[str, int]:
 
     walk(df._jdf.queryExecution().executedPlan())
     return dict(c)
-
-
-def corpus_scan_counts(df: DataFrame) -> dict[str, int]:
-    """Just the ``scan:<table>`` entries of executed_node_counts."""
-    return {k: v for k, v in executed_node_counts(df).items()
-            if k.startswith("scan:")}

@@ -357,13 +357,6 @@ def namespace_from_qualified(name: str) -> str:
     return ns if sep else ""
 
 
-def strip_qualification(name: str) -> str:
-    """Entity portion of '<ns>:<entity>' (namespace-portable short form,
-    namespacing/resolver.go StripQualification)."""
-    _, sep, entity = name.partition(NAMESPACE_SEPARATOR)
-    return entity if sep else name
-
-
 def validate_namespace_name(name: str) -> None:
     """Syntax + reserved-name check (ValidateNamespaceNameSyntax +
     controller.go:422; reference splits them across layers, the policy
@@ -598,10 +591,10 @@ class Registry:
 # property's index, drop a vector index, reject the 'none' sentinel,
 # update-after-drop). The index flags already live on Property /
 # Collection; these helpers give them the reference's MUTATION and
-# ENFORCEMENT semantics: flipping a flag invalidates the derived
-# artifacts (the analogue of the reference deleting the LSM bucket) and
-# the query paths reject unindexed access with the reference's exact
-# error text (entities/inverted/errors.go:21-44).
+# ENFORCEMENT semantics: the query paths reject unindexed access with
+# the reference's exact error text (entities/inverted/errors.go:21-44).
+# Derived artifacts depend on the table files only, so a flag flip
+# leaves them valid (the registry's file stamps decide staleness).
 
 # user-settable vector index types; 'none' is the CONTROLLED sentinel a
 # drop writes (drop_vector_index_reject_test.go: users cannot set it
@@ -843,7 +836,6 @@ def add_class_property(coll: Collection, prop: Property,
     for n in prop.nested:
         validate_nested_property_name(n.name, prop.name)
     coll.properties.append(prop)
-    _invalidate_index_artifacts()
 
 
 def validate_vector_index_type(index_type: str) -> None:
@@ -863,24 +855,20 @@ def delete_property_index(coll: Collection, prop_name: str,
                           filterable: bool = True,
                           searchable: bool = False) -> None:
     """Delete a property's inverted index (alter_schema_test.go:43-54):
-    flip the flag(s) and invalidate every artifact derived from that
-    index — subsequent filters/searches on the property are rejected
-    by the validators below until the flag is re-enabled (which, like
-    the reference, implies a reindex: the artifact rebuilds lazily on
-    first use because it is content-addressed by the flag state)."""
+    flip the flag(s) — subsequent filters/searches on the property are
+    rejected by the validators below until the flag is re-enabled."""
     prop = coll.property(prop_name)
     if filterable:
         prop.index_filterable = False
     if searchable:
         prop.index_searchable = False
-    _invalidate_index_artifacts()
 
 
 def drop_vector_index(coll: Collection, name: str | None = None) -> None:
     """Managed vector-index drop (drop_vector_index_test.go): the
     index type becomes the 'none' sentinel (observable on the schema,
-    :216), vector artifacts are invalidated, and vector searches are
-    rejected until a new index is configured. Non-vector operations
+    :216), and vector searches are rejected until a new index is
+    configured. Non-vector operations
     (CRUD, filters, BM25) and further schema updates keep working
     (update_after_drop_vector_index_test.go)."""
     if name:
@@ -889,20 +877,6 @@ def drop_vector_index(coll: Collection, name: str | None = None) -> None:
         coll.named_vector_index_types[name] = "none"
     else:
         coll.vector_index_type = "none"
-    _invalidate_index_artifacts()
-
-
-def _invalidate_index_artifacts() -> None:
-    try:
-        from weaviate_spark.operators.quantization import invalidate_sq_index
-        invalidate_sq_index()
-    except Exception:
-        pass
-    try:
-        from weaviate_spark.operators.similarity import invalidate_nn_graphs
-        invalidate_nn_graphs()
-    except Exception:
-        pass
 
 
 def validate_vector_search(coll: Collection, name: str | None = None) -> None:

@@ -208,8 +208,8 @@ def backup_restore(
         # never see a half-restored table, and through the OCC version
         # claim so a concurrent transact() writer whose snapshot predates
         # the restore conflicts instead of silently re-swapping
-        # pre-restore data over it. _rewrite also invalidates every
-        # derived index (the restored table is a new corpus).
+        # pre-restore data over it. Every derived index of the table is
+        # stale by its file stamp (the restored table is a new corpus).
         def _do(df=df, dst=dst):
             crud._rewrite(df, dst, expected_version=crud.table_version(dst))
 

@@ -27,13 +27,13 @@ session.
 
 from __future__ import annotations
 
+import hashlib
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from weaviate_spark.sources.tables import load_table
-
-from weaviate_spark.cache import session_key
+from weaviate_spark import registry
+from weaviate_spark.sources.tables import load_table, source_paths
 
 ARTIFACT_ROOT = "/root/repo/.artifacts/bucketed"
 
@@ -45,45 +45,21 @@ BUCKET_KEYS: dict[str, str] = {
 }
 N_BUCKETS = 16
 
-# (session id, sf_dir, name, key, buckets) -> catalog table name
-_built: dict[tuple, str] = {}
-# every catalog table ever registered, per session id (for invalidation)
-_registered: dict[int, set[str]] = {}
 
+class _CatalogTable(str):
+    """A registered bucketed table's name; releasing the registry entry
+    drops the catalog table (the written files stay: the next build
+    overwrites them in place)."""
 
-def invalidate_bucketed() -> None:
-    """Called on every CRUD write: forget the memo AND drop the catalog
-    tables, so the next bucketed read re-resolves against the source's
-    CURRENT fingerprint (the artifact path/table name embeds an
-    mtime+size fingerprint — a rewritten source can never be served
-    from the stale layout even across sessions)."""
-    from pyspark.sql import SparkSession
+    def release(self) -> None:
+        from pyspark.sql import SparkSession
 
-    _built.clear()
-    spark = SparkSession.getActiveSession()
-    if spark is not None:
-        for tbl in _registered.get(session_key(spark), set()):
+        spark = SparkSession.getActiveSession()
+        if spark is not None:
             try:
-                spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+                spark.sql(f"DROP TABLE IF EXISTS {self}")
             except Exception:
-                pass
-    _registered.clear()
-
-
-def _source_fingerprint(sf_dir: str, name: str) -> str:
-    import os
-
-    path = f"{sf_dir}/{name}.parquet"
-    if not os.path.exists(path):
-        return "na"
-    if os.path.isdir(path):
-        stats = [os.stat(os.path.join(path, f)) for f in sorted(os.listdir(path))]
-    else:
-        stats = [os.stat(path)]
-    import hashlib
-
-    raw = str(sum(s.st_mtime_ns + s.st_size for s in stats))
-    return hashlib.md5(raw.encode()).hexdigest()[:10]
+                pass  # catalog unavailable: the next build overwrites it
 
 
 def bucketed_table(
@@ -100,28 +76,31 @@ def bucketed_table(
     from pyspark.sql import functions as F
 
     key = key or BUCKET_KEYS[name]
-    cache_key = (session_key(spark), sf_dir, name, key, buckets)
-    if cache_key in _built:
-        return spark.table(_built[cache_key])
 
-    tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir.strip("/"))
-    fp = _source_fingerprint(sf_dir, name)
-    tbl = f"ws_b{buckets}_{tag}_{name}_{key}_{fp}"
-    path = f"{ARTIFACT_ROOT}/{tag}/b{buckets}/{name}_{key}_{fp}"
-    _registered.setdefault(session_key(spark), set()).add(tbl)
-    if not spark.catalog.tableExists(tbl):
-        df = load_table(spark, sf_dir, name)
-        (
-            df.repartition(buckets, F.col(key))
-            .write.format("parquet")
-            .bucketBy(buckets, key)
-            .sortBy(key)
-            .option("path", path)
-            .mode("overwrite")
-            .saveAsTable(tbl)
-        )
-    _built[cache_key] = tbl
-    return spark.table(tbl)
+    def _build() -> _CatalogTable:
+        # the table name and path embed the source fingerprint: a
+        # rewritten source is never served from the stale layout, even
+        # across sessions
+        tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir.strip("/"))
+        raw = registry.source_fingerprint(registry.table_path(sf_dir, name))
+        fp = "na" if raw is None else hashlib.md5(raw.encode()).hexdigest()[:10]
+        tbl = f"ws_b{buckets}_{tag}_{name}_{key}_{fp}"
+        path = f"{ARTIFACT_ROOT}/{tag}/b{buckets}/{name}_{key}_{fp}"
+        if not spark.catalog.tableExists(tbl):
+            df = load_table(spark, sf_dir, name)
+            (
+                df.repartition(buckets, F.col(key))
+                .write.format("parquet")
+                .bucketBy(buckets, key)
+                .sortBy(key)
+                .option("path", path)
+                .mode("overwrite")
+                .saveAsTable(tbl)
+            )
+        return _CatalogTable(tbl)
+
+    return spark.table(registry.resolve(
+        spark, "bucketed", source_paths(sf_dir, name), (key, buckets), _build))
 
 
 def bucketed_join(

@@ -33,57 +33,20 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from weaviate_spark import registry
 from weaviate_spark.cache import local_df
 from weaviate_spark.filters import Clause, apply_where, compile_where
 
 
-def invalidate_indexes(
-    preserve_dedup_index: bool = False,
-    preserve_vector_index: bool = False,
-) -> None:
-    """Drop every materialized derived structure after a write: BM25
-    corpus stats (N/df/doclen — the prop-length-tracker analogue, which
-    the reference refreshes on every write in shard_write_inverted.go),
-    dedup shingle/signature tables, BQ/PQ/RQ code tables, and joined
-    derived tables. The next query rebuilds them from the new data.
-
-    ``preserve_dedup_index`` keeps the incremental near-dup index: for
-    an id-keyed upsert whose caller maintains the index itself
-    (streaming ingest feeds the same batch to append_to_dedup_index,
-    whose replace-by-id semantics match the upsert exactly), dropping
-    and rebuilding the whole index per micro-batch would defeat the
-    incremental maintenance. ``preserve_vector_index`` is the same
-    contract for the quantized BQ/PQ/RQ segment store (its last-write-
-    wins compaction matches upsert semantics when the caller appends
-    the batch via append_to_vector_indexes)."""
-    from weaviate_spark.operators.bm25 import invalidate_stats
-    from weaviate_spark.operators.dedup import invalidate_dedup_index
-    from weaviate_spark.operators.quantization import (
-        invalidate_bq_index, invalidate_ivfpq_index, invalidate_pq_index,
-        invalidate_rq_index, invalidate_sq_index,
-    )
-    from weaviate_spark.operators.similarity import invalidate_nn_graphs
-    from weaviate_spark.operators.vector import invalidate_corpus_stats
-    from weaviate_spark.sources.bucketed import invalidate_bucketed
-    from weaviate_spark.sources.tables import invalidate_derived_tables
-
-    invalidate_corpus_stats()
-    invalidate_stats()
-    if not preserve_dedup_index:
-        invalidate_dedup_index()
-    if not preserve_vector_index:
-        # Every cached vector-index family: SQ is the quantize="auto"
-        # route, so a stale SQ code table after a write would silently
-        # hide new vectors from top-k; ivfpq/nng close the same gap for
-        # the opt-in routes.
-        invalidate_bq_index()
-        invalidate_sq_index()
-        invalidate_pq_index()
-        invalidate_rq_index()
-        invalidate_ivfpq_index()
-        invalidate_nn_graphs()
-    invalidate_derived_tables()
-    invalidate_bucketed()
+def invalidate_indexes(table_dir: str) -> None:
+    """The write hook: release the derived state built from
+    ``table_dir`` (BM25 handles, near-dup and vector indexes, joined,
+    bucketed and base-table entries) right after a write, to free its
+    frames early. Correctness does not depend on it: every registry
+    entry is stamped with its tables' file fingerprints, so the next
+    resolve rebuilds a stale entry anyway (weaviate_spark/registry.py).
+    Entries of other tables survive."""
+    registry.release(table_dir)
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -372,8 +335,6 @@ def _rewrite(
     df: DataFrame,
     table_dir: str,
     expected_version: int | None = None,
-    preserve_dedup_index: bool = False,
-    preserve_vector_index: bool = False,
 ) -> None:
     """Write df to a staging dir then swap — readers never see a
     half-written table. ``expected_version`` (the version observed when
@@ -381,8 +342,7 @@ def _rewrite(
     commit marker for expected_version+1 is claimed atomically BEFORE
     the swap, so a concurrent writer that committed in between forces
     ConcurrentWriteError instead of a lost update. Every write
-    invalidates materialized index state so no query scores against
-    stale statistics."""
+    releases the table's derived state (invalidate_indexes)."""
     from weaviate_spark.sources.storagestate import check_writable
 
     # shard status gate (storagestate.ErrStatusReadOnly — the shard
@@ -416,8 +376,7 @@ def _rewrite(
             shutil.rmtree(backup)
     if expected_version is not None:
         _finish_commit(table_dir, expected_version)
-    invalidate_indexes(preserve_dedup_index=preserve_dedup_index,
-                       preserve_vector_index=preserve_vector_index)
+    invalidate_indexes(table_dir)
 
 
 def _check_object_limit(spark: SparkSession, table_dir: str,
@@ -446,8 +405,6 @@ def upsert(
     table_dir: str,
     new_rows: DataFrame,
     key: str,
-    preserve_dedup_index: bool = False,
-    preserve_vector_index: bool = False,
 ) -> None:
     """MERGE: replace rows with matching key, append the rest.
 
@@ -466,8 +423,6 @@ def upsert(
     _rewrite(
         kept.unionByName(new_rows, allowMissingColumns=True), table_dir,
         expected_version=base_version,
-        preserve_dedup_index=preserve_dedup_index,
-        preserve_vector_index=preserve_vector_index,
     )
 
 
@@ -537,7 +492,7 @@ def upsert_partitioned(
             shutil.rmtree(backup)
     shutil.rmtree(staging)
     _finish_commit(table_dir, base_version)
-    invalidate_indexes()
+    invalidate_indexes(table_dir)
 
 
 def patch(
@@ -685,7 +640,7 @@ def write_tenant_partitioned(df: DataFrame, table_dir: str, tenant_col: str) -> 
         .partitionBy(tenant_col)
         .parquet(table_dir)
     )
-    invalidate_indexes()
+    invalidate_indexes(table_dir)
 
 
 def read_tenant(spark: SparkSession, table_dir: str, tenant_col: str, tenant) -> DataFrame:
@@ -821,7 +776,7 @@ class TenantRegistry:
                 if os.path.isdir(path):
                     shutil.rmtree(path)
         if removed:
-            invalidate_indexes()
+            invalidate_indexes(self.table_dir)
         return removed
 
     def status(self, tenant: str) -> str:
@@ -1144,7 +1099,7 @@ def compact_table(
     shutil.move(tmp, path)
     # content is identical but cached/materialized frames reference the
     # replaced files — drop them so nothing rescans deleted paths
-    invalidate_indexes()
+    invalidate_indexes(path)
     return files
 
 
@@ -1182,7 +1137,7 @@ def optimize_zorder(
     write_zordered(df, tmp, list(cols), num_files=files)
     shutil.rmtree(path)
     shutil.move(tmp, path)
-    invalidate_indexes()
+    invalidate_indexes(path)
     return files
 
 

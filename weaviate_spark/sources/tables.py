@@ -15,9 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from weaviate_spark import registry
 from weaviate_spark.ids import uuid_col
-
-from weaviate_spark.cache import session_key
 
 # table -> primary key expression used for `_id`
 TABLES: dict[str, str] = {
@@ -34,39 +33,18 @@ TABLES: dict[str, str] = {
 }
 
 
-# (path, mtime) -> ns-timestamp column names. The footer read costs a
-# driver-side pyarrow dataset open per call; load_table runs on EVERY
-# query build, so uncached it was ~10-30 ms of pure metadata I/O per
-# table per query (measured r11: ~45% of steady bench time was driver
-# plan construction). The mtime key keeps the cache honest if a table
-# is ever rewritten in place.
-_nanos_cache: dict[tuple[str, float], list[str]] = {}
-
-
 def _nanos_ts_columns(path: str) -> list[str]:
-    """Columns stored as parquet timestamp[ns] (driver-local footer read,
-    memoized per (path, mtime))."""
-    import os
-
-    try:
-        key = (path, os.path.getmtime(path))
-    except OSError:
-        key = None
-    if key is not None and key in _nanos_cache:
-        return _nanos_cache[key]
-
+    """Columns stored as parquet timestamp[ns] (a driver-local footer
+    read, paid once per base-plan build)."""
     import pyarrow.dataset as ds
     import pyarrow as pa
 
     schema = ds.dataset(path, format="parquet").schema
-    cols = [
+    return [
         f.name
         for f in schema
         if isinstance(f.type, pa.TimestampType) and f.type.unit == "ns"
     ]
-    if key is not None:
-        _nanos_cache[key] = cols
-    return cols
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
@@ -81,24 +59,17 @@ def _ensure_session_confs(spark: SparkSession) -> None:
         pass  # conf locked down — session.py-built sessions already have them
 
 
-# materialized derived collections, per (session, sf_dir) — see
-# docs_embedded below
-_derived_tables: dict[tuple, "DataFrame"] = {}
+# derived collection -> the stored tables it is built from
+DERIVED: dict[str, tuple[str, ...]] = {"docs_embedded": ("documents", "embeddings")}
 
-# (session, path, with_id, mtime) -> resolved base-table plan (lazy; holds
-# no data — this is a catalog cache, not a result cache)
-_base_plans: dict[tuple, "DataFrame"] = {}
+# live view of the built docs_embedded tables (see load_table)
+_derived_tables = registry.View("derived")
 
 
-def invalidate_derived_tables() -> None:
-    for frame in _derived_tables.values():
-        try:
-            frame.unpersist()
-        except Exception:
-            pass
-    _derived_tables.clear()
-    _base_plans.clear()
-    _nanos_cache.clear()
+def source_paths(sf_dir: str, name) -> tuple[str, ...]:
+    """The table files collection ``name`` is read from: the key every
+    registry entry derived from it is stamped against."""
+    return tuple(registry.table_path(sf_dir, n) for n in DERIVED.get(name, (name,)))
 
 
 def load_table(
@@ -109,61 +80,55 @@ def load_table(
 
     _ensure_session_confs(spark)
 
-    if name == "docs_embedded":
+    if name in DERIVED:
         # weaviate object shape: text properties + vector in one collection.
         # documents and embeddings share the key space (doc_id == vec_id);
         # a real deployment STORES this as one table — here the adapter
         # synthesizes it by equi-join and materializes it once per
         # (session, sf_dir), so queries read the "stored collection"
         # instead of re-running the join (at scale: a written table)
-        key = (session_key(spark), sf_dir, "docs_embedded")
-        if key not in _derived_tables:
+        def _join() -> DataFrame:
             docs = load_table(spark, sf_dir, "documents")
             emb = load_table(spark, sf_dir, "embeddings").select(
                 F.col("vec_id").alias("doc_id"), "embedding"
             )
             joined = docs.join(emb, "doc_id", "inner").cache()
             joined.count()
-            _derived_tables[key] = joined
-        return _derived_tables[key]
+            return joined
+
+        return registry.resolve(spark, "derived", source_paths(sf_dir, name),
+                                (name,), _join)
 
     # Catalog memo: the base-table PLAN (a lazy DataFrame — metadata, no
-    # data) is resolved once per (session, path, mtime). Re-resolving on
-    # every query build paid spark.read.parquet's file-index setup + the
-    # footer read + the ns->µs projection rebuild each time; a catalog
-    # resolves a table once. The mtime key invalidates if the path is
-    # rewritten (CRUD writes its own versioned dirs and never touches
-    # these paths, but the guard keeps the memo honest regardless).
-    import os
-
+    # data) is resolved once per (session, path) and file stamp.
+    # Re-resolving on every query build paid spark.read.parquet's
+    # file-index setup + the footer read + the ns->µs projection rebuild
+    # each time; a catalog resolves a table once.
     path = f"{sf_dir}/{name}.parquet"
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        mtime = None
-    memo_key = (session_key(spark), path, with_id, mtime)
-    if mtime is not None and memo_key in _base_plans:
-        return _base_plans[memo_key]
 
-    df = spark.read.parquet(path)
-    # TIMESTAMP(NANOS) parquet columns arrive as long (nanosAsLong); convert
-    # to µs TimestampType — the documented ns->µs divergence (SURVEY §1.2).
-    for col_name in _nanos_ts_columns(path):
-        if isinstance(df.schema[col_name].dataType, T.LongType):
-            df = df.withColumn(
-                col_name, F.timestamp_micros(F.expr(f"`{col_name}` div 1000"))
-            )
-    if with_id:
-        if name == "lineitem":
-            key = F.concat_ws(
-                "_", F.col("l_orderkey").cast("string"), F.col("l_linenumber").cast("string")
-            )
-        else:
-            key = F.col(TABLES[name])
-        df = df.withColumn("_id", uuid_col(name, key))
-    if mtime is not None:
-        _base_plans[memo_key] = df
-    return df
+    def _plan() -> DataFrame:
+        df = spark.read.parquet(path)
+        # TIMESTAMP(NANOS) parquet columns arrive as long (nanosAsLong);
+        # convert to µs TimestampType — the documented ns->µs divergence
+        # (SURVEY §1.2).
+        for col_name in _nanos_ts_columns(path):
+            if isinstance(df.schema[col_name].dataType, T.LongType):
+                df = df.withColumn(
+                    col_name, F.timestamp_micros(F.expr(f"`{col_name}` div 1000"))
+                )
+        if with_id:
+            if name == "lineitem":
+                key = F.concat_ws(
+                    "_", F.col("l_orderkey").cast("string"),
+                    F.col("l_linenumber").cast("string")
+                )
+            else:
+                key = F.col(TABLES[name])
+            df = df.withColumn("_id", uuid_col(name, key))
+        return df
+
+    return registry.resolve(spark, "plan", source_paths(sf_dir, name),
+                            (with_id,), _plan)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -123,9 +123,9 @@ def stream_ingest_with_index_maintenance(
       (crud.upsert under optimistic-concurrency retry), so table and
       index stay row-for-row consistent for update streams. COW cost:
       the table rewrite is O(table) per batch — for low-rate update
-      streams; the dedup index is preserved across the write and
-      maintained incrementally, while BM25 stats (df counts are not
-      replace-mergeable) invalidate and rebuild on next query.
+      streams; the maintained dedup/vector indexes are carried across
+      the write and advanced incrementally, while BM25 stats (df counts
+      are not replace-mergeable) rebuild at the next query.
     * ``upsert=False`` (default) — plain parquet append, O(batch).
       Correct for append-only id streams (the common ingest case); if
       an id DOES re-arrive, the raw log keeps the superseded rows while
@@ -135,10 +135,12 @@ def stream_ingest_with_index_maintenance(
     """
     import os
 
+    from weaviate_spark import registry
     from weaviate_spark.operators import bm25 as bm25_mod
     from weaviate_spark.operators.dedup import append_to_dedup_index
     from weaviate_spark.operators.quantization import append_to_vector_indexes
     from weaviate_spark.sources import crud
+    from weaviate_spark.sources.tables import source_paths
 
     sf_dir = coll = None
     if bm25:
@@ -149,34 +151,36 @@ def stream_ingest_with_index_maintenance(
         sf_dir = os.path.dirname(target_dir)
         coll = os.path.basename(target_dir)[: -len(".parquet")]
 
+    def _stamp(key: Optional[tuple]) -> Optional[tuple]:
+        return None if key is None else registry.stamp(source_paths(*key[:2]))
+
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        # stamps before the write: the appenders re-stamp only the
+        # entries that were current before this batch landed
+        dedup_before, vector_before = _stamp(dedup_index_key), _stamp(vector_index_key)
         fp_before = (
-            bm25_mod._source_fingerprint(sf_dir, coll) if bm25 and not upsert
+            registry.source_fingerprint(target_dir) if bm25 and not upsert
             else None
         )
         if upsert and os.path.exists(target_dir):
-            # invalidates BM25 session handles itself; the artifact's
-            # fingerprint key makes the next query rebuild from the
-            # merged table. Each maintained index is preserved across
-            # the write ONLY when this sink maintains it (its replace-
-            # by-id semantics match the upsert); an unmaintained index
-            # must invalidate, or it would serve pre-merge state.
-            crud.transact(lambda: crud.upsert(
-                spark, target_dir, batch_df, id_col,
-                preserve_dedup_index=dedup_index_key is not None,
-                preserve_vector_index=vector_index_key is not None,
-            ))
+            # crud's write hook releases the table's derived state; the
+            # hold keeps the entries this sink advances below (its
+            # appends match the upsert's replace-by-id semantics), and
+            # their stamps make everything else rebuild from the merged
+            # table at the next query
+            with registry.hold(target_dir):
+                crud.transact(lambda: crud.upsert(spark, target_dir, batch_df, id_col))
         else:
             batch_df.write.mode("append").parquet(target_dir)
         if dedup_index_key is not None:
             append_to_dedup_index(
                 batch_df, id_col, text_col, shingle_n, dedup_index_key,
-                num_hashes=num_hashes,
+                num_hashes=num_hashes, before=dedup_before,
             )
         if fp_before is not None:
             bm25_mod.advance_bm25_artifacts(batch_df, sf_dir, coll, fp_before)
         if vector_index_key is not None:
-            append_to_vector_indexes(batch_df, vector_index_key)
+            append_to_vector_indexes(batch_df, vector_index_key, before=vector_before)
         if distinct_sketch is not None:
             from weaviate_spark.operators.sketches import append_to_hll_sketch
 
