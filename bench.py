@@ -54,46 +54,42 @@ def main() -> None:
         for name in HEADLINE:
             fn = QUERIES.get(name)
             if fn is not None and os.path.isdir(warm_sf) and warm_sf != sf_dir:
-                try:
-                    fn(spark, warm_sf).count()
-                except Exception:
-                    pass
+                fn(spark, warm_sf).count()
 
     # Ingest-time index maintenance for the bench sf: the reference
     # maintains BM25 corpus statistics (prop-length tracker, term
     # postings counts) on WRITES, so its keyword queries never rescan
     # the corpus for stats. Build the analogous materialized stats
     # tables here, outside the timed region — queries then read them
-    # exactly as they would on a live cluster.
-    try:
-        from weaviate_spark.operators.bm25 import BM25Prop, BM25Spec, with_materialized_stats
-        from weaviate_spark.sources.tables import load_table
-        for coll in ("documents", "docs_embedded"):
-            spec = BM25Spec(collection=coll, query="", properties=[BM25Prop("text")],
-                            id_col="doc_id")
-            with_materialized_stats(spec, load_table(spark, sf_dir, coll), (sf_dir, coll))
-        # dedup index: the persisted near-dup index. Incremental dedup
-        # pipelines maintain per-doc shingle, SIGNATURE and shingle-SET
-        # tables on ingest (append_to_dedup_index refreshes all three per
-        # micro-batch; the reference analogue is per-write inverted/LSM
-        # maintenance) — so resolving the full index here, not just the
-        # shingle table, is the ingest-time state a live cluster holds.
-        # r11 measurement fix (was: with_shingle_table only, which left
-        # the signature/set derivations inside the FIRST TIMED RUN —
-        # dedup_minhash_lsh "cold" measured index maintenance, not the
-        # query; old numbers kept in BENCH_SELF_r11/OPTIMIZATION_r11.md).
-        from weaviate_spark.operators.dedup import _resolve_index
-        _resolve_index(
-            load_table(spark, sf_dir, "documents"), "doc_id", "text", 3,
-            (sf_dir, "documents"), num_hashes=16, want_sets=True,
-        )
-        # BQ packed-words artifact (flat-index compress-at-ingest
-        # analogue): built on write so quantized vector queries never
-        # pay the encode — see tools/bench_ann.py for the crossover
-        from weaviate_spark.operators.quantization import build_bq_artifact
-        build_bq_artifact(spark, sf_dir, "embeddings")
-    except Exception:
-        pass
+    # exactly as they would on a live cluster. A failed build aborts
+    # the run: timing without the index would silently measure a
+    # different plan.
+    from weaviate_spark.operators.bm25 import BM25Prop, BM25Spec, with_materialized_stats
+    from weaviate_spark.sources.tables import load_table
+    for coll in ("documents", "docs_embedded"):
+        spec = BM25Spec(collection=coll, query="", properties=[BM25Prop("text")],
+                        id_col="doc_id")
+        with_materialized_stats(spec, load_table(spark, sf_dir, coll), (sf_dir, coll))
+    # dedup index: the persisted near-dup index. Incremental dedup
+    # pipelines maintain per-doc shingle, SIGNATURE and shingle-SET
+    # tables on ingest (append_to_dedup_index refreshes all three per
+    # micro-batch; the reference analogue is per-write inverted/LSM
+    # maintenance) — so resolving the full index here, not just the
+    # shingle table, is the ingest-time state a live cluster holds.
+    # r11 measurement fix (was: with_shingle_table only, which left
+    # the signature/set derivations inside the FIRST TIMED RUN —
+    # dedup_minhash_lsh "cold" measured index maintenance, not the
+    # query; old numbers kept in BENCH_SELF_r11/OPTIMIZATION_r11.md).
+    from weaviate_spark.operators.dedup import _resolve_index
+    _resolve_index(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", 3,
+        (sf_dir, "documents"), num_hashes=16, want_sets=True,
+    )
+    # BQ packed-words artifact (flat-index compress-at-ingest
+    # analogue): built on write so quantized vector queries never
+    # pay the encode — see tools/bench_ann.py for the crossover
+    from weaviate_spark.operators.quantization import build_bq_artifact
+    build_bq_artifact(spark, sf_dir, "embeddings")
 
     # Protocol (since r07, extending r04's): each query runs SIX times
     # at the bench sf; "cold" is the first run (single-shot incl. plan

@@ -1,8 +1,9 @@
 """Regression tests for the round-4 ADVICE findings.
 
-1. _bucket_knn_kernel key packing: integer micro-units computed once
-   (no float round-trip truncation merging distinct tie buckets) and
-   sign-aware HALF_UP rounding for negative (dot) distances.
+1. kNN top-k key packing (distance.top_k): integer micro-units
+   computed once (no float round-trip truncation merging distinct tie
+   buckets), sign-aware HALF_UP rounding for negative (dot) distances,
+   and candidate ids of any size.
 2. stateful_running_totals update(): EventTimeTimeout invocations evict
    state and emit nothing (no stale re-emits, no state leak).
 3. _rq_encode_kernel: degenerate vectors (step == 0 after rotation) are
@@ -12,6 +13,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 
 def _kernel_pdf(rows):
@@ -26,56 +28,61 @@ def _kernel_pdf(rows):
     )
 
 
+def _top1_dot(candidates):
+    """distance.top_k for one query [1.0] under metric='dot' (exact
+    control of d = -(q @ l)); ties -> smallest tid. Returns (tid, 6dp d)."""
+    from weaviate_spark.functions.distance import micros, top_k
+
+    tids = np.array([t for t, _ in candidates], dtype=np.int64)
+    L = np.array([[x] for _, x in candidates], dtype=np.float64)
+    idx, dist = top_k(np.array([[1.0]]), L, 1, "dot", np.argsort(np.argsort(tids)))
+    return tids[idx.ravel()].tolist(), (micros(dist.ravel()) / 1e6).tolist()
+
+
 class TestBucketKnnKernelKeyPacking:
     def test_no_false_tie_from_float_roundtrip(self):
         # d = 249e-6 has 249e-6 * 1e6 = 248.99999999999997: the old
         # (dr * 1e6).astype(int64) truncated it to 248, falsely tying it
         # with a true 248-micro candidate and letting tid order pick the
-        # farther one. metric='dot' gives exact control of d = -(q @ l).
-        from weaviate_spark.operators.rerank import _bucket_knn_kernel
-
-        kernel = _bucket_knn_kernel(k=1, metric="dot")
-        pdf = _kernel_pdf(
-            [
-                (1, 0, 1, 10, [-249e-6]),  # d = 249e-6, smaller tid
-                (1, 0, 2, 20, [-248e-6]),  # d = 248e-6 — the true nearest
-                (0, 7, 0, 0, [1.0]),
-            ]
-        )
-        out = kernel(pdf)
-        assert out["_tid"].tolist() == [2]
-        assert out["_d"].tolist() == [248e-6]
+        # farther one.
+        tids, d = _top1_dot([
+            (1, -249e-6),  # d = 249e-6, smaller tid
+            (2, -248e-6),  # d = 248e-6 — the true nearest
+        ])
+        assert tids == [2]
+        assert d == [248e-6]
 
     def test_negative_dot_rounds_half_away_from_zero(self):
         # d = -2.5e-6 must round HALF_UP (away from zero) to -3 micro,
         # matching F.round / duckdb; plain floor(d*1e6+0.5) gave -2.
+        _, d = _top1_dot([(1, 2.5e-6)])
+        assert d == [-3e-6]
+
+    def test_large_ids_rank_and_key_overflow_raises(self):
+        # candidate ids >= 1e9 pack as ranks, not raw ids: ties still
+        # go to the smallest id, a nearer large id still wins
+        from weaviate_spark.functions.distance import top_k
         from weaviate_spark.operators.rerank import _bucket_knn_kernel
 
-        kernel = _bucket_knn_kernel(k=1, metric="dot")
-        pdf = _kernel_pdf(
-            [
-                (1, 0, 1, 10, [2.5e-6]),
-                (0, 7, 0, 0, [1.0]),
-            ]
-        )
-        out = kernel(pdf)
-        assert out["_d"].tolist() == [-3e-6]
-
-    def test_id_bound_guard(self):
-        from weaviate_spark.operators.rerank import _bucket_knn_kernel
-
-        kernel = _bucket_knn_kernel(k=1, metric="dot")
-        pdf = _kernel_pdf(
-            [
-                (1, 0, 1_000_000_000, 10, [1.0]),
-                (0, 7, 0, 0, [1.0]),
-            ]
-        )
-        try:
-            kernel(pdf)
-            raise AssertionError("expected ValueError for id >= 1e9")
-        except ValueError as e:
-            assert "1e9" in str(e)
+        kernel = _bucket_knn_kernel(k=1, metric="dot", vector_col="_v")
+        tie = kernel(_kernel_pdf([
+            (1, 0, 5_000_000_000, 10, [1.0]),
+            (1, 0, 3_000_000_000, 20, [1.0]),
+            (0, 7, 0, 0, [1.0]),
+        ]))
+        assert tie["_tid"].tolist() == [3_000_000_000]
+        near = kernel(_kernel_pdf([
+            (1, 0, 1, 10, [1.0]),
+            (1, 0, 9_000_000_000_000, 20, [2.0]),
+            (0, 7, 0, 0, [1.0]),
+        ]))
+        assert near["_tid"].tolist() == [9_000_000_000_000]
+        assert near["_d"].tolist() == [-2.0]
+        # a distance whose micro units cannot pack with the rank fails
+        # loudly instead of wrapping around int64
+        with pytest.raises(OverflowError):
+            top_k(np.array([[1e7]]), np.array([[1e7], [1.0]]), 1, "dot",
+                  np.array([0, 1]))
 
 
 class _FakeState:

@@ -60,16 +60,10 @@ def register_checkpoint(df: DataFrame) -> DataFrame:
     through JVM-level ``JavaRDD.unpersist`` on the recorded RDD id —
     same mechanism as operators/graph.py's iterative generations.
 
-    ``SPARK_GRAFT_CHECKPOINT_MODE=cache`` falls back to the
-    ``register_cache(df.cache())`` form: localCheckpoint blocks are
-    unrecoverable on executor loss (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND),
-    so clusters with decommissioning / dynamic allocation can trade the
-    flat-plan win for retry-ability. Single-node / static-executor
-    deployments (and the bench) keep the checkpoint default."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_CHECKPOINT_MODE", "local") == "cache":
-        return register_cache(df.cache())
+    localCheckpoint blocks are unrecoverable on executor loss
+    (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND): the flat plan is bought with
+    retry-ability, which single-node and static-executor deployments
+    do not need."""
     ck = df.localCheckpoint(eager=False)
     try:
         ck._ckpt_rdd_id = int(

@@ -7,8 +7,12 @@ columns — elements cast to double first so results are precision-stable
 and independent of the storage float width. ``F.zip_with`` +
 ``F.aggregate`` evaluate left-to-right on the JVM; for small/medium
 dims (<= a few hundred) this is fast enough and keeps the plan
-UDF-free. (A numpy pandas_udf batch kernel is the documented upgrade
-path for very high dims — the SIMD-distancer analogue.)
+UDF-free.
+
+The numpy side of the same rules (``as_matrix``, ``pairwise``,
+``micros``, ``top_k``) serves every Arrow-batch kernel — the
+SIMD-distancer analogue: one GEMM per batch, one 6dp rounding rule,
+one deterministic top-k. The Column expressions stay the reference.
 
 Distance conventions (distancer .go files):
 * cosine    — 1 - cos(a,b)           (range [0,2])
@@ -108,3 +112,101 @@ def distance(a: Column, b: Column, metric: str = "cosine") -> Column:
 def certainty_to_distance(c: float) -> float:
     """cosine-only (distance.go:14-29): dist = (1 - certainty) * 2."""
     return (1.0 - c) * 2.0
+
+
+# ---------------------------------------------------------------------------
+# numpy kernels over Arrow batches (numpy imported lazily, as in the operators)
+
+def as_matrix(cells, column: str):
+    """(n, d) float64 matrix from vector cells: Arrow list cells in a
+    pandas Series (NULL elements arrive as NaN) or collected row values.
+    Raises ValueError naming ``column`` on a NULL vector, ragged rows
+    or a non-finite element, which would otherwise flow silently
+    through every distance and top-k below."""
+    import numpy as np
+
+    cells = list(cells)
+    if not cells:
+        return np.empty((0, 0))
+    try:
+        X = np.array(cells, dtype=np.float64)
+    except (TypeError, ValueError):
+        X = None
+    if X is None or X.ndim != 2:
+        raise ValueError(
+            f"vector column {column!r}: NULL or ragged vector rows")
+    if not np.isfinite(X).all():
+        raise ValueError(
+            f"vector column {column!r}: NULL or non-finite vector element")
+    return X
+
+
+def pairwise(Q, L, metric: str):
+    """(m, n) distances between the rows of Q and L: dot product first,
+    norms divided after — the arithmetic of the DuckDB oracles'
+    list_dot_product forms. Same conventions as ``METRICS``."""
+    import numpy as np
+
+    G = Q @ L.T
+    if metric == "dot":
+        return -G
+    if metric == "cosine":
+        qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
+        ln = np.sqrt(np.einsum("ij,ij->i", L, L))
+        return 1.0 - G / (qn[:, None] * ln[None, :])
+    if metric in ("l2-squared", "l2"):
+        D = (np.einsum("ij,ij->i", Q, Q)[:, None]
+             + np.einsum("ij,ij->i", L, L)[None, :] - 2.0 * G)
+        return D if metric == "l2-squared" else np.sqrt(np.maximum(D, 0.0))
+    raise ValueError(f"unknown kernel distance metric {metric!r}")
+
+
+def micros(D):
+    """Round to 6dp as int64 micro units, half away from zero, exactly
+    as DuckDB's round(x, 6) does (std::round(x * 1e6)), negative (dot)
+    distances included. Integer units double as exact sort keys: a
+    float round-trip (round(D, 6) * 1e6).astype(int64) truncates some
+    values by one micro and merges distinct tie buckets. Divide by 1e6
+    for the rounded double."""
+    import numpy as np
+
+    A = np.abs(D) * 1e6
+    W = np.floor(A)
+    # W + (A - W >= 0.5), not floor(A + 0.5): the sum rounds up just
+    # below one half (0.49999999999999994 + 0.5 == 1.0)
+    return np.copysign(W + (A - W >= 0.5), D).astype(np.int64)
+
+
+def top_k(Q, L, k: int, metric: str, rank):
+    """Per row of Q, the indices into L of the k smallest distances by
+    (micros, rank) and their raw distances, both (m, min(k, n)), in no
+    order within a row. ``rank``: distinct int64 tie-break ranks in
+    [0, n), e.g. each candidate id's rank so ties go to the smallest.
+
+    (micros, rank) packs into one int64 key and ``argpartition`` takes
+    the k smallest: O(n) per query instead of a lexsort. Keys are
+    unique, so the selected set equals ``lexsort((rank, micros))[:k]``.
+    Queries run in chunks of at most 2^24 distance cells (one row when
+    n alone exceeds that), so memory stays bounded for any |Q|."""
+    import numpy as np
+
+    m, n = Q.shape[0], L.shape[0]
+    kk = min(k, n)
+    idx = np.empty((m, kk), dtype=np.int64)
+    dist = np.empty((m, kk), dtype=np.float64)
+    if kk == 0:
+        return idx, dist
+    # |D| * 1e6 below this keeps micros(D) * n + rank inside int64
+    bound = (np.iinfo(np.int64).max - n) // n - 1
+    chunk = max(1, (1 << 24) // n)
+    for c0 in range(0, m, chunk):
+        D = pairwise(Q[c0:c0 + chunk], L, metric)
+        if np.abs(D).max() * 1e6 >= bound:
+            raise OverflowError(
+                f"top_k: a distance of {np.abs(D).max():.6g} overflows "
+                f"the packed int64 key over {n} candidates")
+        key = micros(D) * np.int64(n) + rank[None, :]
+        part = np.argpartition(key, kk - 1, axis=1)[:, :kk]
+        idx[c0:c0 + chunk] = part
+        dist[c0:c0 + chunk] = np.take_along_axis(D, part, axis=1)
+    return idx, dist

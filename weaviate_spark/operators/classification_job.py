@@ -29,9 +29,10 @@ Semantics ported:
   completed — (extendItemWithObjectMeta, classifier_run.go:173-187).
 
 Spark mapping: the collection is a DataFrame; the kNN vote itself is
-the existing ``knn_classify`` operator (numpy-broadcast Arrow batches;
-labeled set broadcast once — the reference likewise scores every item
-against the in-memory training vectors). The vote runs directly on
+the existing ``knn_classify`` operator (labeled set broadcast once,
+Arrow batches of items scored by the shared ``distance.top_k`` kernel
+— the reference likewise scores every item against the in-memory
+training vectors). The vote runs directly on
 the refs' BEACON strings, so the winning label reconstructs the full
 SingleRef without any driver-side label mapping. Writeback is one
 narrow join of predictions onto the collection — no per-item store
@@ -295,9 +296,7 @@ def _run(df: DataFrame, job: ClassificationJob, classify_property: str,
         preds = classify_fn(labeled, queries)
     else:
         preds = knn_classify(
-            labeled, queries, "_kid", "_kvec", "_klabel", k=k,
-            id_type="string", label_type="string",
-        )
+            labeled, queries, "_kid", "_kvec", "_klabel", k=k)
 
     return _writeback(df, job, preds, classify_property, id_col,
                       unclassified, now_unix)
@@ -402,89 +401,52 @@ def knn_classify_with_meta(
     reference iterates a Go map here — nondeterministic on ties — so
     the deterministic tie-break is a strengthening, documented).
 
-    Same scale envelope as knn_classify's numpy backend: the labeled
-    matrix broadcasts once, each Arrow batch of queries scores with
-    one BLAS matmul.
+    Same scale envelope and kernel as knn_classify's numpy backend:
+    the labeled matrix broadcasts once, each Arrow batch of queries is
+    scored by ``distance.top_k``; only the meta loop is local.
     """
     import numpy as np
     import pandas as pd
 
-    if labeled.limit(max_labeled_rows + 1).count() > max_labeled_rows:
-        raise ValueError(
-            "knn_classify_with_meta collects the labeled set to the "
-            f"driver (> max_labeled_rows={max_labeled_rows})")
-    lab = labeled.select(id_col, vector_col, label_col).collect()
-    L = np.array([list(map(float, r[1])) for r in lab], dtype=np.float64)
-    L_norm = L / np.linalg.norm(L, axis=1, keepdims=True)
-    tids = np.array([r[0] for r in lab])
-    beacons = np.array([r[2] for r in lab])
-    b = queries.sparkSession.sparkContext.broadcast(
-        (L_norm, tids, beacons))
+    from weaviate_spark.functions.distance import as_matrix, micros, top_k
+    from weaviate_spark.operators.rerank import broadcast_labeled
+
+    b = broadcast_labeled(labeled, id_col, vector_col, label_col,
+                          max_labeled_rows, "knn_classify_with_meta")
+
+    def _6dp(x):
+        return float(micros(x) / 1e6)
 
     def _classify(iterator):
-        Ln, tid_arr, beacon_arr = b.value
-        n_lab = len(tid_arr)
-        # deterministic tie-break WITHOUT a full per-query lexsort: map
-        # each labeled id to its lexicographic rank once, pack
-        # (6dp-micro distance, rank) into one int64 key, and take the
-        # k smallest by argpartition — O(n) per query instead of the
-        # O(n log n) full string lexsort (at the 100x lane: 20k queries
-        # x lexsort(180k strings) dominated the stage). Keys are unique
-        # (ranks are), so the selected SET is identical to
-        # lexsort((tid, D))[:k]; every output below is a set statistic.
-        tid_rank = np.empty(n_lab, dtype=np.int64)
-        tid_rank[np.argsort(tid_arr)] = np.arange(n_lab)
+        Lb, rank_b, beacon_arr = b.value
         for pdf in iterator:
-            Q = np.array([list(map(float, v)) for v in pdf[vector_col]],
-                         dtype=np.float64)
-            Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+            Q = as_matrix(pdf[vector_col], vector_col)
+            idx, dist = top_k(Q, Lb, k, "cosine", rank_b)
             rows = []
-            # chunk the GEMM so the distance matrix stays bounded: a
-            # full 10k-row Arrow batch against 180k labeled rows would
-            # materialize a 14 GB cos matrix (plus D/NDU copies) —
-            # chunk x n_lab is capped at ~16M cells (~128 MB each)
-            chunk = max(1, (1 << 24) // max(1, n_lab))
-            for c0 in range(0, Qn.shape[0], chunk):
-                cos = Qn[c0:c0 + chunk] @ Ln.T
-                D = np.round(1.0 - cos, 6)   # index distance (selection)
+            for i, order in enumerate(idx):
+                top_beacons = beacon_arr[order]
                 # meta stats aggregate UNROUNDED normalized distances
-                # and round once at output — rounding first would put
-                # means of 6dp values on exact .5 boundaries, where
-                # numpy (half-to-even) and SQL (half-away) disagree
-                NDU = (1.0 - cos) / 2.0
-                key = (np.rint(D * 1e6).astype(np.int64) * np.int64(n_lab)
-                       + tid_rank[None, :])
-                kk = min(k, n_lab)
-                part = np.argpartition(key, kk - 1, axis=1)[:, :kk]
-                for ci in range(D.shape[0]):
-                    i = c0 + ci
-                    order = part[ci]
-                    top_beacons = beacon_arr[order]
-                    nd = NDU[ci][order]
-                    vals, counts = np.unique(top_beacons, return_counts=True)
-                    win = vals[np.argmax(counts)]
-                    win_nd = nd[top_beacons == win]
-                    lose_nd = nd[top_beacons != win]
-                    rows.append({
-                        id_col: pdf[id_col].iloc[i],
-                        "predicted_label": win,
-                        "votes": int(counts.max()),
-                        "overall_count": int(len(order)),
-                        "winning_count": int(win_nd.size),
-                        "losing_count": int(lose_nd.size),
-                        "closest_overall_distance":
-                            float(np.round(nd.min(), 6)),
-                        "closest_winning_distance":
-                            float(np.round(win_nd.min(), 6)),
-                        "mean_winning_distance":
-                            float(np.round(win_nd.mean(), 6)),
-                        "mean_losing_distance":
-                            float(np.round(lose_nd.mean(), 6))
-                            if lose_nd.size else None,
-                        "closest_losing_distance":
-                            float(np.round(lose_nd.min(), 6))
-                            if lose_nd.size else None,
-                    })
+                # and round once at output, like the oracle
+                nd = dist[i] / 2.0
+                vals, counts = np.unique(top_beacons, return_counts=True)
+                win = vals[np.argmax(counts)]
+                win_nd = nd[top_beacons == win]
+                lose_nd = nd[top_beacons != win]
+                rows.append({
+                    id_col: pdf[id_col].iloc[i],
+                    "predicted_label": win,
+                    "votes": int(counts.max()),
+                    "overall_count": int(len(order)),
+                    "winning_count": int(win_nd.size),
+                    "losing_count": int(lose_nd.size),
+                    "closest_overall_distance": _6dp(nd.min()),
+                    "closest_winning_distance": _6dp(win_nd.min()),
+                    "mean_winning_distance": _6dp(win_nd.mean()),
+                    "mean_losing_distance":
+                        _6dp(lose_nd.mean()) if lose_nd.size else None,
+                    "closest_losing_distance":
+                        _6dp(lose_nd.min()) if lose_nd.size else None,
+                })
             yield pd.DataFrame(rows)
 
     schema = (f"{id_col} string, predicted_label string, votes long, "

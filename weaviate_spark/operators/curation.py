@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from weaviate_spark.cache import (
     ensure_min_partitions, register_cache, register_checkpoint,
 )
+from weaviate_spark.functions.distance import as_matrix
 from weaviate_spark.operators.dedup import shingle_df
 from weaviate_spark.operators.sampling import md5_prefix_long
 
@@ -867,7 +868,7 @@ def pca_top_component(
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.stack(pdf["_vec"].to_numpy()).astype(np.float64)
+            X = as_matrix(pdf["_vec"], vec_col)
             g = X.T @ X
             acc = g if acc is None else acc + g
         if acc is not None:

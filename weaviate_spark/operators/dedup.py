@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from weaviate_spark import registry
 from weaviate_spark.cache import ensure_min_partitions, register_cache
+from weaviate_spark.functions.distance import as_matrix, distance, micros, pairwise
 from weaviate_spark.functions.text import tokenize
 from weaviate_spark.sources.tables import source_paths
 
@@ -658,8 +659,6 @@ def embedding_neardup_pairs(
     compute; the production path buckets by random-hyperplane LSH
     (simhash over the embedding signs) first so only same-bucket pairs
     join. Exposed as the exactness oracle for that path."""
-    from weaviate_spark.functions.distance import distance
-
     a = df.select(F.col(id_col).alias("id_a"), F.col(vector_col).alias("_va"))
     b = df.select(F.col(id_col).alias("id_b"), F.col(vector_col).alias("_vb"))
     pairs = a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
@@ -698,13 +697,13 @@ def embedding_neardup_pairs_lsh(
     wall). Here the only shuffle is the slim edge-keyed emission
     (~(num_planes/2 + 1) rows per vector per side, ~90 MB at 10x data).
 
-    Rescoring is a per-edge numpy GEMM inside applyInPandas (the
-    _bucket_knn_kernel pattern, rerank.py): Arrow ships one row per
-    BUCKET MEMBER, never per pair, and the pairwise distance matrix for
-    an edge is one float64 matmul — the Catalyst higher-order-function
-    cosine (zip_with + aggregate, interpreted per element) costs
-    hundreds of µs per pair and dominated the old plan. Rounding is
-    half-up at 6dp on non-negative distances, matching F.round and the
+    Rescoring is a per-edge numpy GEMM inside applyInPandas
+    (``distance.pairwise``, shared with the kNN kernels): Arrow ships
+    one row per BUCKET MEMBER, never per pair, and the pairwise
+    distance matrix for an edge is one float64 matmul — the Catalyst
+    higher-order-function cosine (zip_with + aggregate, interpreted per
+    element) costs hundreds of µs per pair and dominated the old plan.
+    Distances round half-up at 6dp (``distance.micros``), matching the
     DuckDB oracle. `embedding_neardup_pairs` (brute force) is the
     exactness/recall oracle (tests/test_dedup_textstats.py)."""
     from weaviate_spark.operators.similarity import hyperplanes, signature_col
@@ -767,7 +766,7 @@ def embedding_neardup_pairs_lsh(
     if metric not in ("cosine", "l2-squared", "l2"):
         raise ValueError(
             f"embedding_neardup_pairs_lsh: unsupported metric {metric!r} "
-            "(kernel rounding assumes non-negative distances)"
+            "(the max_distance threshold needs non-negative distances)"
         )
     id_type = dict(df.dtypes)[id_col]
     md = float(max_distance)
@@ -783,21 +782,8 @@ def embedding_neardup_pairs_lsh(
             return empty
         # float32 parquet values widened to float64 — the same doubles
         # the expression path and the DuckDB oracle compute with
-        VA = np.stack(A["_v"].to_numpy()).astype(np.float64)
-        VB = np.stack(B["_v"].to_numpy()).astype(np.float64)
-        dots = VA @ VB.T
-        if metric == "cosine":
-            na = np.sqrt(np.einsum("ij,ij->i", VA, VA))
-            nb = np.sqrt(np.einsum("ij,ij->i", VB, VB))
-            d = 1.0 - dots / (na[:, None] * nb[None, :])
-        else:  # l2 / l2-squared
-            sa = np.einsum("ij,ij->i", VA, VA)
-            sb = np.einsum("ij,ij->i", VB, VB)
-            d = sa[:, None] + sb[None, :] - 2.0 * dots
-            if metric == "l2":
-                d = np.sqrt(np.maximum(d, 0.0))
-        # half-up at 6dp on non-negative values — F.round/duckdb parity
-        d = np.floor(d * 1e6 + 0.5) / 1e6
+        d = micros(pairwise(as_matrix(A["_v"], vector_col),
+                            as_matrix(B["_v"], vector_col), metric)) / 1e6
         ia_idx, ib_idx = np.nonzero(d <= md)
         if ia_idx.size == 0:
             return empty
@@ -1027,10 +1013,8 @@ def semantic_dedup(
             return empty
         pdf = pdf.sort_values("_id", ignore_index=True)
         ids = pdf["_id"].to_numpy()
-        V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-        n = np.sqrt(np.einsum("ij,ij->i", V, V))
-        D = 1.0 - (V @ V.T) / (n[:, None] * n[None, :])
-        D = np.floor(D * 1e6 + 0.5) / 1e6  # half-up 6dp, oracle parity
+        V = as_matrix(pdf["_v"], vector_col)
+        D = micros(pairwise(V, V, "cosine")) / 1e6
         out_id, out_keep, out_d = [], [], []
         for j in range(1, len(ids)):
             hits = np.nonzero(D[:j, j] <= eps_f)[0]

@@ -28,6 +28,8 @@ from typing import Optional
 
 import numpy as np
 
+from weaviate_spark.functions.distance import as_matrix
+
 
 @dataclass
 class FeatureProjectionParams:
@@ -150,15 +152,15 @@ def feature_projection(rows: list[dict], vector_col: str,
     dims = len(first)
     params = params or FeatureProjectionParams()
     params.set_defaults_and_validate(len(rows), dims)
-    vecs = [list(map(float, r[vector_col])) for r in rows]
+    vecs = [r[vector_col] for r in rows]
     if any(len(v) != dims for v in vecs):
         bad = next(len(v) for v in vecs if len(v) != dims)
         raise ValueError(
             f"inconsistent vector lengths found: {dims} and {bad}")
     Y = tsne_embed(
-        vecs, dimensions=params.dimensions, perplexity=params.perplexity,
-        iterations=params.iterations, learning_rate=params.learning_rate,
-        seed=seed)
+        as_matrix(vecs, vector_col), dimensions=params.dimensions,
+        perplexity=params.perplexity, iterations=params.iterations,
+        learning_rate=params.learning_rate, seed=seed)
     out = []
     for r, y in zip(rows, Y):
         r = dict(r)

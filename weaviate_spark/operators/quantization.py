@@ -40,7 +40,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from weaviate_spark.functions.distance import distance
+from weaviate_spark.functions.distance import as_matrix, distance
 from weaviate_spark.sources.tables import load_table, source_paths
 
 from weaviate_spark import incremental, registry
@@ -696,7 +696,7 @@ def pq_train(X, segments: int = 8, centroids: int = 16,
                 if len(members):
                     C[c] = members.mean(axis=0)
         book[s] = C
-    return [[list(map(float, c)) for c in seg] for seg in np.round(book, 6)]
+    return np.round(book, 6).tolist()
 
 
 def _pq_assign_scores(Xs, C):
@@ -750,7 +750,7 @@ def _pq_encode_kernel(codebook, normalize: bool = True):
             pdf = pdf[keep]
             if pdf.empty:
                 continue
-            X = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
+            X = as_matrix(pdf["_v"], "_v")
             if normalize:
                 X = X / np.sqrt((X * X).sum(axis=1, keepdims=True))
             codes = np.zeros((len(pdf), len(books)), dtype=np.int32)
@@ -935,7 +935,7 @@ def _rq_encode_kernel(M, normalize: bool = True):
             pdf = pdf[pdf["_v"].notna()]
             if pdf.empty:
                 continue
-            X = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
+            X = as_matrix(pdf["_v"], "_v")
             if normalize:
                 X = X / np.sqrt((X * X).sum(axis=1, keepdims=True))
             R = X @ Mx.T
@@ -971,13 +971,11 @@ def with_rq_index(
     df: DataFrame, id_col: str, vector_col: str, M, table_key: tuple,
     normalize: bool = True,
 ) -> DataFrame:
-    rot = [list(map(float, r)) for r in M]
-
     def _encode(rows: DataFrame) -> DataFrame:
         return rows.select(
             F.col(id_col).alias("_id"), F.col(vector_col).alias("_v")
         ).mapInPandas(
-            _rq_encode_kernel(rot, normalize),
+            _rq_encode_kernel(M, normalize),
             "_id long, _v array<float>, _codes array<int>, "
             "_lower double, _step double",
         )
@@ -1071,7 +1069,7 @@ def _ivfpq_encode_kernel(ivf_centroids, codebook, normalize: bool = True):
             pdf = pdf[pdf["_v"].notna()]
             if pdf.empty:
                 continue
-            X = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
+            X = as_matrix(pdf["_v"], "_v")
             if normalize:
                 X = X / np.sqrt((X * X).sum(axis=1, keepdims=True))
             cell = _pq_assign_scores(X, ivf).argmin(axis=1).astype(np.int32)

@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame
 from weaviate_spark.cache import ensure_min_partitions, lit_double_array
 from pyspark.sql import functions as F
 
-from weaviate_spark.functions.distance import distance
+from weaviate_spark.functions.distance import as_matrix, distance, micros, pairwise
 
 
 def _plane_component(seed: int, plane: int, dim: int) -> float:
@@ -204,7 +204,7 @@ def ivf_top_k(
     def l2(a, b):
         return sum((x - y) ** 2 for x, y in zip(a, b))
 
-    centroids = [list(map(float, c)) for c in model.clusterCenters()]
+    centroids = [c.tolist() for c in model.clusterCenters()]
     cells = sorted(range(len(centroids)), key=lambda c: l2(centroids[c], q))[:nprobe]
 
     qcol = F.array(*[F.lit(x) for x in q])
@@ -470,10 +470,8 @@ def hard_negative_mining(
         pdf = pdf.sort_values("_id", ignore_index=True)
         ids = pdf["_id"].to_numpy()
         lbl = pdf["_lbl"].to_numpy()
-        V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-        n = np.sqrt(np.einsum("ij,ij->i", V, V))
-        D = 1.0 - (V @ V.T) / (n[:, None] * n[None, :])
-        D = np.floor(D * 1e6 + 0.5) / 1e6  # half-up 6dp, oracle parity
+        V = as_matrix(pdf["_v"], vector_col)
+        D = micros(pairwise(V, V, "cosine")) / 1e6
         out = {"_id": [], "rank": [], "negative_id": [], "distance": []}
         for a in range(len(ids)):
             cand = np.nonzero(lbl != lbl[a])[0]

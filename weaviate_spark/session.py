@@ -64,15 +64,6 @@ def get_spark(app_name: str = "weaviate-spark", cpus: int | None = None) -> Spar
         # Inputs are unaffected (codec applies to writes only).
         .config("spark.sql.parquet.compression.codec",
                 os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"))
-        # Shuffle codec is scale-dependent (optimization guide §2.3):
-        # local shuffles are MBs, so any local A/B is noise and the
-        # default stays Spark's lz4; at cluster scale zstd usually cuts
-        # shuffle bytes 20-40% for more CPU — set
-        # SPARK_GRAFT_SHUFFLE_CODEC=zstd after measuring stage time and
-        # shuffle bytes written on the real network (the guide's "no
-        # universal answer — measure both").
-        .config("spark.io.compression.codec",
-                os.environ.get("SPARK_GRAFT_SHUFFLE_CODEC", "lz4"))
         # weaviate dates are RFC3339 with ns precision (SURVEY §1.2); parquet
         # TIMESTAMP(NANOS) is read as long and converted to µs at load
         # (documented divergence: ns -> µs truncation).
