@@ -110,7 +110,7 @@ def test_bm25_duplicate_term_boost(spark):
 
 
 def test_stats_tables_match_recompute(spark, tmp_path):
-    """The materialized-stats path (build_bm25_stats + load_stats) must
+    """The materialized-stats path (build_bm25_index + load_stats) must
     score identically to the per-query recompute path — including with a
     where-filter, where stats stay collection-wide but only candidates
     are scored (bm25_searcher.go:235-239, :885-893)."""
@@ -118,7 +118,7 @@ def test_stats_tables_match_recompute(spark, tmp_path):
         BM25Prop,
         BM25Spec,
         bm25_score_df,
-        build_bm25_stats,
+        build_bm25_index,
         load_stats,
     )
 
@@ -135,8 +135,8 @@ def test_stats_tables_match_recompute(spark, tmp_path):
         collection="x", query="apple banana", properties=props,
         id_col="doc_id", round_digits=None,
     )
-    cs, tdf = build_bm25_stats(df, props, "doc_id")
-    stats = load_stats(cs, tdf, {"text": ["apple", "banana"]})
+    cs, tdf, _post, _dl = build_bm25_index(df, props, "doc_id")
+    stats = load_stats(cs, tdf)
 
     for cand in (df, df.where(F.col("grp") == "a")):
         recompute = {
@@ -152,6 +152,87 @@ def test_stats_tables_match_recompute(spark, tmp_path):
         assert set(fed) == set(recompute)
         for k in fed:
             assert fed[k] == pytest.approx(recompute[k], abs=1e-12)
+
+
+def test_index_build_matches_per_property_reference(spark):
+    """The single tokenize pass of build_bm25_index gives the four tables
+    a naive per-property build gives: two text properties, a NULL and an
+    empty text, a property with no token in any row, repeated terms.
+    n_docs counts every row; n_docs_with_prop and sum_len only rows
+    holding tokens."""
+    from collections import Counter
+
+    from weaviate_spark.operators.bm25 import BM25Prop, build_bm25_index
+
+    rows = [
+        (1, "Apple pie apple", "banana split", None),
+        (2, None, "cherry cherry apple", ""),
+        (3, "", "apple", "  ,, "),
+        (4, "date date date", None, None),
+        (5, "pie", "", "--"),
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id long, title string, body string, tags string")
+    props = [BM25Prop("title"), BM25Prop("body"), BM25Prop("tags")]
+    cs, tdf, post, dl = build_bm25_index(df, props, "doc_id")
+
+    want_cs, want_tdf, want_post, want_dl = set(), Counter(), set(), set()
+    for i, p in enumerate(props):
+        with_prop = sum_len = 0
+        for r in rows:
+            toks = tokenize_py(r[i + 1]) if r[i + 1] is not None else []
+            if toks:
+                with_prop += 1
+                sum_len += len(toks)
+                want_dl.add((p.name, r[0], len(toks)))
+            for term, f in Counter(toks).items():
+                want_post.add((p.name, r[0], term, f))
+                want_tdf[p.name, term] += 1
+        want_cs.add((p.name, len(rows), with_prop, sum_len))
+
+    assert want_cs == {("title", 5, 3, 7), ("body", 5, 3, 6), ("tags", 5, 0, 0)}
+    assert set(map(tuple, (r.values() for r in cs.to_pylist()))) == want_cs
+    assert {(r["prop"], r["term"]): r["df"] for r in tdf.to_pylist()} == dict(want_tdf)
+    assert len(tdf) == len(want_tdf)
+    assert set(map(tuple, post.collect())) == want_post
+    assert post.count() == len(want_post)
+    assert set(map(tuple, dl.collect())) == want_dl
+    assert dl.count() == len(want_dl)
+
+
+def test_read_on_built_index_runs_no_eager_job(spark, sf_dir):
+    """Once an index is built, building a bm25 or a hybrid read for a
+    new term set runs no Spark job: the corpus statistics are looked up
+    on the driver, so the only jobs are the read's own action."""
+    from weaviate_spark.entry_queries import QVEC
+    from weaviate_spark.operators.bm25 import BM25Prop, BM25Spec, bm25_search
+    from weaviate_spark.operators.hybrid import HybridSpec, hybrid_search
+
+    def reads(query):
+        return [
+            bm25_search(spark, sf_dir, BM25Spec(
+                collection="documents", query=query,
+                properties=[BM25Prop("text")], id_col="doc_id", limit=10)),
+            hybrid_search(spark, sf_dir, HybridSpec(
+                collection="docs_embedded", query=query, vector=QVEC,
+                properties=[BM25Prop("text")], id_col="doc_id", limit=10)),
+        ]
+
+    for df in reads("spark filter"):  # builds both indexes
+        df.collect()
+    sc = spark.sparkContext
+    group = "bm25-read-build"
+    sc.setJobGroup(group, group)
+    try:
+        frames = reads("join data query")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        for df in frames:
+            assert df.collect()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
 
 
 def test_postings_path_scores_identical(spark, sf_dir):

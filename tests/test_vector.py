@@ -39,6 +39,27 @@ def test_cosine(vec_df):
     assert d[4] == pytest.approx(2.0)
 
 
+def test_cosine_const_query_bit_identical(spark):
+    """The constant-query cosine (one parsed expression, the query norm
+    folded to a literal) equals cosine_distance bit for bit, on a plain
+    column and on an expression over one."""
+    import random
+
+    from weaviate_spark.cache import lit_double_array
+    from weaviate_spark.functions.distance import cosine_distance_const_query
+
+    rng = random.Random(7)
+    df = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(20)],
+        "id int, v array<float>",
+    )
+    q = [rng.gauss(0, 1) for _ in range(16)]
+    for col, qv in ((F.col("v"), q), (F.slice("v", 1, 8), q[:8])):
+        got = _d(df, cosine_distance_const_query(col, qv))
+        want = _d(df, cosine_distance(col, lit_double_array(qv)))
+        assert got == want and len(got) == 20
+
+
 def test_dot_l2_manhattan_hamming(vec_df):
     q = F.array(F.lit(2.0), F.lit(3.0))
     assert _d(vec_df, dot_distance(F.col("v"), q))[3] == pytest.approx(-5.0)

@@ -154,9 +154,14 @@ def lit_double_array(vals) -> "Column":
     Value-identical to F.array(*[F.lit(float(v)) for v in vals])."""
     from pyspark.sql import functions as F
 
+    return F.expr(double_array_sql(vals))
+
+
+def double_array_sql(vals) -> str:
+    """SQL text of lit_double_array's literal."""
     if not len(vals):
-        return F.expr("CAST(array() AS array<double>)")
-    return F.expr("array(" + ", ".join(f"{float(v)!r}D" for v in vals) + ")")
+        return "CAST(array() AS array<double>)"
+    return "array(" + ", ".join(f"{float(v)!r}D" for v in vals) + ")"
 
 
 def local_df(spark, data, schema) -> DataFrame:

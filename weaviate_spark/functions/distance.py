@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 
-from weaviate_spark.cache import lit_double_array
+from weaviate_spark.cache import column_sql, double_array_sql
 from pyspark.sql import functions as F
 
 
@@ -53,15 +53,25 @@ def cosine_distance_const_query(a: Column, qvec) -> Column:
     norm folds to a driver-side literal instead of re-aggregating the
     64-element dot(b,b) per row (a wasted third of the scan's
     expression work — Catalyst does not fold aggregate() over array
-    literals). Bit-identical to cosine_distance: the python loop sums
-    left-to-right in double exactly like F.aggregate."""
+    literals). Bit-identical to cosine_distance: the same
+    transform/zip_with/aggregate operations in the same order, and the
+    python loop sums left-to-right in double exactly like aggregate.
+    Built as ONE parsed expression: the composed F.* form cost ~200
+    py4j round trips per build."""
     import math
 
-    q = lit_double_array(qvec)
     acc = 0.0
     for x in qvec:
         acc += float(x) * float(x)
-    return F.lit(1.0) - dot(a, q) / (F.sqrt(dot(a, a)) * F.lit(math.sqrt(acc)))
+    col, q = column_sql(a), double_array_sql(qvec)
+
+    def dot(u: str, v: str) -> str:
+        return (f"aggregate(zip_with(transform({u}, x -> CAST(x AS DOUBLE)), "
+                f"transform({v}, x -> CAST(x AS DOUBLE)), (x, y) -> x * y), "
+                f"0.0D, (acc, x) -> acc + x)")
+
+    return F.expr(f"1.0D - {dot(col, q)} / "
+                  f"(SQRT({dot(col, col)}) * {math.sqrt(acc)!r}D)")
 
 
 def dot_distance(a: Column, b: Column) -> Column:

@@ -35,9 +35,10 @@ engine scores the full candidate set — same results by construction
 
     tokens   = explode(tokenize(prop))          -- narrow
     wide     = groupBy(id).agg(len, f_t ...)    -- ONE shuffle on id
-    stats    = N, avgdl, df_t — from the PRECOMPUTED stats tables when
+    stats    = N, avgdl, df_t — from the driver-side CorpusStats when
                given (the prop_length_tracker/inverted-statistics
-               analogue; build_bm25_stats), else one tiny agg over wide
+               analogue; build_bm25_index + load_stats), else one tiny
+               agg over wide
     score    = per-row expression over wide     -- narrow
     topk     = orderBy(score desc, id asc).limit(k)  -- TakeOrdered
 
@@ -47,7 +48,10 @@ inverted segments), a keyword query tokenizes NOTHING — term
 frequencies come from a term-filtered postings lookup (partition/
 bucket by term at scale => the scan reads only the query terms' rows)
 and lengths from the doclen table; a where-filter semi-joins the
-candidate ids. Locally the postings frame is a cached DataFrame.
+candidate ids. The build tokenizes each property once, into one
+postings frame materialized once; the corpus statistics (N, avgdl per
+property, the term_df table) live on the driver, loaded once per
+source stamp, so a read looks up its terms without a Spark job.
 Without the tables, the one wide aggregation over the corpus serves
 both stats and scoring (cached, released on the next query via
 release_caches).
@@ -56,7 +60,7 @@ release_caches).
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,9 +70,7 @@ from weaviate_spark.filters import Clause, apply_where
 from weaviate_spark.functions.text import (
     StopwordConfig,
     sql_tokens,
-    tokenize,
     tokenize_for_class,
-    tokenize_py,
 )
 from weaviate_spark import registry
 from weaviate_spark.sources.tables import load_table, source_paths
@@ -79,7 +81,7 @@ AVGDL_FALLBACK = 40.0  # bm25_searcher.go:452-453
 
 # per-query scratch caches live in weaviate_spark.cache (released at every
 # top-level query entry); re-exported here for backward compatibility
-from weaviate_spark.cache import local_df, ensure_min_partitions, register_cache, release_caches, session_key  # noqa: E402,F401
+from weaviate_spark.cache import ensure_min_partitions, register_cache, release_caches, session_key  # noqa: E402,F401
 
 
 @dataclass
@@ -100,13 +102,28 @@ class CorpusStats:
     lengths from the doclen table — the same work the reference's
     keyword search does against its LSM inverted segments. At scale
     these are written tables partitioned/bucketed by term, so a query
-    reads only its own terms' row groups."""
+    reads only its own terms' row groups.
+
+    ``term_df`` is the whole (prop, term, df) table on the driver, as
+    Arrow: a read looks up its own terms with ``doc_freq``, no job."""
 
     n_docs: float                               # collection-wide object count
     avg_len: dict[str, float]                   # prop -> mean token count
-    term_n: dict[tuple[str, str], float]        # (prop, term) -> doc freq
+    term_df: "pa.Table"                         # (prop, term, df)
     postings: Optional[DataFrame] = None        # (prop, _doc, _term, _f)
     doclen: Optional[DataFrame] = None          # (prop, _doc, _len)
+
+    def doc_freq(self, prop: str, terms: Sequence[str]) -> dict[str, float]:
+        """term -> document frequency in ``prop`` (0 for an unseen
+        term). term_df may hold several rows per key — the base build
+        plus one delta row per incremental append — so rows are summed."""
+        import pyarrow.compute as pc
+
+        out = dict.fromkeys(terms, 0.0)
+        for r in self.term_df.filter((pc.field("prop") == prop)
+                                     & pc.field("term").isin(list(terms))).to_pylist():
+            out[r["term"]] += r["df"]
+        return out
 
 
 @dataclass
@@ -156,9 +173,8 @@ def build_bm25_index(
     id_col: str,
     fold: bool = False,
     class_name: str = "",
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Full inverted-index analogue, ONE tokenize pass per property over
-    the UNFILTERED corpus:
+) -> tuple["pa.Table", "pa.Table", DataFrame, DataFrame]:
+    """Full inverted-index analogue over the UNFILTERED corpus:
 
     corpus_stats: (prop, n_docs, n_docs_with_prop, sum_len) — mergeable
                   sums, so incremental appends are delta rows
@@ -166,99 +182,82 @@ def build_bm25_index(
     postings:     (prop, _doc, _term, _f) — per-doc term frequencies
     doclen:       (prop, _doc, _len) — per-doc token counts
 
-    Persist all four as tables (postings partitioned/bucketed by term at
-    scale) and refresh on ingest, exactly like the reference's prop
-    length tracker + LSM inverted segments; query-time BM25 then never
-    tokenizes a document.
+    Each property is tokenized ONCE, into one postings frame that is
+    materialized once (localCheckpoint); doclen and term_df derive from
+    it. The corpus statistics are metrics observed on that same pass
+    (no job of their own), and term_df is collected once: both come
+    back as driver-side Arrow tables, postings and doclen as frames.
+    Doc ids are unique (``id_col``), so a row with tokens is one
+    document holding the property. Persist all four as tables (postings
+    partitioned/bucketed by term at scale) and refresh on ingest,
+    exactly like the reference's prop length tracker + LSM inverted
+    segments; query-time BM25 then never tokenizes a document.
     """
-    n_docs = corpus.count()
-    stat_rows = []
-    term_frames, post_frames, len_frames = [], [], []
-    corpus = ensure_min_partitions(corpus)
-    for prop in properties:
-        toks = corpus.select(
-            F.col(id_col).alias("_doc"),
-            F.explode(tokenize_for_class(
-                F.col(prop.name), prop.tokenization, class_name,
-                fold=fold)).alias("_term"),
-        )
-        per_doc = toks.groupBy("_doc", "_term").agg(F.count(F.lit(1)).alias("_f"))
-        post_frames.append(per_doc.select(
-            F.lit(prop.name).alias("prop"), "_doc", "_term", "_f"
-        ))
-        lens = per_doc.groupBy("_doc").agg(F.sum("_f").alias("_len"))
-        len_frames.append(lens.select(F.lit(prop.name).alias("prop"), "_doc", "_len"))
-        srow = lens.agg(
-            F.count(F.lit(1)).alias("nd"), F.sum("_len").alias("sl")
-        ).collect()[0]
-        stat_rows.append((prop.name, n_docs, srow["nd"], int(srow["sl"] or 0)))
-        term_frames.append(
-            per_doc.groupBy("_term").agg(F.count(F.lit(1)).alias("df")).select(
-                F.lit(prop.name).alias("prop"), F.col("_term").alias("term"), "df"
-            )
-        )
-    spark = corpus.sparkSession
-    corpus_stats = local_df(
-        spark,
-        stat_rows, "prop string, n_docs long, n_docs_with_prop long, sum_len long"
+    import pyarrow as pa
+    from pyspark.sql import Observation
+
+    toks = ensure_min_partitions(corpus).select(
+        F.col(id_col).alias("_doc"),
+        *[tokenize_for_class(F.col(p.name), p.tokenization, class_name,
+                             fold=fold).alias(f"_t{i}")
+          for i, p in enumerate(properties)],
     )
+    seen = Observation()
+    n_toks = [f"CASE WHEN size(_t{i}) > 0 THEN size(_t{i}) ELSE 0 END"
+              for i in range(len(properties))]
+    toks = toks.observe(
+        seen, F.count(F.lit(1)).alias("n"),
+        *[F.expr(f"count_if({n} > 0)").alias(f"nd{i}") for i, n in enumerate(n_toks)],
+        *[F.expr(f"sum({n})").alias(f"sl{i}") for i, n in enumerate(n_toks)],
+    )
+    # clustered by term bucket, the partition column of the written
+    # table: the aggregation needs no shuffle of its own, and the write
+    # (_write_index_tables) none either
+    post = (
+        toks.select("_doc", F.inline(F.array(*[
+            F.struct(F.lit(p.name).alias("prop"), F.col(f"_t{i}").alias("_toks"))
+            for i, p in enumerate(properties)])))
+        .select("prop", "_doc", F.explode("_toks").alias("_term"))
+        .withColumn("_tb", F.crc32(F.col("_term")) % TERM_BUCKETS)
+        .repartition("_tb")
+        .groupBy("_tb", "prop", "_doc", "_term").agg(F.count(F.lit(1)).alias("_f"))
+        .localCheckpoint(eager=True)
+        .select("prop", "_doc", "_term", "_f")
+    )
+    got = seen.get
+    corpus_stats = pa.table({
+        "prop": pa.array([p.name for p in properties], pa.string()),
+        "n_docs": pa.array([got["n"]] * len(properties), pa.int64()),
+        "n_docs_with_prop": pa.array(
+            [got[f"nd{i}"] for i in range(len(properties))], pa.int64()),
+        "sum_len": pa.array(
+            [got[f"sl{i}"] or 0 for i in range(len(properties))], pa.int64()),
+    })
+    term_df = (
+        post.groupBy("prop", F.col("_term").alias("term"))
+        .agg(F.count(F.lit(1)).alias("df")).toArrow()
+    )
+    doclen = post.groupBy("prop", "_doc").agg(F.sum("_f").alias("_len"))
+    return corpus_stats, term_df, post, doclen
 
-    def _union(frames):
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
 
-    return corpus_stats, _union(term_frames), _union(post_frames), _union(len_frames)
-
-
-def build_bm25_stats(
-    corpus: DataFrame,
-    properties: Sequence[BM25Prop],
-    id_col: str,
-    fold: bool = False,
-    class_name: str = "",
-) -> tuple[DataFrame, DataFrame]:
-    """(corpus_stats, term_df) — the scalar-statistics subset of
-    `build_bm25_index`, kept for callers that only need N/avgdl/df."""
-    cs, tdf, _post, _dl = build_bm25_index(
-        corpus, properties, id_col, fold, class_name=class_name)
-    return cs, tdf
-
-
-def load_stats(
-    corpus_stats: DataFrame,
-    term_df: DataFrame,
-    needed: dict[str, Sequence[str]] | None = None,
-) -> CorpusStats:
-    """Collect the (tiny) stats needed for a query from the materialized
-    tables. `needed`: prop -> query terms; when given, only those term_df
-    rows move to the driver (a few rows, not the vocabulary).
+def load_stats(corpus_stats: "pa.Table", term_df: "pa.Table") -> CorpusStats:
+    """The driver-side statistics of an index from its two small tables.
 
     Both tables may carry MULTIPLE rows per key — the base build plus
     one delta row per incremental append (advance_bm25_artifacts); the
     stored stats are mergeable sums (sum_len, not avg_len), so loading
-    is a per-key sum followed by one division for the mean."""
+    is a per-key sum followed by one division for the mean (term_df
+    rows are summed per lookup, CorpusStats.doc_freq)."""
     per: dict[str, list[int]] = {}
-    for r in corpus_stats.collect():
+    for r in corpus_stats.to_pylist():
         a = per.setdefault(r["prop"], [0, 0, 0])
         a[0] += r["n_docs"]
         a[1] += r["n_docs_with_prop"]
         a[2] += r["sum_len"]
     n_docs = float(next(iter(per.values()))[0]) if per else 0.0
     avg_len = {p: (a[2] / a[1] if a[1] else 0.0) for p, a in per.items()}
-    tdf = term_df
-    if needed is not None:
-        cond = None
-        for prop, terms in needed.items():
-            c = (F.col("prop") == prop) & F.col("term").isin(list(terms))
-            cond = c if cond is None else (cond | c)
-        tdf = tdf.where(cond if cond is not None else F.lit(False))
-    term_n: dict[tuple[str, str], float] = {}
-    for r in tdf.collect():
-        k = (r["prop"], r["term"])
-        term_n[k] = term_n.get(k, 0.0) + float(r["df"])
-    return CorpusStats(n_docs=n_docs, avg_len=avg_len, term_n=term_n)
+    return CorpusStats(n_docs=n_docs, avg_len=avg_len, term_df=term_df)
 
 
 # Materialized stats tables — the Spark analogue of the reference's
@@ -295,11 +294,12 @@ _artifact_lock = threading.RLock()
 
 def _load_or_build_index_tables(
     corpus: DataFrame, spec: "BM25Spec", table_key: tuple
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """File-backed index tables: read the written artifact if present,
-    else build + write + read back. Reading back (instead of caching the
-    build lineage) makes every later query a parquet scan with term /
-    prop pushdown — the plan never re-tokenizes the corpus."""
+) -> tuple[CorpusStats, DataFrame, DataFrame]:
+    """(driver-side statistics, postings, doclen) of the index: read
+    from the written artifact if present, else built, written, and
+    served from the frames just built. A reload reads the two small
+    tables to the driver and the two large ones as parquet scans with
+    term / prop pushdown — the plan never re-tokenizes the corpus."""
     import hashlib
     import os
     import re
@@ -310,8 +310,10 @@ def _load_or_build_index_tables(
     spark = corpus.sparkSession
     if fp is None:
         # synthetic / in-memory corpus: session-scoped build, no artifact
-        return build_bm25_index(corpus, spec.properties, spec.id_col,
-                                spec.fold, class_name=spec.collection)
+        cs, tdf, post, dl = build_bm25_index(
+            corpus, spec.properties, spec.id_col, spec.fold,
+            class_name=spec.collection)
+        return load_stats(cs, tdf), post, dl.cache()
     tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir.strip("/"))
     fp_h = hashlib.md5(fp.encode()).hexdigest()[:12]
     from weaviate_spark.functions.text import user_dict_digest
@@ -328,60 +330,78 @@ def _load_or_build_index_tables(
         # in-flight advance/compact for the same collection (the rename
         # in advance_bm25_artifacts must not race the mkdir here)
         with _artifact_lock:
-            return _build_index_artifact(corpus, spec, root, coll_root, fp_h, done)
-    cs = spark.read.parquet(f"{root}/corpus_stats")
-    tdf = spark.read.parquet(f"{root}/term_df")
+            if not os.path.exists(done):
+                return _build_index_artifact(corpus, spec, root, coll_root, fp_h, done)
+    stats = load_stats(spark.read.parquet(f"{root}/corpus_stats").toArrow(),
+                       spark.read.parquet(f"{root}/term_df").toArrow())
+    return (stats, *_read_index_frames(spark, root))
+
+
+def _read_index_frames(spark: SparkSession, root: str
+                       ) -> tuple[DataFrame, DataFrame]:
+    """The written postings and doclen tables, memory-cached for repeat
+    queries when CACHE_INDEX_TABLES (the local analogue of OS page cache
+    + executor block cache); at 100 TB you leave this off and rely on
+    the term-bucket partition pruning of the file-backed scan, which
+    tests/test_bm25.py pins with the flag disabled."""
     post = spark.read.parquet(f"{root}/postings")
     dl = spark.read.parquet(f"{root}/doclen")
-    return cs, tdf, post, dl
+    return (post.cache(), dl.cache()) if CACHE_INDEX_TABLES else (post, dl)
+
+
+def _write_index_tables(root: str, mode: str, cs: "pa.Table", tdf: "pa.Table",
+                        post: DataFrame, dl: DataFrame) -> None:
+    """Write (``mode`` overwrite) or append the four index tables:
+    postings partitioned by a term hash bucket, doclen by prop.
+    ``post`` comes from build_bm25_index, already clustered by bucket,
+    so each bucket is written by one task, as one file."""
+    spark = post.sparkSession
+    spark.createDataFrame(cs).write.mode(mode).parquet(f"{root}/corpus_stats")
+    spark.createDataFrame(tdf).write.mode(mode).parquet(f"{root}/term_df")
+    (
+        post.withColumn("_tb", F.crc32(F.col("_term")) % TERM_BUCKETS)
+        .write.partitionBy("_tb").mode(mode)
+        .parquet(f"{root}/postings")
+    )
+    dl.write.partitionBy("prop").mode(mode).parquet(f"{root}/doclen")
 
 
 def _build_index_artifact(
     corpus: DataFrame, spec: "BM25Spec", root: str, coll_root: str,
     fp_h: str, done: str
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+) -> tuple[CorpusStats, DataFrame, DataFrame]:
+    import json
     import os
+    import shutil
 
-    spark = corpus.sparkSession
-    if not os.path.exists(done):
-        # GC artifacts of SUPERSEDED source fingerprints of this
-        # collection (other property sets on the live source survive)
-        import shutil
-
-        if os.path.isdir(coll_root):
-            for old in os.listdir(coll_root):
-                if old != fp_h:
-                    shutil.rmtree(os.path.join(coll_root, old), ignore_errors=True)
-        cs, tdf, post, dl = build_bm25_index(
-            corpus, spec.properties, spec.id_col, spec.fold,
-            class_name=spec.collection,
-        )
-        post = post.withColumn("_tb", F.crc32(F.col("_term")) % TERM_BUCKETS)
-        cs.write.mode("overwrite").parquet(f"{root}/corpus_stats")
-        tdf.write.mode("overwrite").parquet(f"{root}/term_df")
-        (
-            post.repartition(F.col("_tb"))
-            .write.partitionBy("_tb").mode("overwrite")
-            .parquet(f"{root}/postings")
-        )
-        dl.write.partitionBy("prop").mode("overwrite").parquet(f"{root}/doclen")
-        # manifest: lets advance_bm25_artifacts rebuild THIS property
-        # set's delta frames for an appended batch (props_h is a hash —
-        # not invertible without it)
-        import json
-
-        with open(f"{root}/props.json", "w") as mf:
-            json.dump({
-                "properties": [[p.name, p.tokenization] for p in spec.properties],
-                "id_col": spec.id_col,
-                "fold": spec.fold,
-            }, mf)
-        open(done, "w").close()
-    cs = spark.read.parquet(f"{root}/corpus_stats")
-    tdf = spark.read.parquet(f"{root}/term_df")
-    post = spark.read.parquet(f"{root}/postings")
-    dl = spark.read.parquet(f"{root}/doclen")
-    return cs, tdf, post, dl
+    # GC artifacts of SUPERSEDED source fingerprints of this
+    # collection (other property sets on the live source survive)
+    if os.path.isdir(coll_root):
+        for old in os.listdir(coll_root):
+            if old != fp_h:
+                shutil.rmtree(os.path.join(coll_root, old), ignore_errors=True)
+    cs, tdf, post, dl = build_bm25_index(
+        corpus, spec.properties, spec.id_col, spec.fold,
+        class_name=spec.collection,
+    )
+    if CACHE_INDEX_TABLES:
+        # postings is already materialized (the build's checkpoint);
+        # doclen's cache fills while it is written below
+        dl = dl.cache()
+    _write_index_tables(root, "overwrite", cs, tdf, post, dl)
+    # manifest: lets advance_bm25_artifacts rebuild THIS property
+    # set's delta frames for an appended batch (props_h is a hash —
+    # not invertible without it)
+    with open(f"{root}/props.json", "w") as mf:
+        json.dump({
+            "properties": [[p.name, p.tokenization] for p in spec.properties],
+            "id_col": spec.id_col,
+            "fold": spec.fold,
+        }, mf)
+    open(done, "w").close()
+    if not CACHE_INDEX_TABLES:
+        post, dl = _read_index_frames(corpus.sparkSession, root)
+    return load_stats(cs, tdf), post, dl
 
 
 def compact_bm25_artifacts(
@@ -394,7 +414,8 @@ def compact_bm25_artifacts(
     periodically on a heavily-appended collection so per-query reads
     stay a few files per term bucket. Returns the number of property
     sets compacted. Contents are value-identical before and after
-    (load_stats sums per key either way; tests pin score equality)."""
+    (the driver-side stats sum per key either way; tests pin score
+    equality)."""
     import hashlib
     import os
     import re
@@ -488,8 +509,8 @@ def advance_bm25_artifacts(
     * postings/doclen: append the batch's rows (same term-bucket / prop
       partitioning — new parquet segment files, O(batch))
     * term_df / corpus_stats: append DELTA rows; the stored stats are
-      mergeable sums, load_stats sums per key at read (O(batch) write,
-      the per-query read stays a few rows)
+      mergeable sums, summed per key on the driver (O(batch) write,
+      read once per stamp)
     * the artifact dir is renamed from the pre-write source fingerprint
       to the post-write one (O(1)): the artifact is re-stamped, so the
       session handles (stale by their own stamp) reload the ADVANCED
@@ -545,20 +566,12 @@ def advance_bm25_artifacts(
                 batch_df, props, m["id_col"], m["fold"],
                 class_name=collection,
             )
-            post = post.withColumn("_tb", F.crc32(F.col("_term")) % TERM_BUCKETS)
             # marker discipline: the commit marker is ABSENT while the
             # four appends land, so a crash mid-append leaves an
             # uncommitted artifact that the next query rebuilds instead
             # of silently serving half-advanced stats
             os.remove(done)
-            cs.write.mode("append").parquet(f"{root}/corpus_stats")
-            tdf.write.mode("append").parquet(f"{root}/term_df")
-            (
-                post.repartition(F.col("_tb"))
-                .write.partitionBy("_tb").mode("append")
-                .parquet(f"{root}/postings")
-            )
-            dl.write.partitionBy("prop").mode("append").parquet(f"{root}/doclen")
+            _write_index_tables(root, "append", cs, tdf, post, dl)
             open(done, "w").close()
 
 
@@ -567,9 +580,10 @@ def with_materialized_stats(
 ) -> BM25Spec:
     """Return a spec whose ``stats`` (including the postings/doclen
     inverted-index tables) come from the session-level materialized
-    tables (built on first use). Query-time cost after the build: two
-    tiny collects plus a term-filtered postings lookup — no document is
-    tokenized, no corpus scan."""
+    tables (built on first use). Query-time cost after the build: a
+    driver-side lookup of the query terms' document frequencies plus a
+    term-filtered postings lookup — no Spark job before the query's
+    own, no document tokenized, no corpus scan."""
     if spec.stats is not None:
         return spec
     from weaviate_spark.functions.text import user_dict_digest
@@ -582,31 +596,11 @@ def with_materialized_stats(
     # rebuilds the reference's tokenizers the same way)
     variant = (*table_key[2:], props_key, spec.fold,
                user_dict_digest(spec.collection))
-
-    def _build():
-        cs, tdf, post, dl = _load_or_build_index_tables(corpus, spec, table_key)
-        cs, tdf = cs.cache(), tdf.cache()
-        cs.count(), tdf.count()
-        if CACHE_INDEX_TABLES:
-            # memory-cache the written tables for repeat queries (the
-            # local analogue of OS page cache + executor block cache);
-            # at 100 TB you leave this off and rely on the term-bucket
-            # partition pruning of the file-backed scan, which
-            # tests/test_bm25.py pins with the flag disabled
-            post, dl = post.cache(), dl.cache()
-        return cs, tdf, post, dl, {}
-
-    cs, tdf, post, dl, memo = registry.resolve(
+    # postings/doclen sit beside the stats so the registry releases them
+    stats, post, dl = registry.resolve(
         corpus.sparkSession, "bm25", source_paths(*table_key[:2]), variant,
-        _build)
-    needed = {p: sorted(t) for p, t in _query_analysis(spec).items() if t}
-    terms = tuple(sorted((p, tuple(t)) for p, t in needed.items()))
-    if terms not in memo:
-        # two tiny collects (one stats row per prop + one df row per
-        # query term), outside the entry lock; memoized per term set so
-        # repeated queries skip the jobs (a race computes it twice)
-        memo[terms] = load_stats(cs, tdf, needed)
-    return replace(spec, stats=replace(memo[terms], postings=post, doclen=dl))
+        lambda: _load_or_build_index_tables(corpus, spec, table_key))
+    return replace(spec, stats=replace(stats, postings=post, doclen=dl))
 
 
 def _resolve_spec(spec: BM25Spec) -> BM25Spec:
@@ -741,7 +735,7 @@ def bm25_score_df(
                     df.select(F.col(id_col).alias("_doc")), "_doc", "semi"
                 )
             per_prop.append((prop, wide, qboost,
-                             {t: spec.stats.term_n.get((prop.name, t), 0.0) for t in terms},
+                             spec.stats.doc_freq(prop.name, terms),
                              spec.stats.avg_len.get(prop.name, 0.0)))
             continue
         # with precomputed stats only candidates are tokenized; otherwise
@@ -766,7 +760,7 @@ def bm25_score_df(
 
         if stats_from_tables:
             avg = spec.stats.avg_len.get(prop.name, 0.0)
-            n_t = {t: spec.stats.term_n.get((prop.name, t), 0.0) for t in terms}
+            n_t = spec.stats.doc_freq(prop.name, terms)
         else:
             # per-query stats over the unfiltered corpus: cache the wide
             # frame — the stats agg and the scoring projection both read it

@@ -104,28 +104,15 @@ def _corpus_rows(spark: SparkSession, sf_dir: str, collection: str, df: DataFram
 
 
 def with_distance(df: DataFrame, spec: NearVectorSpec) -> DataFrame:
-    from weaviate_spark.cache import memo_column
+    if spec.metric == "cosine":
+        from weaviate_spark.functions.distance import cosine_distance_const_query
 
-    def _build():
-        if spec.metric == "cosine":
-            from weaviate_spark.functions.distance import cosine_distance_const_query
-
-            d = cosine_distance_const_query(F.col(spec.vector_col), spec.vector)
-        else:
-            q = F.array(*[F.lit(float(x)) for x in spec.vector])
-            d = distance(F.col(spec.vector_col), q, spec.metric)
-        if spec.round_digits is not None:
-            d = F.round(d, spec.round_digits)
-        return d
-
-    # the distance expression embeds the query vector as ~dim literals
-    # plus zip_with/aggregate lambdas — ~100 ms of py4j construction per
-    # build; memoized per (metric, vector, column, rounding)
-    d = memo_column(
-        ("with_distance", spec.metric, spec.vector_col, spec.round_digits,
-         tuple(float(x) for x in spec.vector)),
-        _build,
-    )
+        d = cosine_distance_const_query(F.col(spec.vector_col), spec.vector)
+    else:
+        d = distance(F.col(spec.vector_col), lit_double_array(spec.vector),
+                     spec.metric)
+    if spec.round_digits is not None:
+        d = F.round(d, spec.round_digits)
     return df.withColumn("_distance", d)
 
 
