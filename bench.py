@@ -3,7 +3,9 @@
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>}
+   "queries": {name: sec, ...}, "cold": {...}, "plan_sha": {...},
+   "layers": {name: {build_s, exec_s, jobs, stages, tasks}, ...},
+   "sf": <sf>, "calibration": {...}}
 
 Each headline query is materialized via a count() of the result (the
 driver collects separately for correctness; here we want pure engine
@@ -19,6 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from weaviate_spark.plans.profile import job_group_counts, plan_sha  # noqa: E402
 from weaviate_spark.session import get_spark  # noqa: E402
 
 # one representative per SURVEY §2 family (BASELINE.md bench plan)
@@ -101,18 +104,10 @@ def main() -> None:
     # each query's NORMALIZED executed plan (expression ids, codegen
     # numbering, and paths stripped) so a plan change is detectable
     # separately from machine noise: same hash + different time = the
-    # machine, different hash = the code.
-    import hashlib
-    import re
-
-    def plan_sha(df) -> str:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        norm = re.sub(r"#\d+[A-Za-z]*", "#", plan)       # expr ids
-        norm = re.sub(r"\[plan_id=\d+\]", "", norm)       # exchange ids
-        norm = re.sub(r"\(\d+\)", "()", norm)             # codegen ids
-        norm = re.sub(r"file:[^,\]\s]+", "file:", norm)   # local paths
-        norm = re.sub(r"\d+\.\d+ [KMG]i?B", "", norm)     # size stats
-        return hashlib.sha256(norm.encode()).hexdigest()[:12]
+    # machine, different hash = the code. "layers" splits the LAST
+    # steady run into driver build and execution time and records the
+    # jobs, stages and tasks it ran under its own job group; every
+    # py4j call for that record happens outside the run's timer.
 
     # Contention sentinel (r09 verdict ask #2): the driver's BENCH_r09
     # recorded 2.7x the builder's own number with IDENTICAL plan hashes
@@ -155,21 +150,27 @@ def main() -> None:
     times: dict[str, float] = {}
     cold: dict[str, float] = {}
     plans: dict[str, str] = {}
+    layers: dict[str, dict] = {}
+    sc = spark.sparkContext
     for name in HEADLINE:
         fn = QUERIES.get(name)
         if fn is None:
             continue
         runs = []
         for i in range(6):
+            if i == 5:
+                sc.setJobGroup(f"bench:{name}", name, False)
             t0 = time.time()
             out = fn(spark, sf_dir)
+            t1 = time.time()
             out.count()
-            runs.append(round(time.time() - t0, 3))
+            t2 = time.time()
+            runs.append(round(t2 - t0, 3))
             if i == 0:
-                try:
-                    plans[name] = plan_sha(out)
-                except Exception:
-                    plans[name] = "n/a"
+                plans[name] = plan_sha(out)
+        sc._jsc.clearJobGroup()
+        layers[name] = {"build_s": round(t1 - t0, 3), "exec_s": round(t2 - t1, 3),
+                        **job_group_counts(sc, f"bench:{name}")}
         cold[name] = runs[0]
         times[name] = sorted(runs[1:])[2]  # median of the 5 steady runs
 
@@ -193,6 +194,7 @@ def main() -> None:
         "cold_value": round(sum(cold.values()), 3),
         "cold": cold,
         "plan_sha": plans,
+        "layers": layers,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "calibration": {
             "query": CAL_QUERY, "sf_dir": CAL_SF_DIR,

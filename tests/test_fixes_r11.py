@@ -269,7 +269,7 @@ def test_hybrid_executed_scan_budget(spark, sf_dir):
     collection — and total executed cache reads stay within the
     <=2-per-leg budget (2 legs + capped leg-frame caches => <=6)."""
     from weaviate_spark.entry_queries import QUERIES
-    from weaviate_spark.plans.audit import executed_node_counts
+    from weaviate_spark.plans.profile import executed_node_counts
 
     for name, imts_budget in (("hybrid_relative_score", 6),
                               ("hybrid_rrf", 6)):

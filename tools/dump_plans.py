@@ -7,11 +7,14 @@ Usage: python tools/dump_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
+from weaviate_spark.plans.profile import executed_node_counts  # noqa: E402
 from weaviate_spark.session import get_spark  # noqa: E402
 
 INTERESTING = [
@@ -80,29 +83,9 @@ INTERESTING = [
     "crud_table_changes",
 ]
 
-MARKERS = [
-    "PushedFilters", "PartitionFilters", "BroadcastHashJoin",
-    "SortMergeJoin", "TakeOrderedAndProject", "HashAggregate",
-    "WholeStageCodegen", "InMemoryTableScan", "Bucketed: true",
-]
-
-
-def marker_counts(plan: str) -> dict[str, int]:
-    counts = {m: plan.count(m) for m in MARKERS if plan.count(m)}
-    # "Exchange" alone conflates the expensive kind with the cheap ones:
-    # split shuffles (hash/range/single partitioning) from broadcasts
-    # and reused (zero-cost reference to an already-executed exchange).
-    shuffle = len(re.findall(
-        r"(?<![A-Za-z])Exchange (?:hashpartitioning|rangepartitioning|SinglePartition)",
-        plan,
-    ))
-    if shuffle:
-        counts["ShuffleExchange"] = shuffle
-    for kind in ("BroadcastExchange", "ReusedExchange"):
-        n = len(re.findall(r"(?<![A-Za-z])" + kind, plan))
-        if n:
-            counts[kind] = n
-    return counts
+# scan attributes the node census cannot show; node counts (joins,
+# aggregates, exchanges, cached reads) come from the executed tree
+MARKERS = ["PushedFilters", "PartitionFilters", "Bucketed: true"]
 
 
 def prune_cached_lineage(plan: str) -> str:
@@ -138,15 +121,16 @@ def main() -> None:
         "# PLANS — executed physical plan evidence (auto-generated by "
         "tools/dump_plans.py)\n",
         f"Scale factor dir: `{sf_dir}`. For each headline query: the "
-        "plan-shape markers found in the executed plan (counts), plus "
-        "scan lines showing pushdown. Cached lineage is PRUNED before "
-        "counting: an InMemoryTableScan executes as one cached read, so "
-        "the InMemoryRelation subtree it prints inline (the cache's "
-        "one-time build plan) is stripped — marker counts reflect "
-        "executed per-query work. The `executed tree` line is the "
-        "authoritative count (weaviate_spark/plans/audit.py walks the "
-        "JVM plan tree): real `scan:<table>` data-source scans, cached "
-        "reads, executed vs reused exchanges. Budget pinned by test: "
+        "scan attributes found in the executed plan text (counts), the "
+        "executed node census, and scan lines showing pushdown. Cached "
+        "lineage is PRUNED from the text: an InMemoryTableScan executes "
+        "as one cached read, so the InMemoryRelation subtree it prints "
+        "inline (the cache's one-time build plan) is stripped. The "
+        "`executed tree` line counts every executed node by name "
+        "(weaviate_spark/plans/profile.py walks the JVM plan tree), with "
+        "real `scan:<table>` data-source scans, cached reads, and "
+        "shuffle, broadcast and reused exchanges split out. Budget "
+        "pinned by test: "
         "hybrid queries scan the corpus parquet ZERO times per query "
         "(all corpus reads are cached) with <=6 cache reads "
         "(tests/test_fixes_r11.py::test_hybrid_executed_scan_budget).\n",
@@ -160,7 +144,7 @@ def main() -> None:
         plan = prune_cached_lineage(
             df._jdf.queryExecution().executedPlan().toString()
         )
-        counts = marker_counts(plan)
+        counts = {m: plan.count(m) for m in MARKERS if m in plan}
         scans = [
             re.sub(r"#\d+L?", "", ln.strip())[:220]
             for ln in plan.splitlines()
@@ -168,9 +152,6 @@ def main() -> None:
         ]
         # executed-TREE audit (r10 verdict ask #4): even the pruned
         # text can over-count; the tree walk reports what actually ran
-        # (real scans per table, cached reads, reused exchanges)
-        from weaviate_spark.plans.audit import executed_node_counts
-
         tree = executed_node_counts(df)
         out.append(f"## {name}\n")
         out.append(
@@ -184,7 +165,7 @@ def main() -> None:
             out.append(f"- `{s}`\n")
         out.append("\n")
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 
