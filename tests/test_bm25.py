@@ -342,7 +342,7 @@ def test_written_stats_tables_prune_and_skip_tokenize(spark, sf_dir):
         marker = None
         for dirpath, _, filenames in os.walk(BM25_ARTIFACT_ROOT):
             for f in filenames:
-                if f == "_ALL_TABLES_COMMITTED":
+                if f == "_COMMITTED":
                     marker = os.path.join(dirpath, f)
         assert marker is not None
         mtime = os.path.getmtime(marker)
@@ -388,7 +388,7 @@ def test_incremental_bm25_artifact_advance(spark, tmp_path):
     marker = None
     for dirpath, _, filenames in os.walk(bm25_mod.BM25_ARTIFACT_ROOT):
         for f in filenames:
-            if f == "_ALL_TABLES_COMMITTED" and tag in dirpath:
+            if f == "_COMMITTED" and tag in dirpath:
                 marker = os.path.join(dirpath, f)
     assert marker is not None
     # sentinel: survives the advance's rename+append; a full rebuild
@@ -419,7 +419,7 @@ def test_incremental_bm25_artifact_advance(spark, tmp_path):
     # the dir without it), and exactly one committed artifact exists
     found = []
     for dirpath, _, filenames in os.walk(bm25_mod.BM25_ARTIFACT_ROOT):
-        if tag in dirpath and "_ALL_TABLES_COMMITTED" in filenames:
+        if tag in dirpath and "_COMMITTED" in filenames:
             found.append((dirpath, sentinel_name in filenames))
     assert found == [(found[0][0], True)]
     registry.clear()
@@ -526,6 +526,7 @@ def test_compaction_beside_first_query_on_new_property_set(
     from weaviate_spark.operators.bm25 import (
         BM25Prop, BM25Spec, bm25_search, compact_bm25_artifacts,
     )
+    from weaviate_spark.sources import artifacts
 
     registry.clear()
     sf = str(tmp_path / "sf")
@@ -560,7 +561,7 @@ def test_compaction_beside_first_query_on_new_property_set(
 
     def compact():
         try:
-            with bm25_mod._artifact_lock:
+            with artifacts.LOCK:
                 querier.start()
                 assert building.wait(60)
                 got["compacted"] = compact_bm25_artifacts(spark, sf, "docs")

@@ -87,13 +87,30 @@ def test_shard_status_wired_to_storagestate(sf_dir, clean_status):
     assert not shard["loaded"] and shard["object_count"] == 0
 
 
-def test_compressed_detects_vector_artifacts(sf_dir, tmp_path, monkeypatch):
-    from weaviate_spark.operators import quantization as Q
+def test_compressed_detects_vector_artifacts(spark, sf_dir, tmp_path,
+                                             monkeypatch):
+    import shutil
 
-    monkeypatch.setattr(Q, "VECTOR_ARTIFACT_ROOT", str(tmp_path))
-    assert not N._is_compressed("embeddings")
-    os.makedirs(tmp_path / "bq-abc123" / "embeddings" / "v1")
-    assert N._is_compressed("embeddings")
+    from weaviate_spark.operators import quantization as Q
+    from weaviate_spark.operators.similarity import _nng_artifact_dir
+    from weaviate_spark.sources import artifacts
+
+    monkeypatch.setattr(Q, "VECTOR_ARTIFACT_ROOT", str(tmp_path / "vec"))
+    assert not N._is_compressed(sf_dir, "embeddings")
+    # a committed NN graph is an index, not a compressed one
+    nng = _nng_artifact_dir(sf_dir, "embeddings", 5, 1, "vec_id",
+                            "embedding", 4, 42)
+    artifacts.build(nng, lambda r: os.makedirs(f"{r}/graph"))
+    assert not N._is_compressed(sf_dir, "embeddings")
+    # another sf's BQ codes say nothing about this one
+    other = tmp_path / "other_sf"
+    other.mkdir()
+    shutil.copy(f"{sf_dir}/embeddings.parquet", other / "embeddings.parquet")
+    assert Q.build_bq_artifact(spark, str(other), "embeddings")
+    assert not N._is_compressed(sf_dir, "embeddings")
+    assert N._is_compressed(str(other), "embeddings")
+    assert Q.build_bq_artifact(spark, sf_dir, "embeddings")
+    assert N._is_compressed(sf_dir, "embeddings")
     st = N.local_node_status(sf_dir, output="verbose",
                              class_name="embeddings")
     (shard,) = st["shards"]

@@ -214,7 +214,7 @@ def test_stream_ingest_maintains_bm25_and_dedup(spark, tmp_path):
     tag = re.sub(r"[^A-Za-z0-9]+", "_", sf.strip("/"))
     markers = [os.path.join(dp, f)
                for dp, _, fs in os.walk(bm25_mod.BM25_ARTIFACT_ROOT)
-               for f in fs if f == "_ALL_TABLES_COMMITTED" and tag in dp]
+               for f in fs if f == "_COMMITTED" and tag in dp]
     assert len(markers) == 1
     # sentinel: survives the per-batch advance (rename+append); a full
     # rebuild would recreate the artifact dir without it
@@ -244,7 +244,7 @@ def test_stream_ingest_maintains_bm25_and_dedup(spark, tmp_path):
     # one committed artifact exists (a rebuild would have dropped it)
     found = [(dp, "_SENTINEL_NOT_REBUILT" in fs)
              for dp, _, fs in os.walk(bm25_mod.BM25_ARTIFACT_ROOT)
-             if tag in dp and "_ALL_TABLES_COMMITTED" in fs]
+             if tag in dp and "_COMMITTED" in fs]
     assert found == [(found[0][0], True)]
 
     grown = spark.read.parquet(tgt)

@@ -8,7 +8,7 @@ AUTO_QUANTIZE_MIN_ROWS rows.
 Usage:
     python tools/bench_ann.py [sf_dir] [out.json]
 
-Defaults: sf_dir=/root/repo/testdata_sf1 (500k x 64-dim vectors — above
+Defaults: sf_dir=testdata_sf1 in the checkout (500k x 64-dim vectors — above
 the 200k routing threshold), stdout JSON only.
 
 Protocol mirrors bench.py: JVM warmup on a smaller sf, then each
@@ -26,7 +26,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from weaviate_spark.session import get_spark  # noqa: E402
 
@@ -41,7 +42,7 @@ def _run(fn, n: int = 4):
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/testdata_sf1"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(ROOT, "testdata_sf1")
     out_path = sys.argv[2] if len(sys.argv) > 2 else None
     spark = get_spark("weaviate-spark-bench-ann")
 

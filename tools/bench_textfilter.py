@@ -11,17 +11,19 @@ Writes one JSON object with per-sf, per-op wall-clock + docs/sec.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from weaviate_spark.session import get_spark
 
 SF_DIRS = {
     "sf0.1": "/root/testdata/sf0.1",
-    "sf1": "/root/repo/testdata_sf1",
-    "sf10": "/root/repo/testdata_sf10",
+    "sf1": os.path.join(ROOT, "testdata_sf1"),
+    "sf10": os.path.join(ROOT, "testdata_sf10"),
 }
 
 

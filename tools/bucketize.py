@@ -8,9 +8,10 @@ Usage: python tools/bucketize.py [sf_dir] [buckets]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from weaviate_spark.session import get_spark  # noqa: E402
 from weaviate_spark.sources.bucketed import (  # noqa: E402

@@ -4,7 +4,7 @@ label INT). Deterministic — seeded per-row hash math in duckdb, no
 RNG state — so re-generated corpora give identical bench recalls.
 
 Usage: python tools/gen_benchvec.py [n_rows] [out_dir]
-Default: 1_000_000 rows -> /root/repo/.tmp/benchvec/embeddings.parquet
+Default: 1_000_000 rows -> .tmp/benchvec/embeddings.parquet in the checkout
 """
 
 import os
@@ -12,10 +12,12 @@ import sys
 
 import duckdb
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    out_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.tmp/benchvec"
+    out_dir = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, ".tmp", "benchvec")
     os.makedirs(out_dir, exist_ok=True)
     out = f"{out_dir}/embeddings.parquet"
     # deterministic pseudo-random floats in [-1, 1]: a 64-bit mix of

@@ -27,7 +27,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def load_rounds(pattern: str) -> dict[int, dict]:
@@ -47,8 +48,8 @@ def main() -> None:
     import __spark_entry__ as E
 
     names = list(E.queries())
-    driver = load_rounds("/root/repo/CORRECTNESS_r*.json")
-    selfs = load_rounds("/root/repo/CORRECTNESS_SELF_r*.json")
+    driver = load_rounds(os.path.join(ROOT, "CORRECTNESS_r*.json"))
+    selfs = load_rounds(os.path.join(ROOT, "CORRECTNESS_SELF_r*.json"))
     if cur is None:
         cur = max(list(driver) + list(selfs))
 
@@ -108,7 +109,7 @@ def main() -> None:
         f"{max(last_self.values(), default=0):02d}; "
         f"{len(missing_self)} queries not in any self-sweep"
         + (": " + ", ".join(sorted(missing_self)) if missing_self else "."))
-    out = "/root/repo/COVERAGE_FRESHNESS.md"
+    out = os.path.join(ROOT, "COVERAGE_FRESHNESS.md")
     with open(out, "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print(f"wrote {out}: {len(names)} queries, "

@@ -21,7 +21,7 @@ Correctness at sfN is still Spark-vs-DuckDB over the SAME parquet, so
 the generator only has to be deterministic, not mirrored in SQL.
 
 Usage: python tools/gen_sf.py [mult] [out_dir]
-       (defaults: 10 /root/repo/testdata_sf1)
+       (defaults: 10 testdata_sf1 in the checkout)
 """
 
 from __future__ import annotations
@@ -31,6 +31,7 @@ import sys
 
 import duckdb
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SRC = "/root/testdata/sf0.1"
 KEY_OFFSET = 10_000_000
 
@@ -94,6 +95,6 @@ def gen(mult: int, out_dir: str, tables: list[str] | None = None) -> None:
 
 if __name__ == "__main__":
     mult = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/testdata_sf1"
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, "testdata_sf1")
     tables = sys.argv[3].split(",") if len(sys.argv) > 3 else None
     gen(mult, out, tables)

@@ -11,7 +11,7 @@ and the log-log slope between consecutive steps. Grade: sub-linear
 LAST step (sf1 -> sf10), where fixed overheads have amortized.
 
 Usage: python tools/scale_curve.py [out.json] [query ...]
-Expects /root/repo/testdata_sf1 and /root/repo/testdata_sf10 (build
+Expects testdata_sf1 and testdata_sf10 in the checkout (build
 with tools/gen_sf.py 10 / 100).
 """
 
@@ -23,7 +23,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from weaviate_spark.session import get_spark  # noqa: E402
 
@@ -41,8 +42,8 @@ DEFAULT_QUERIES = [
 
 STEPS = [
     ("sf0.1", "/root/testdata/sf0.1", 0.1),
-    ("sf1", "/root/repo/testdata_sf1", 1.0),
-    ("sf10", "/root/repo/testdata_sf10", 10.0),
+    ("sf1", os.path.join(ROOT, "testdata_sf1"), 1.0),
+    ("sf10", os.path.join(ROOT, "testdata_sf10"), 10.0),
 ]
 
 # SCALE_STEPS=sf10 (comma list) restricts the measured legs — used to

@@ -26,9 +26,11 @@ SEED = 42
 DIM = 64
 
 
+import os as _os
 import sys as _sys
 
-_sys.path.insert(0, "/root/repo")
+_ROOT = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
+_sys.path.insert(0, _ROOT)
 
 from weaviate_spark.operators.quantization import pq_train
 
@@ -87,7 +89,7 @@ def main() -> None:
         vals = ", ".join(repr(float(v)) for v in ivf[0, c])
         lines.append(f"    [{vals}],")
     lines.append("]")
-    out = "/root/repo/weaviate_spark/operators/pq_codebook.py"
+    out = _os.path.join(_ROOT, "weaviate_spark", "operators", "pq_codebook.py")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote {out}")

@@ -60,6 +60,8 @@ release_caches).
 from __future__ import annotations
 
 import math
+import os
+import shutil
 from dataclasses import dataclass, replace
 from typing import Optional, Sequence
 
@@ -73,6 +75,7 @@ from weaviate_spark.functions.text import (
     tokenize_for_class,
 )
 from weaviate_spark import registry
+from weaviate_spark.sources import artifacts
 from weaviate_spark.sources.tables import load_table, source_paths
 
 K1_DEFAULT = 1.2
@@ -270,8 +273,8 @@ def load_stats(corpus_stats: "pa.Table", term_df: "pa.Table") -> CorpusStats:
 # handles are a registry entry stamped with the source fingerprint: a
 # write to the table, through crud or out of band, makes the next query
 # reload them (an appended stream's advanced artifact) or rebuild them.
-# Written artifacts of a superseded fingerprint are GC'd at build time.
-BM25_ARTIFACT_ROOT = "/root/repo/.artifacts/bm25"
+# The layout, commit marker, lock and GC are sources/artifacts.py's.
+BM25_ARTIFACT_ROOT = os.path.join(artifacts.ROOT, "bm25")
 TERM_BUCKETS = 64
 # bump on any stored-table schema change: the version feeds the artifact
 # path hash, so readers never load a layout written by older code
@@ -282,15 +285,6 @@ ARTIFACT_FORMAT = 2
 # disable to exercise the pure file-backed partition-pruned scans
 CACHE_INDEX_TABLES = True
 
-# serializes artifact-DIRECTORY mutations (build / advance / compact)
-# within the session: the advance's rename must not race a concurrent
-# build's mkdir for the same collection, and vice versa. Cross-process
-# writers are out of scope (single-writer deployment assumption, same
-# as the reference's per-shard write path).
-import threading  # noqa: E402
-
-_artifact_lock = threading.RLock()
-
 
 def _load_or_build_index_tables(
     corpus: DataFrame, spec: "BM25Spec", table_key: tuple
@@ -300,38 +294,23 @@ def _load_or_build_index_tables(
     served from the frames just built. A reload reads the two small
     tables to the driver and the two large ones as parquet scans with
     term / prop pushdown — the plan never re-tokenizes the corpus."""
-    import hashlib
-    import os
-    import re
+    from weaviate_spark.functions.text import user_dict_digest
 
     sf_dir, collection = table_key
     props_key = tuple(sorted((p.name, p.tokenization) for p in spec.properties))
-    fp = registry.source_fingerprint(registry.table_path(sf_dir, collection))
+    root = artifacts.artifact_dir(
+        BM25_ARTIFACT_ROOT, sf_dir, collection,
+        (props_key, spec.fold, ARTIFACT_FORMAT, user_dict_digest(spec.collection)))
     spark = corpus.sparkSession
-    if fp is None:
+    if root is None:
         # synthetic / in-memory corpus: session-scoped build, no artifact
         cs, tdf, post, dl = build_bm25_index(
             corpus, spec.properties, spec.id_col, spec.fold,
             class_name=spec.collection)
         return load_stats(cs, tdf), post, dl.cache()
-    tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir.strip("/"))
-    fp_h = hashlib.md5(fp.encode()).hexdigest()[:12]
-    from weaviate_spark.functions.text import user_dict_digest
-
-    props_h = hashlib.md5(
-        repr((props_key, spec.fold, ARTIFACT_FORMAT,
-              user_dict_digest(spec.collection))).encode()
-    ).hexdigest()[:12]
-    coll_root = f"{BM25_ARTIFACT_ROOT}/{tag}/{collection}"
-    root = f"{coll_root}/{fp_h}/{props_h}"
-    done = f"{root}/_ALL_TABLES_COMMITTED"
-    if not os.path.exists(done):
-        # the artifact-dir lock serializes this build against an
-        # in-flight advance/compact for the same collection (the rename
-        # in advance_bm25_artifacts must not race the mkdir here)
-        with _artifact_lock:
-            if not os.path.exists(done):
-                return _build_index_artifact(corpus, spec, root, coll_root, fp_h, done)
+    built = artifacts.build(root, lambda r: _write_index_artifact(corpus, spec, r))
+    if built is not None:
+        return built
     stats = load_stats(spark.read.parquet(f"{root}/corpus_stats").toArrow(),
                        spark.read.parquet(f"{root}/term_df").toArrow())
     return (stats, *_read_index_frames(spark, root))
@@ -366,20 +345,11 @@ def _write_index_tables(root: str, mode: str, cs: "pa.Table", tdf: "pa.Table",
     dl.write.partitionBy("prop").mode(mode).parquet(f"{root}/doclen")
 
 
-def _build_index_artifact(
-    corpus: DataFrame, spec: "BM25Spec", root: str, coll_root: str,
-    fp_h: str, done: str
+def _write_index_artifact(
+    corpus: DataFrame, spec: "BM25Spec", root: str
 ) -> tuple[CorpusStats, DataFrame, DataFrame]:
     import json
-    import os
-    import shutil
 
-    # GC artifacts of SUPERSEDED source fingerprints of this
-    # collection (other property sets on the live source survive)
-    if os.path.isdir(coll_root):
-        for old in os.listdir(coll_root):
-            if old != fp_h:
-                shutil.rmtree(os.path.join(coll_root, old), ignore_errors=True)
     cs, tdf, post, dl = build_bm25_index(
         corpus, spec.properties, spec.id_col, spec.fold,
         class_name=spec.collection,
@@ -398,7 +368,6 @@ def _build_index_artifact(
             "id_col": spec.id_col,
             "fold": spec.fold,
         }, mf)
-    open(done, "w").close()
     if not CACHE_INDEX_TABLES:
         post, dl = _read_index_frames(corpus.sparkSession, root)
     return load_stats(cs, tdf), post, dl
@@ -416,31 +385,14 @@ def compact_bm25_artifacts(
     sets compacted. Contents are value-identical before and after
     (the driver-side stats sum per key either way; tests pin score
     equality)."""
-    import hashlib
-    import os
-    import re
-    import shutil
-
-    fp = registry.source_fingerprint(registry.table_path(sf_dir, collection))
-    if fp is None:
+    fp_root = artifacts.fingerprint_dir(BM25_ARTIFACT_ROOT, sf_dir, collection)
+    if fp_root is None or not os.path.isdir(fp_root):
         return 0
-    tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir.strip("/"))
-    fp_root = (
-        f"{BM25_ARTIFACT_ROOT}/{tag}/{collection}/"
-        f"{hashlib.md5(fp.encode()).hexdigest()[:12]}"
-    )
-    if not os.path.isdir(fp_root):
-        return 0
-    n = 0
-    with _artifact_lock:
-        n = _compact_under(spark, sf_dir, collection, fp_root)
-    return n
+    with artifacts.LOCK:
+        return _compact_under(spark, sf_dir, collection, fp_root)
 
 
 def _compact_under(spark, sf_dir: str, collection: str, fp_root: str) -> int:
-    import os
-    import shutil
-
     n = 0
     for props_h in os.listdir(fp_root):
         if "." in props_h:
@@ -451,7 +403,7 @@ def _compact_under(spark, sf_dir: str, collection: str, fp_root: str) -> int:
             shutil.rmtree(f"{fp_root}/{props_h}", ignore_errors=True)
             continue
         root = f"{fp_root}/{props_h}"
-        if not os.path.exists(f"{root}/_ALL_TABLES_COMMITTED"):
+        if not artifacts.committed(root):
             continue
         cs = (
             spark.read.parquet(f"{root}/corpus_stats")
@@ -476,7 +428,7 @@ def _compact_under(spark, sf_dir: str, collection: str, fp_root: str) -> int:
         )
         dl.repartition("prop").write.partitionBy("prop").parquet(f"{staging}/doclen")
         shutil.copy(f"{root}/props.json", f"{staging}/props.json")
-        open(f"{staging}/_ALL_TABLES_COMMITTED", "w").close()
+        artifacts.mark(staging)
         # release cached handles BEFORE the swap so no query resolves a
         # frame rooted in the dir being replaced; a crash between the
         # two renames leaves only dotted dirs (cleaned above) and the
@@ -523,21 +475,16 @@ def advance_bm25_artifacts(
     re-arrived id would double-count df/doclen — update streams are not
     advanced (the upsert sink does not call this), so the next query
     rebuilds from the merged table."""
-    import hashlib
     import json
-    import os
-    import re
 
     if fp_before is None:
         return
-    fp_after = registry.source_fingerprint(registry.table_path(sf_dir, collection))
-    if fp_after is None or fp_after == fp_before:
+    new_root = artifacts.fingerprint_dir(BM25_ARTIFACT_ROOT, sf_dir, collection)
+    old_root = artifacts.fingerprint_dir(BM25_ARTIFACT_ROOT, sf_dir, collection,
+                                         fp_before)
+    if new_root is None or new_root == old_root:
         return
-    tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir.strip("/"))
-    coll_root = f"{BM25_ARTIFACT_ROOT}/{tag}/{collection}"
-    old_root = f"{coll_root}/{hashlib.md5(fp_before.encode()).hexdigest()[:12]}"
-    new_root = f"{coll_root}/{hashlib.md5(fp_after.encode()).hexdigest()[:12]}"
-    with _artifact_lock:
+    with artifacts.LOCK:
         if not os.path.isdir(old_root):
             return
         if os.path.isdir(new_root):
@@ -556,8 +503,7 @@ def advance_bm25_artifacts(
                 continue  # crashed-compaction leftovers, not prop sets
             root = f"{new_root}/{props_h}"
             manifest = f"{root}/props.json"
-            done = f"{root}/_ALL_TABLES_COMMITTED"
-            if not (os.path.exists(done) and os.path.exists(manifest)):
+            if not (artifacts.committed(root) and os.path.exists(manifest)):
                 continue
             with open(manifest) as mf:
                 m = json.load(mf)
@@ -566,13 +512,10 @@ def advance_bm25_artifacts(
                 batch_df, props, m["id_col"], m["fold"],
                 class_name=collection,
             )
-            # marker discipline: the commit marker is ABSENT while the
-            # four appends land, so a crash mid-append leaves an
-            # uncommitted artifact that the next query rebuilds instead
-            # of silently serving half-advanced stats
-            os.remove(done)
-            _write_index_tables(root, "append", cs, tdf, post, dl)
-            open(done, "w").close()
+            # uncommitted while the four appends land: a crash mid-append
+            # makes the next query rebuild, not serve half-advanced stats
+            with artifacts.uncommitted(root):
+                _write_index_tables(root, "append", cs, tdf, post, dl)
 
 
 def with_materialized_stats(

@@ -352,16 +352,7 @@ def minhash_lsh_pairs(
     else:
         sets = None
         sh = register_cache(shingle_df(df, id_col, text_col, shingle_n).cache())
-        # wide-form signatures: ONE groupBy over shingles computing all K
-        # mins as columns — no K-fold row blowup through the shuffle (the
-        # long-form equivalent shuffles K x the shingle count). One md5
-        # per shingle; the K hashes are the K-M family h1 + i*h2.
-        h1, h2 = _km_halves(F.col("_shingle"))
-        hashed = sh.select("_doc", h1.alias("_h1"), h2.alias("_h2"))
-        sig = hashed.groupBy("_doc").agg(*[
-            F.min(F.col("_h1") + F.lit(i) * F.col("_h2")).alias(f"_mh{i}")
-            for i in range(num_hashes)
-        ])
+        sig = _sig_agg(sh, num_hashes)
     pairs = _band_candidates(sig, bands, rows_per_band, max_bucket_size)
     verified = jaccard_for_pairs(pairs, sh, sets=sets)
     return verified.where(F.col("jaccard") >= jaccard_threshold).select(
@@ -442,12 +433,7 @@ def containment_pairs(
         )
     else:
         sh = register_cache(shingle_df(df, id_col, text_col, shingle_n).cache())
-        h1, h2 = _km_halves(F.col("_shingle"))
-        hashed = sh.select("_doc", h1.alias("_h1"), h2.alias("_h2"))
-        sig = hashed.groupBy("_doc").agg(*[
-            F.min(F.col("_h1") + F.lit(i) * F.col("_h2")).alias(f"_mh{i}")
-            for i in range(num_hashes)
-        ])
+        sig = _sig_agg(sh, num_hashes)
         sets = shingle_sets(sh)
     pairs = _band_candidates(sig, bands, rows_per_band, max_bucket_size)
     a = sets.select(F.col("_doc").alias("_a"), F.col("_ss").alias("_sa"))
@@ -1402,12 +1388,7 @@ def minhash_bbit_pairs(
     else:
         sets = None
         sh = register_cache(shingle_df(df, id_col, text_col, shingle_n).cache())
-        h1, h2 = _km_halves(F.col("_shingle"))
-        hashed = sh.select("_doc", h1.alias("_h1"), h2.alias("_h2"))
-        sig = hashed.groupBy("_doc").agg(*[
-            F.min(F.col("_h1") + F.lit(i) * F.col("_h2")).alias(f"_mh{i}")
-            for i in range(num_hashes)
-        ])
+        sig = _sig_agg(sh, num_hashes)
     # the b-bit signature: all downstream stages read ONLY these columns
     bsig = register_cache(sig.select(
         "_doc",

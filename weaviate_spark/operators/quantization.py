@@ -35,12 +35,14 @@ exact rescore touches overfetch*k rows, not the corpus.
 
 from __future__ import annotations
 
+import os
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from weaviate_spark.functions.distance import as_matrix, distance
+from weaviate_spark.sources import artifacts
 from weaviate_spark.sources.tables import load_table, source_paths
 
 from weaviate_spark import incremental, registry
@@ -101,8 +103,9 @@ def hamming_col(word_cols: Sequence[Column], query_words: Sequence[int]) -> Colu
 # NO float vectors — so the compressed candidate scan reads ~dim/32
 # longs per row instead of a dim-float array, cold or warm. The path
 # embeds a source mtime+size fingerprint (stale artifacts are never
-# served; superseded ones GC at build) and a format/layout hash.
-VECTOR_ARTIFACT_ROOT = "/root/repo/.artifacts/vecindex"
+# served; superseded ones GC at build) and a format/layout hash
+# (sources/artifacts.py).
+VECTOR_ARTIFACT_ROOT = os.path.join(artifacts.ROOT, "vecindex")
 VEC_ARTIFACT_FORMAT = 1
 
 
@@ -136,34 +139,9 @@ def _vec_artifact_dir(
     this (source fingerprint, encode variant) — None when the source has
     no stable files to fingerprint. ``frame_fn`` produces the code frame
     to persist; ``variant`` is the layout tuple hashed into the path."""
-    import hashlib
-    import os
-    import re
-    import shutil
-
-    from weaviate_spark.operators.bm25 import _artifact_lock
-
-    fp = registry.source_fingerprint(registry.table_path(sf_dir, collection))
-    if fp is None:
-        return None
-    tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir.strip("/"))
-    fp_h = hashlib.md5(fp.encode()).hexdigest()[:12]
-    var_h = hashlib.md5(repr(variant).encode()).hexdigest()[:12]
-    coll_root = f"{VECTOR_ARTIFACT_ROOT}/{tag}/{collection}"
-    root = f"{coll_root}/{fp_h}/{var_h}"
-    done = f"{root}/_COMMITTED"
-    if os.path.exists(done):
-        return root
-    with _artifact_lock:
-        if not os.path.exists(done):
-            # GC artifacts of superseded source fingerprints
-            if os.path.isdir(coll_root):
-                for old in os.listdir(coll_root):
-                    if old != fp_h:
-                        shutil.rmtree(os.path.join(coll_root, old),
-                                      ignore_errors=True)
-            frame_fn().write.mode("overwrite").parquet(f"{root}/codes")
-            open(done, "w").close()
+    root = artifacts.artifact_dir(VECTOR_ARTIFACT_ROOT, sf_dir, collection, variant)
+    if root is not None:
+        artifacts.build(root, lambda r: frame_fn().write.parquet(f"{r}/codes"))
     return root
 
 

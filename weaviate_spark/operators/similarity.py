@@ -37,6 +37,7 @@ from weaviate_spark.cache import ensure_min_partitions, lit_double_array
 from pyspark.sql import functions as F
 
 from weaviate_spark.functions.distance import as_matrix, distance, micros, pairwise
+from weaviate_spark.sources import artifacts
 
 
 def _plane_component(seed: int, plane: int, dim: int) -> float:
@@ -789,10 +790,7 @@ def _build_nn_graph(spark, sf_dir: str, collection: str, k: int,
     if num_planes is not None:
         art = _nng_artifact_dir(sf_dir, collection, k, rounds, id_col,
                                 vector_col, num_planes, seed, seed_cap)
-    if art is not None:
-        import os
-
-        if os.path.exists(f"{art}/_COMMITTED"):
+        if artifacts.committed(art):
             return spark.read.parquet(f"{art}/graph")
 
     base = load_table(spark, sf_dir, collection).where(
@@ -811,9 +809,7 @@ def _build_nn_graph(spark, sf_dir: str, collection: str, k: int,
         # re-derive the artifact dir with the resolved plane count
         art = _nng_artifact_dir(sf_dir, collection, k, rounds, id_col,
                                 vector_col, num_planes, seed, seed_cap)
-        import os
-
-        if art is not None and os.path.exists(f"{art}/_COMMITTED"):
+        if artifacts.committed(art):
             return spark.read.parquet(f"{art}/graph")
     dim_row = base.select(F.size(vector_col).alias("d")).limit(1).collect()
     dim = int(dim_row[0]["d"]) if dim_row else 0
@@ -885,14 +881,7 @@ def _build_nn_graph(spark, sf_dir: str, collection: str, k: int,
         F.col("_d").cast("double").alias("distance"),
     )
     if art is not None:
-        import os
-
-        from weaviate_spark.operators.bm25 import _artifact_lock
-
-        with _artifact_lock:
-            if not os.path.exists(f"{art}/_COMMITTED"):
-                out.write.mode("overwrite").parquet(f"{art}/graph")
-                open(f"{art}/_COMMITTED", "w").close()
+        artifacts.build(art, lambda r: out.write.parquet(f"{r}/graph"))
         out = spark.read.parquet(f"{art}/graph")
     return out
 
@@ -901,27 +890,12 @@ def _nng_artifact_dir(sf_dir: str, collection: str, k: int, rounds: int,
                       id_col: str, vector_col: str, num_planes: int,
                       seed: int, seed_cap: int = 128) -> str | None:
     """Artifact dir for this (source fingerprint, graph params) — None
-    for fingerprint-less in-memory corpora. GC of superseded
-    fingerprints rides the BQ artifact's collection-root sweep."""
-    import hashlib
-    import os
-    import re
-
-    from weaviate_spark import registry
+    for fingerprint-less in-memory corpora."""
     from weaviate_spark.operators.quantization import VECTOR_ARTIFACT_ROOT
 
-    fp = registry.source_fingerprint(registry.table_path(sf_dir, collection))
-    if fp is None:
-        return None
-    tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir.strip("/"))
-    fp_h = hashlib.md5(fp.encode()).hexdigest()[:12]
-    var_h = hashlib.md5(
-        repr(("nng", k, rounds, id_col, vector_col, num_planes, seed,
-              seed_cap)).encode()
-    ).hexdigest()[:12]
-    root = f"{VECTOR_ARTIFACT_ROOT}/{tag}/{collection}/{fp_h}/{var_h}"
-    os.makedirs(root, exist_ok=True)
-    return root
+    return artifacts.artifact_dir(
+        VECTOR_ARTIFACT_ROOT, sf_dir, collection,
+        ("nng", k, rounds, id_col, vector_col, num_planes, seed, seed_cap))
 
 
 def _lsh_bucket_artifact(
@@ -933,48 +907,35 @@ def _lsh_bucket_artifact(
     the per-query signature recompute over the whole corpus (1M rows =
     ~1s of dot products PER QUERY) becomes a pruned metadata-sized
     read. Fingerprinted against the source like every vecindex
-    artifact; None for fingerprint-less in-memory corpora."""
-    import os
-
-    from weaviate_spark import registry
-    from weaviate_spark.operators.bm25 import _artifact_lock
+    artifact; None for fingerprint-less in-memory corpora and for a
+    collection without a non-NULL vector (nothing is written then)."""
     from weaviate_spark.operators.quantization import VECTOR_ARTIFACT_ROOT
     from weaviate_spark.sources.tables import load_table
 
-    fp = registry.source_fingerprint(registry.table_path(sf_dir, collection))
-    if fp is None:
+    root = artifacts.artifact_dir(
+        VECTOR_ARTIFACT_ROOT, sf_dir, collection,
+        ("lshbuckets", id_col, vector_col, num_planes, seed))
+    if root is None or artifacts.committed(root):
+        return root
+    base = load_table(spark, sf_dir, collection).where(
+        F.col(vector_col).isNotNull())
+    dim_row = base.select(F.size(vector_col).alias("d")).limit(1).collect()
+    if not dim_row:
         return None
-    import hashlib
-    import re
-
-    tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir.strip("/"))
-    fp_h = hashlib.md5(fp.encode()).hexdigest()[:12]
-    var_h = hashlib.md5(
-        repr(("lshbuckets", id_col, vector_col, num_planes, seed)).encode()
-    ).hexdigest()[:12]
-    root = f"{VECTOR_ARTIFACT_ROOT}/{tag}/{collection}/{fp_h}/{var_h}"
-    os.makedirs(root, exist_ok=True)
-    with _artifact_lock:
-        if not os.path.exists(f"{root}/_COMMITTED"):
-            base = load_table(spark, sf_dir, collection).where(
-                F.col(vector_col).isNotNull())
-            dim_row = base.select(F.size(vector_col).alias("d")).limit(1).collect()
-            if not dim_row:
-                return None
-            idx = build_lsh_index(
-                base, id_col, vector_col, num_planes=num_planes,
-                dim=int(dim_row[0]["d"]), seed=seed,
-            ).select(id_col, "_bucket")
-            # hash-partition by bucket WITHOUT pinning a partition count
-            # (AQE sizes the output files adaptively: ~1 file locally,
-            # many at corpus scale — a pinned repartition(1) wrote the
-            # whole index through ONE task, guide §6): every bucket
-            # still lands entirely inside one bucket-sorted file, so the
-            # probe filter prunes at file level via min/max stats
-            (idx.repartition(F.col("_bucket"))
-                .sortWithinPartitions("_bucket", id_col)
-                .write.mode("overwrite").parquet(f"{root}/buckets"))
-            open(f"{root}/_COMMITTED", "w").close()
+    idx = build_lsh_index(
+        base, id_col, vector_col, num_planes=num_planes,
+        dim=int(dim_row[0]["d"]), seed=seed,
+    ).select(id_col, "_bucket")
+    # hash-partition by bucket WITHOUT pinning a partition count (AQE
+    # sizes the output files adaptively: ~1 file locally, many at corpus
+    # scale — a pinned repartition(1) wrote the whole index through ONE
+    # task, guide §6): every bucket still lands entirely inside one
+    # bucket-sorted file, so the probe filter prunes at file level via
+    # min/max stats
+    artifacts.build(root, lambda r: (
+        idx.repartition(F.col("_bucket"))
+        .sortWithinPartitions("_bucket", id_col)
+        .write.parquet(f"{r}/buckets")))
     return root
 
 

@@ -20,22 +20,22 @@ exactly one bucket -> one file per bucket, which also lets Spark trust
 the ``sortBy`` order and skip the pre-join Sort.
 
 At 100 TB this write runs ONCE at ingest (the reference compacts LSM
-segments the same way); here the artifact is built per (session,
-sf_dir) under .artifacts/ and reused by every subsequent query in the
-session.
+segments the same way); here the artifact is written at first use per
+(source fingerprint, key, bucket count) under .artifacts/bucketed
+(sources/artifacts.py) and registered in each session's catalog.
 """
 
 from __future__ import annotations
 
-import hashlib
-import re
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 from weaviate_spark import registry
+from weaviate_spark.sources import artifacts
 from weaviate_spark.sources.tables import load_table, source_paths
 
-ARTIFACT_ROOT = "/root/repo/.artifacts/bucketed"
+ARTIFACT_ROOT = os.path.join(artifacts.ROOT, "bucketed")
 
 # table -> default bucket key (the join key its ref-resolution uses)
 BUCKET_KEYS: dict[str, str] = {
@@ -48,8 +48,8 @@ N_BUCKETS = 16
 
 class _CatalogTable(str):
     """A registered bucketed table's name; releasing the registry entry
-    drops the catalog table (the written files stay: the next build
-    overwrites them in place)."""
+    drops the catalog table (the written files stay: the next resolve
+    registers them again while the source is unchanged)."""
 
     def release(self) -> None:
         from pyspark.sql import SparkSession
@@ -81,22 +81,28 @@ def bucketed_table(
         # the table name and path embed the source fingerprint: a
         # rewritten source is never served from the stale layout, even
         # across sessions
-        tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir.strip("/"))
-        raw = registry.source_fingerprint(registry.table_path(sf_dir, name))
-        fp = "na" if raw is None else hashlib.md5(raw.encode()).hexdigest()[:10]
-        tbl = f"ws_b{buckets}_{tag}_{name}_{key}_{fp}"
-        path = f"{ARTIFACT_ROOT}/{tag}/b{buckets}/{name}_{key}_{fp}"
+        root = artifacts.artifact_dir(ARTIFACT_ROOT, sf_dir, name, (key, buckets))
+        if root is None:
+            raise FileNotFoundError(registry.table_path(sf_dir, name))
+        tbl = "ws_" + "_".join(os.path.relpath(root, ARTIFACT_ROOT).split(os.sep))
+        if spark.catalog.tableExists(tbl):
+            return _CatalogTable(tbl)
+        df = load_table(spark, sf_dir, name)
+        artifacts.build(root, lambda r: (
+            df.repartition(buckets, F.col(key))
+            .write.format("parquet")
+            .bucketBy(buckets, key)
+            .sortBy(key)
+            .option("path", f"{r}/table")
+            .saveAsTable(tbl)
+        ))
         if not spark.catalog.tableExists(tbl):
-            df = load_table(spark, sf_dir, name)
-            (
-                df.repartition(buckets, F.col(key))
-                .write.format("parquet")
-                .bucketBy(buckets, key)
-                .sortBy(key)
-                .option("path", path)
-                .mode("overwrite")
-                .saveAsTable(tbl)
-            )
+            # committed by an earlier session: register the written files
+            # (the bucket spec lives in the catalog, not in the files)
+            spark.sql(
+                f"CREATE TABLE {tbl} ({df._jdf.schema().toDDL()}) USING parquet "
+                f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {buckets} BUCKETS "
+                f"LOCATION '{root}/table'")
         return _CatalogTable(tbl)
 
     return spark.table(registry.resolve(

@@ -18,7 +18,7 @@ Semantics ported:
   — wired to sources/storagestate.py), vectorQueueLength (0: this
   engine compresses/indexes at ingest, there is no async vector queue —
   matching nodes.go:311-318 where a nil queue reports 0), compressed =
-  any written vector-index artifact for the collection (nodes.go:368
+  a committed BQ/SQ code table for the table as it is now (nodes.go:368
   ``isAnyVectorIndexCompressed``), loaded (false only for unloaded /
   shutdown shards, nodes.go:294-303).
 * batchStats: ratePerSecond; queueLength only when async indexing is
@@ -90,13 +90,18 @@ def _count_rows(path: str) -> int:
     return ds.dataset(path, format="parquet").count_rows()
 
 
-def _is_compressed(class_name: str) -> bool:
-    """isAnyVectorIndexCompressed (nodes.go:368-373): true when any
-    written vector-index artifact exists for the collection."""
+def _is_compressed(root: str, class_name: str) -> bool:
+    """isAnyVectorIndexCompressed (nodes.go:368-373): true when a
+    committed BQ/SQ code table exists for ``root/class_name`` at the
+    table's current fingerprint (an NN graph or LSH bucket table is an
+    index, not a compressed one)."""
     from weaviate_spark.operators.quantization import VECTOR_ARTIFACT_ROOT
+    from weaviate_spark.sources import artifacts
 
-    pattern = os.path.join(VECTOR_ARTIFACT_ROOT, "*", class_name, "*")
-    return any(os.path.isdir(p) for p in glob.glob(pattern))
+    fp_dir = artifacts.fingerprint_dir(VECTOR_ARTIFACT_ROOT, root, class_name)
+    return fp_dir is not None and any(
+        artifacts.committed(d) and os.path.isdir(os.path.join(d, "codes"))
+        for d in glob.glob(os.path.join(fp_dir, "*")))
 
 
 def _shard_rows(root: str, class_name: str = "", shard_name: str = "",
@@ -110,7 +115,7 @@ def _shard_rows(root: str, class_name: str = "", shard_name: str = "",
             continue
         tenants = _tenant_partitions(path)
         shards = tenants if tenants else [(cls, path)]
-        compressed = detect_compression and _is_compressed(cls)
+        compressed = detect_compression and _is_compressed(root, cls)
         for shard, spath in shards:
             if shard_name and shard != shard_name:
                 continue
@@ -199,7 +204,7 @@ def node_status_df(spark: SparkSession, root: str, *,
         if class_name and cls != class_name:
             continue
         tenants = _tenant_partitions(path)
-        compressed = detect_compression and _is_compressed(cls)
+        compressed = detect_compression and _is_compressed(root, cls)
         base = spark.read.parquet(path)
         if tenants:
             tenant_col = os.path.basename(
