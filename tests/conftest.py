@@ -20,6 +20,31 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture(scope="module")
+def tmp_artifact_roots(tmp_path_factory):
+    """Point the written-index families (BM25, vector codes and graphs,
+    bucketed tables) at a temporary directory for one test module, so
+    indexes built for its tables never land in the checkout's
+    ``.artifacts/``. Handles resolved meanwhile are released on both
+    sides, so no module serves frames read from another's root."""
+    from weaviate_spark import registry
+    from weaviate_spark.operators import bm25, quantization
+    from weaviate_spark.sources import bucketed
+
+    root = tmp_path_factory.mktemp("artifacts")
+    targets = ((bm25, "BM25_ARTIFACT_ROOT", "bm25"),
+               (quantization, "VECTOR_ARTIFACT_ROOT", "vecindex"),
+               (bucketed, "ARTIFACT_ROOT", "bucketed"))
+    saved = [getattr(m, name) for m, name, _ in targets]
+    registry.clear()
+    for m, name, sub in targets:
+        setattr(m, name, str(root / sub))
+    yield root
+    registry.clear()
+    for (m, name, _), value in zip(targets, saved):
+        setattr(m, name, value)
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

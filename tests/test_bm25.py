@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 
 from weaviate_spark.functions.text import EN_STOPWORDS, remove_stopwords, tokenize, tokenize_py
 
+pytestmark = pytest.mark.usefixtures("tmp_artifact_roots")
+
 
 @pytest.mark.parametrize(
     "mode,text,want",
@@ -135,7 +137,7 @@ def test_stats_tables_match_recompute(spark, tmp_path):
         collection="x", query="apple banana", properties=props,
         id_col="doc_id", round_digits=None,
     )
-    cs, tdf, _post, _dl = build_bm25_index(df, props, "doc_id")
+    cs, tdf, _post = build_bm25_index(df, props, "doc_id")
     stats = load_stats(cs, tdf)
 
     for cand in (df, df.where(F.col("grp") == "a")):
@@ -155,11 +157,12 @@ def test_stats_tables_match_recompute(spark, tmp_path):
 
 
 def test_index_build_matches_per_property_reference(spark):
-    """The single tokenize pass of build_bm25_index gives the four tables
-    a naive per-property build gives: two text properties, a NULL and an
+    """The single tokenize pass of build_bm25_index gives the tables a
+    naive per-property build gives: two text properties, a NULL and an
     empty text, a property with no token in any row, repeated terms.
     n_docs counts every row; n_docs_with_prop and sum_len only rows
-    holding tokens."""
+    holding tokens; every postings row carries its document's token
+    count in that property."""
     from collections import Counter
 
     from weaviate_spark.operators.bm25 import BM25Prop, build_bm25_index
@@ -174,7 +177,7 @@ def test_index_build_matches_per_property_reference(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, title string, body string, tags string")
     props = [BM25Prop("title"), BM25Prop("body"), BM25Prop("tags")]
-    cs, tdf, post, dl = build_bm25_index(df, props, "doc_id")
+    cs, tdf, post = build_bm25_index(df, props, "doc_id")
 
     want_cs, want_tdf, want_post, want_dl = set(), Counter(), set(), set()
     for i, p in enumerate(props):
@@ -186,7 +189,7 @@ def test_index_build_matches_per_property_reference(spark):
                 sum_len += len(toks)
                 want_dl.add((p.name, r[0], len(toks)))
             for term, f in Counter(toks).items():
-                want_post.add((p.name, r[0], term, f))
+                want_post.add((p.name, r[0], term, f, len(toks)))
                 want_tdf[p.name, term] += 1
         want_cs.add((p.name, len(rows), with_prop, sum_len))
 
@@ -194,10 +197,16 @@ def test_index_build_matches_per_property_reference(spark):
     assert set(map(tuple, (r.values() for r in cs.to_pylist()))) == want_cs
     assert {(r["prop"], r["term"]): r["df"] for r in tdf.to_pylist()} == dict(want_tdf)
     assert len(tdf) == len(want_tdf)
-    assert set(map(tuple, post.collect())) == want_post
+    got_post = set(map(tuple, post.collect()))
+    assert got_post == want_post
     assert post.count() == len(want_post)
-    assert set(map(tuple, dl.collect())) == want_dl
-    assert dl.count() == len(want_dl)
+    # the written doclen table sums _f per document: it must agree
+    # with the _len every postings row carries
+    sum_f = Counter()
+    for p, d, _, f, _ in got_post:
+        sum_f[p, d] += f
+    assert {(p, d, n) for p, d, _, _, n in got_post} == want_dl
+    assert {(p, d, n) for (p, d), n in sum_f.items()} == want_dl
 
 
 def test_read_on_built_index_runs_no_eager_job(spark, sf_dir):
@@ -235,9 +244,91 @@ def test_read_on_built_index_runs_no_eager_job(spark, sf_dir):
         sc._jsc.clearJobGroup()
 
 
+def _keyword_reads(spark, sf_dir, query):
+    from weaviate_spark.entry_queries import QVEC
+    from weaviate_spark.operators.bm25 import BM25Prop, BM25Spec, bm25_search
+    from weaviate_spark.operators.hybrid import HybridSpec, hybrid_search
+
+    return {
+        "bm25": bm25_search(spark, sf_dir, BM25Spec(
+            collection="documents", query=query,
+            properties=[BM25Prop("text")], id_col="doc_id", limit=10)),
+        "hybrid": hybrid_search(spark, sf_dir, HybridSpec(
+            collection="docs_embedded", query=query, vector=QVEC,
+            properties=[BM25Prop("text")], id_col="doc_id", limit=10)),
+    }
+
+
+def _run_in_group(df, group):
+    """Collect ``df`` under its own job group: (rows, job counts,
+    executed plan node counts)."""
+    from weaviate_spark.plans.profile import executed_node_counts, job_group_counts
+
+    sc = df.sparkSession.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    return rows, job_group_counts(sc, group), executed_node_counts(df)
+
+
+def _warm_keyword_reads(spark, sf_dir, tag):
+    """Fill the postings caches with one pair of reads, then profile a
+    second pair for other terms: name -> (rows, jobs, plan nodes)."""
+    for df in _keyword_reads(spark, sf_dir, "spark filter").values():
+        df.collect()
+    return {name: _run_in_group(df, f"{tag}-{name}")
+            for name, df in _keyword_reads(spark, sf_dir, "join data query").items()}
+
+
+def test_keyword_reads_on_built_index_run_one_job(spark, sf_dir):
+    """The cached postings carry each document's length and are
+    clustered by document: on a built index a bm25 read and a hybrid
+    read each run ONE job, and neither plan holds an exchange (no
+    shuffle for the per-document aggregation, no broadcast of a length
+    table)."""
+    for name, (rows, counts, nodes) in _warm_keyword_reads(
+            spark, sf_dir, "one-job").items():
+        assert rows, name
+        assert counts["jobs"] == 1, (name, counts)
+        assert "ShuffleExchange" not in nodes, (name, nodes)
+        assert "BroadcastExchange" not in nodes, (name, nodes)
+
+
+def test_bm25_read_plan_same_on_build_and_reload(spark, sf_dir, monkeypatch):
+    """A bm25 read executes the same plan whether its postings handle
+    came from the build that wrote the artifact or from a reload of the
+    written artifact (the reload joins the stored lengths back in)."""
+    import shutil
+
+    from weaviate_spark import registry
+    from weaviate_spark.operators import bm25 as bm25_mod
+
+    writes = []
+    real = bm25_mod._write_index_artifact
+
+    def counted(*args, **kwargs):
+        writes.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(bm25_mod, "_write_index_artifact", counted)
+    registry.clear()
+    shutil.rmtree(bm25_mod.BM25_ARTIFACT_ROOT, ignore_errors=True)
+    built = _warm_keyword_reads(spark, sf_dir, "build")["bm25"]
+    assert writes == [1]
+    registry.clear()
+    reloaded = _warm_keyword_reads(spark, sf_dir, "reload")["bm25"]
+    assert writes == [1], "the reload rebuilt the index"
+    assert reloaded[0] == built[0] and reloaded[0]
+    assert reloaded[1]["jobs"] == 1, reloaded[1]
+    assert reloaded[2] == built[2]
+    registry.clear()
+
+
 def test_postings_path_scores_identical(spark, sf_dir):
-    """The inverted-index (postings/doclen) scoring path must produce
-    byte-identical scores to the tokenize-the-corpus path."""
+    """The inverted-index (postings with lengths) scoring path must
+    produce byte-identical scores to the tokenize-the-corpus path."""
     from dataclasses import replace
     from pyspark.sql import functions as F
     from weaviate_spark.operators.bm25 import (
@@ -260,7 +351,8 @@ def test_postings_path_scores_identical(spark, sf_dir):
         )
 
     with_postings = rows(sp)
-    without = rows(replace(sp, stats=replace(sp.stats, postings=None, doclen=None)))
+    assert sp.stats.postings.columns == ["prop", "_doc", "_term", "_f", "_len"]
+    without = rows(replace(sp, stats=replace(sp.stats, postings=None)))
     assert with_postings == without and len(with_postings) > 0
 
 

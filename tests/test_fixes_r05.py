@@ -15,6 +15,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
+pytestmark = pytest.mark.usefixtures("tmp_artifact_roots")
+
 
 def _kernel_pdf(rows):
     return pd.DataFrame(

@@ -22,6 +22,8 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+pytestmark = pytest.mark.usefixtures("tmp_artifact_roots")
+
 
 def _corpus(rng, n, dim, lo, hi):
     return [(i, [rng.uniform(lo, hi) for _ in range(dim)]) for i in range(n)]

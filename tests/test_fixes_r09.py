@@ -8,7 +8,10 @@
 """
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+
+pytestmark = pytest.mark.usefixtures("tmp_artifact_roots")
 
 
 def test_substring_cap_bounds_boilerplate_join(spark):

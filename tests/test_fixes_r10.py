@@ -29,6 +29,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+pytestmark = pytest.mark.usefixtures("tmp_artifact_roots")
+
 
 # ---------------------------------------------------------------------------
 # export slot + crash recovery

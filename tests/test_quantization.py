@@ -15,6 +15,8 @@ from weaviate_spark.operators.quantization import (
     sq_l2_code_distance,
 )
 
+pytestmark = pytest.mark.usefixtures("tmp_artifact_roots")
+
 
 def test_bq_encode_spark_matches_python(spark):
     rng = random.Random(3)

@@ -9,6 +9,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+pytestmark = pytest.mark.usefixtures("tmp_artifact_roots")
+
 
 def _ring_vectors(n: int, dim: int = 8):
     """Points on a circle embedded in dim-space: ground-truth neighbors

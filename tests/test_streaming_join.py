@@ -4,7 +4,10 @@ must carry watermarks on BOTH sides so join state is bounded."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+
+pytestmark = pytest.mark.usefixtures("tmp_artifact_roots")
 
 
 def test_stream_stream_join_matches_batch(spark, sf_dir, tmp_path):

@@ -45,13 +45,15 @@ engine scores the full candidate set — same results by construction
 Scale notes: with the materialized index tables (build_bm25_index,
 refreshed on ingest like the reference's prop length tracker + LSM
 inverted segments), a keyword query tokenizes NOTHING — term
-frequencies come from a term-filtered postings lookup (partition/
-bucket by term at scale => the scan reads only the query terms' rows)
-and lengths from the doclen table; a where-filter semi-joins the
-candidate ids. The build tokenizes each property once, into one
-postings frame materialized once; the corpus statistics (N, avgdl per
-property, the term_df table) live on the driver, loaded once per
-source stamp, so a read looks up its terms without a Spark job.
+frequencies AND each document's property length come from one
+term-filtered postings lookup (the reference keeps propLen next to each
+posting, terms.go:244). The build tokenizes each property once, into
+one postings frame materialized once; the corpus statistics (N, avgdl
+per property, the term_df table) live on the driver, loaded once per
+source stamp, so a read looks up its terms without a Spark job. In a
+session the postings are one cached frame hash-partitioned by document:
+the per-document aggregation reuses that partitioning, so a read is one
+stage with no exchange; a where-filter semi-joins the candidate ids.
 Without the tables, the one wide aggregation over the corpus serves
 both stats and scoring (cached, released on the next query via
 release_caches).
@@ -62,6 +64,7 @@ from __future__ import annotations
 import math
 import os
 import shutil
+import uuid
 from dataclasses import dataclass, replace
 from typing import Optional, Sequence
 
@@ -99,13 +102,14 @@ class CorpusStats:
     """Materialized corpus statistics — the Spark analogue of the
     reference's propLengthTracker + inverted-index term statistics.
 
-    When `postings`/`doclen` are attached (the full inverted-index
-    analogue), query-time scoring never tokenizes ANY document: term
-    frequencies come from a term-filtered postings lookup and document
-    lengths from the doclen table — the same work the reference's
-    keyword search does against its LSM inverted segments. At scale
-    these are written tables partitioned/bucketed by term, so a query
-    reads only its own terms' row groups.
+    When `postings` is attached (the full inverted-index analogue),
+    query-time scoring never tokenizes ANY document: term frequencies
+    and document lengths come from one term-filtered postings lookup —
+    the same work the reference's keyword search does against its LSM
+    inverted segments, whose entries carry the property length. On disk
+    postings are partitioned by term bucket (a query reads only its own
+    terms' directories) and lengths live in a doclen table beside them;
+    see ``_postings_handle`` for how the two meet in a session.
 
     ``term_df`` is the whole (prop, term, df) table on the driver, as
     Arrow: a read looks up its own terms with ``doc_freq``, no job."""
@@ -113,8 +117,7 @@ class CorpusStats:
     n_docs: float                               # collection-wide object count
     avg_len: dict[str, float]                   # prop -> mean token count
     term_df: "pa.Table"                         # (prop, term, df)
-    postings: Optional[DataFrame] = None        # (prop, _doc, _term, _f)
-    doclen: Optional[DataFrame] = None          # (prop, _doc, _len)
+    postings: Optional[DataFrame] = None        # (prop, _doc, _term, _f, _len)
 
     def doc_freq(self, prop: str, terms: Sequence[str]) -> dict[str, float]:
         """term -> document frequency in ``prop`` (0 for an unseen
@@ -176,25 +179,26 @@ def build_bm25_index(
     id_col: str,
     fold: bool = False,
     class_name: str = "",
-) -> tuple["pa.Table", "pa.Table", DataFrame, DataFrame]:
+) -> tuple["pa.Table", "pa.Table", DataFrame]:
     """Full inverted-index analogue over the UNFILTERED corpus:
 
     corpus_stats: (prop, n_docs, n_docs_with_prop, sum_len) — mergeable
                   sums, so incremental appends are delta rows
     term_df:      (prop, term, df) — one row per distinct term
-    postings:     (prop, _doc, _term, _f) — per-doc term frequencies
-    doclen:       (prop, _doc, _len) — per-doc token counts
+    postings:     (prop, _doc, _term, _f, _len) — per-doc term
+                  frequencies, each with the document's token count in
+                  that property (the reference's propLen)
 
     Each property is tokenized ONCE, into one postings frame that is
-    materialized once (localCheckpoint); doclen and term_df derive from
-    it. The corpus statistics are metrics observed on that same pass
-    (no job of their own), and term_df is collected once: both come
-    back as driver-side Arrow tables, postings and doclen as frames.
-    Doc ids are unique (``id_col``), so a row with tokens is one
-    document holding the property. Persist all four as tables (postings
-    partitioned/bucketed by term at scale) and refresh on ingest,
-    exactly like the reference's prop length tracker + LSM inverted
-    segments; query-time BM25 then never tokenizes a document.
+    materialized once (localCheckpoint), clustered by term bucket;
+    term_df derives from it, and so does the written doclen table
+    (_write_index_tables). The corpus statistics are metrics observed
+    on that same pass (no job of their own), and term_df is collected
+    once: both come back as driver-side Arrow tables. Doc ids are
+    unique (``id_col``), so a row with tokens is one document holding
+    the property. Persist them as tables and refresh on ingest, exactly
+    like the reference's prop length tracker + LSM inverted segments;
+    query-time BM25 then never tokenizes a document.
     """
     import pyarrow as pa
     from pyspark.sql import Observation
@@ -215,17 +219,20 @@ def build_bm25_index(
     )
     # clustered by term bucket, the partition column of the written
     # table: the aggregation needs no shuffle of its own, and the write
-    # (_write_index_tables) none either
+    # (_write_index_tables) none either. _len rides along as an
+    # aggregate (not a key), so the written rows are unchanged by it.
     post = (
         toks.select("_doc", F.inline(F.array(*[
-            F.struct(F.lit(p.name).alias("prop"), F.col(f"_t{i}").alias("_toks"))
+            F.struct(F.lit(p.name).alias("prop"), F.col(f"_t{i}").alias("_toks"),
+                     F.size(f"_t{i}").cast("long").alias("_len"))
             for i, p in enumerate(properties)])))
-        .select("prop", "_doc", F.explode("_toks").alias("_term"))
+        .select("prop", "_doc", "_len", F.explode("_toks").alias("_term"))
         .withColumn("_tb", F.crc32(F.col("_term")) % TERM_BUCKETS)
         .repartition("_tb")
-        .groupBy("_tb", "prop", "_doc", "_term").agg(F.count(F.lit(1)).alias("_f"))
+        .groupBy("_tb", "prop", "_doc", "_term").agg(
+            F.count(F.lit(1)).alias("_f"), F.max("_len").alias("_len"))
         .localCheckpoint(eager=True)
-        .select("prop", "_doc", "_term", "_f")
+        .select(*POSTINGS_COLS)
     )
     got = seen.get
     corpus_stats = pa.table({
@@ -240,8 +247,7 @@ def build_bm25_index(
         post.groupBy("prop", F.col("_term").alias("term"))
         .agg(F.count(F.lit(1)).alias("df")).toArrow()
     )
-    doclen = post.groupBy("prop", "_doc").agg(F.sum("_f").alias("_len"))
-    return corpus_stats, term_df, post, doclen
+    return corpus_stats, term_df, post
 
 
 def load_stats(corpus_stats: "pa.Table", term_df: "pa.Table") -> CorpusStats:
@@ -265,10 +271,11 @@ def load_stats(corpus_stats: "pa.Table", term_df: "pa.Table") -> CorpusStats:
 
 # Materialized stats tables — the Spark analogue of the reference's
 # long-lived propLengthTracker + inverted-index statistics. The four
-# frames are WRITTEN parquet tables under .artifacts/bm25 (postings
+# tables are WRITTEN parquet under .artifacts/bm25 (postings
 # partitioned by a 64-way term hash bucket so a query's term lookup
-# partition-prunes; doclen partitioned by prop), built once at first use
-# per (source fingerprint, property set) and SURVIVING the session —
+# partition-prunes; doclen partitioned by prop; the two small stats
+# tables written and read on the driver), built once at first use per
+# (source fingerprint, property set) and SURVIVING the session —
 # exactly like the reference's LSM inverted segments. The session
 # handles are a registry entry stamped with the source fingerprint: a
 # write to the table, through crud or out of band, makes the next query
@@ -281,19 +288,21 @@ TERM_BUCKETS = 64
 # (v2: corpus_stats stores mergeable sum_len instead of avg_len, and the
 # props.json manifest enables incremental advance)
 ARTIFACT_FORMAT = 2
-# memory-cache the written postings/doclen tables for repeat queries;
+# memory-cache the session's postings handle for repeat queries;
 # disable to exercise the pure file-backed partition-pruned scans
 CACHE_INDEX_TABLES = True
+# the postings handle every read scores from
+POSTINGS_COLS = ("prop", "_doc", "_term", "_f", "_len")
 
 
 def _load_or_build_index_tables(
     corpus: DataFrame, spec: "BM25Spec", table_key: tuple
-) -> tuple[CorpusStats, DataFrame, DataFrame]:
-    """(driver-side statistics, postings, doclen) of the index: read
-    from the written artifact if present, else built, written, and
-    served from the frames just built. A reload reads the two small
-    tables to the driver and the two large ones as parquet scans with
-    term / prop pushdown — the plan never re-tokenizes the corpus."""
+) -> tuple[CorpusStats, DataFrame]:
+    """(driver-side statistics, postings handle) of the index: read
+    from the written artifact if present, else built and written. A
+    reload reads the two small tables on the driver and the two large
+    ones as parquet scans with term / prop pushdown — the plan never
+    re-tokenizes the corpus."""
     from weaviate_spark.functions.text import user_dict_digest
 
     sf_dir, collection = table_key
@@ -301,64 +310,98 @@ def _load_or_build_index_tables(
     root = artifacts.artifact_dir(
         BM25_ARTIFACT_ROOT, sf_dir, collection,
         (props_key, spec.fold, ARTIFACT_FORMAT, user_dict_digest(spec.collection)))
-    spark = corpus.sparkSession
     if root is None:
         # synthetic / in-memory corpus: session-scoped build, no artifact
-        cs, tdf, post, dl = build_bm25_index(
+        cs, tdf, post = build_bm25_index(
             corpus, spec.properties, spec.id_col, spec.fold,
             class_name=spec.collection)
-        return load_stats(cs, tdf), post, dl.cache()
+        return load_stats(cs, tdf), _postings_handle(post)
     built = artifacts.build(root, lambda r: _write_index_artifact(corpus, spec, r))
     if built is not None:
         return built
-    stats = load_stats(spark.read.parquet(f"{root}/corpus_stats").toArrow(),
-                       spark.read.parquet(f"{root}/term_df").toArrow())
-    return (stats, *_read_index_frames(spark, root))
+    import pyarrow.parquet as pq
+
+    stats = load_stats(pq.read_table(f"{root}/corpus_stats"),
+                       pq.read_table(f"{root}/term_df"))
+    return stats, _read_postings(corpus.sparkSession, root)
 
 
-def _read_index_frames(spark: SparkSession, root: str
-                       ) -> tuple[DataFrame, DataFrame]:
-    """The written postings and doclen tables, memory-cached for repeat
-    queries when CACHE_INDEX_TABLES (the local analogue of OS page cache
-    + executor block cache); at 100 TB you leave this off and rely on
-    the term-bucket partition pruning of the file-backed scan, which
-    tests/test_bm25.py pins with the flag disabled."""
-    post = spark.read.parquet(f"{root}/postings")
-    dl = spark.read.parquet(f"{root}/doclen")
-    return (post.cache(), dl.cache()) if CACHE_INDEX_TABLES else (post, dl)
+def _postings_handle(post: DataFrame) -> DataFrame:
+    """The session's postings frame ``POSTINGS_COLS``, cached once and
+    hash-partitioned by document: a read's per-document aggregation
+    reuses that partitioning, so it runs as one stage with no exchange.
+    The cache fills at the first read."""
+    return post.select(*POSTINGS_COLS).repartition("_doc").cache()
+
+
+def _read_postings(spark: SparkSession, root: str) -> DataFrame:
+    """The written postings with each document's length joined from
+    the doclen table. With CACHE_INDEX_TABLES this is the cached
+    doc-clustered handle (the local analogue of OS page cache +
+    executor block cache); at 100 TB you leave it off and the handle is
+    the lazy join, which keeps the ``_tb`` partition column, so the
+    term-bucket pruning reaches the postings scan (tests/test_bm25.py
+    pins it with the flag disabled)."""
+    post = spark.read.parquet(f"{root}/postings").join(
+        spark.read.parquet(f"{root}/doclen"), ["prop", "_doc"])
+    return _postings_handle(post) if CACHE_INDEX_TABLES else post
+
+
+def _write_small(table: "pa.Table", path: str, mode: str) -> None:
+    """Write (``mode`` overwrite) or append one file of a small index
+    table on the driver, without a Spark job."""
+    import pyarrow.parquet as pq
+
+    if mode == "overwrite":
+        shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(table, f"{path}/part-{uuid.uuid4().hex}.parquet",
+                   compression="zstd")
+
+
+def _summed_per_key(path: str, keys: list[str]) -> "pa.Table":
+    """A small index table with its delta rows merged: one row per key,
+    every other column summed."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(path)
+    vals = [c for c in t.column_names if c not in keys]
+    merged = t.group_by(keys).aggregate([(c, "sum") for c in vals])
+    return merged.select(keys + [f"{c}_sum" for c in vals]).rename_columns(keys + vals)
 
 
 def _write_index_tables(root: str, mode: str, cs: "pa.Table", tdf: "pa.Table",
-                        post: DataFrame, dl: DataFrame) -> None:
+                        post: DataFrame) -> None:
     """Write (``mode`` overwrite) or append the four index tables:
-    postings partitioned by a term hash bucket, doclen by prop.
-    ``post`` comes from build_bm25_index, already clustered by bucket,
-    so each bucket is written by one task, as one file."""
-    spark = post.sparkSession
-    spark.createDataFrame(cs).write.mode(mode).parquet(f"{root}/corpus_stats")
-    spark.createDataFrame(tdf).write.mode(mode).parquet(f"{root}/term_df")
+    postings partitioned by a term hash bucket, doclen (derived from
+    the postings) by prop. ``post`` comes from build_bm25_index,
+    already clustered by bucket, so each bucket is written by one task,
+    as one file. ``_len`` is not written with the postings: doclen holds
+    it once per document."""
+    _write_small(cs, f"{root}/corpus_stats", mode)
+    _write_small(tdf, f"{root}/term_df", mode)
     (
-        post.withColumn("_tb", F.crc32(F.col("_term")) % TERM_BUCKETS)
+        post.select("prop", "_doc", "_term", "_f")
+        .withColumn("_tb", F.crc32(F.col("_term")) % TERM_BUCKETS)
         .write.partitionBy("_tb").mode(mode)
         .parquet(f"{root}/postings")
     )
-    dl.write.partitionBy("prop").mode(mode).parquet(f"{root}/doclen")
+    (
+        post.groupBy("prop", "_doc").agg(F.sum("_f").alias("_len"))
+        .write.partitionBy("prop").mode(mode).parquet(f"{root}/doclen")
+    )
 
 
 def _write_index_artifact(
     corpus: DataFrame, spec: "BM25Spec", root: str
-) -> tuple[CorpusStats, DataFrame, DataFrame]:
+) -> tuple[CorpusStats, DataFrame]:
     import json
 
-    cs, tdf, post, dl = build_bm25_index(
+    cs, tdf, post = build_bm25_index(
         corpus, spec.properties, spec.id_col, spec.fold,
         class_name=spec.collection,
     )
-    if CACHE_INDEX_TABLES:
-        # postings is already materialized (the build's checkpoint);
-        # doclen's cache fills while it is written below
-        dl = dl.cache()
-    _write_index_tables(root, "overwrite", cs, tdf, post, dl)
+    _write_index_tables(root, "overwrite", cs, tdf, post)
     # manifest: lets advance_bm25_artifacts rebuild THIS property
     # set's delta frames for an appended batch (props_h is a hash —
     # not invertible without it)
@@ -368,9 +411,10 @@ def _write_index_artifact(
             "id_col": spec.id_col,
             "fold": spec.fold,
         }, mf)
-    if not CACHE_INDEX_TABLES:
-        post, dl = _read_index_frames(corpus.sparkSession, root)
-    return load_stats(cs, tdf), post, dl
+    # the build's postings already carry _len: no join with doclen
+    handle = (_postings_handle(post) if CACHE_INDEX_TABLES
+              else _read_postings(corpus.sparkSession, root))
+    return load_stats(cs, tdf), handle
 
 
 def compact_bm25_artifacts(
@@ -405,23 +449,13 @@ def _compact_under(spark, sf_dir: str, collection: str, fp_root: str) -> int:
         root = f"{fp_root}/{props_h}"
         if not artifacts.committed(root):
             continue
-        cs = (
-            spark.read.parquet(f"{root}/corpus_stats")
-            .groupBy("prop")
-            .agg(F.sum("n_docs").alias("n_docs"),
-                 F.sum("n_docs_with_prop").alias("n_docs_with_prop"),
-                 F.sum("sum_len").alias("sum_len"))
-        )
-        tdf = (
-            spark.read.parquet(f"{root}/term_df")
-            .groupBy("prop", "term").agg(F.sum("df").alias("df"))
-        )
         post = spark.read.parquet(f"{root}/postings")
         dl = spark.read.parquet(f"{root}/doclen")
         staging = f"{root}.compacting"
         shutil.rmtree(staging, ignore_errors=True)
-        cs.write.parquet(f"{staging}/corpus_stats")
-        tdf.write.parquet(f"{staging}/term_df")
+        for name, keys in (("corpus_stats", ["prop"]), ("term_df", ["prop", "term"])):
+            _write_small(_summed_per_key(f"{root}/{name}", keys),
+                         f"{staging}/{name}", "overwrite")
         (
             post.repartition(F.col("_tb"))
             .write.partitionBy("_tb").parquet(f"{staging}/postings")
@@ -508,25 +542,26 @@ def advance_bm25_artifacts(
             with open(manifest) as mf:
                 m = json.load(mf)
             props = [BM25Prop(name=p[0], tokenization=p[1]) for p in m["properties"]]
-            cs, tdf, post, dl = build_bm25_index(
+            cs, tdf, post = build_bm25_index(
                 batch_df, props, m["id_col"], m["fold"],
                 class_name=collection,
             )
             # uncommitted while the four appends land: a crash mid-append
             # makes the next query rebuild, not serve half-advanced stats
             with artifacts.uncommitted(root):
-                _write_index_tables(root, "append", cs, tdf, post, dl)
+                _write_index_tables(root, "append", cs, tdf, post)
 
 
 def with_materialized_stats(
     spec: BM25Spec, corpus: DataFrame, table_key: tuple
 ) -> BM25Spec:
-    """Return a spec whose ``stats`` (including the postings/doclen
-    inverted-index tables) come from the session-level materialized
-    tables (built on first use). Query-time cost after the build: a
-    driver-side lookup of the query terms' document frequencies plus a
-    term-filtered postings lookup — no Spark job before the query's
-    own, no document tokenized, no corpus scan."""
+    """Return a spec whose ``stats`` (including the postings handle,
+    with each document's length on every entry) come from the
+    session-level materialized tables (built on first use). Query-time
+    cost after the build: a driver-side lookup of the query terms'
+    document frequencies plus a term-filtered postings lookup — no
+    Spark job before the query's own, no document tokenized, no corpus
+    scan."""
     if spec.stats is not None:
         return spec
     from weaviate_spark.functions.text import user_dict_digest
@@ -539,11 +574,11 @@ def with_materialized_stats(
     # rebuilds the reference's tokenizers the same way)
     variant = (*table_key[2:], props_key, spec.fold,
                user_dict_digest(spec.collection))
-    # postings/doclen sit beside the stats so the registry releases them
-    stats, post, dl = registry.resolve(
+    # the postings handle sits beside the stats so the registry releases it
+    stats, post = registry.resolve(
         corpus.sparkSession, "bm25", source_paths(*table_key[:2]), variant,
         lambda: _load_or_build_index_tables(corpus, spec, table_key))
-    return replace(spec, stats=replace(stats, postings=post, doclen=dl))
+    return replace(spec, stats=replace(stats, postings=post))
 
 
 def _resolve_spec(spec: BM25Spec) -> BM25Spec:
@@ -642,13 +677,13 @@ def bm25_score_df(
         terms = sorted(qboost)
         if stats_from_tables and spec.stats.postings is not None:
             # inverted-index path: NO document is tokenized at query
-            # time — term frequencies come from the term-filtered
-            # postings lookup (pushdown on term), lengths from doclen;
-            # only docs holding >= 1 query term ever materialize (docs
-            # without matches can't score, same result set)
+            # time — term frequencies and lengths come from the
+            # term-filtered postings lookup (pushdown on term); only docs
+            # holding >= 1 query term ever materialize (docs without
+            # matches can't score, same result set)
             post = spec.stats.postings
             if "_tb" in post.columns:
-                # written-table layout: the term hash-bucket is a
+                # file-backed handle: the term hash-bucket is a
                 # partition column, so this predicate prunes the scan to
                 # the query terms' directories (PartitionFilters)
                 import zlib
@@ -665,14 +700,12 @@ def bm25_score_df(
             # per term of pure driver latency — guide §1 measured ~1 ms
             # per py4j command here). Terms are word-tokenized
             # [\p{L}\p{N}]+ runs, so the quoted literal needs no escaping.
+            # _len is one value per (prop, _doc); grouping by _doc reuses
+            # the cached handle's partitioning (no exchange).
             wide = post.groupBy("_doc").agg(*[
                 F.expr(f"sum(CASE WHEN _term = '{t}' THEN _f ELSE 0 END) AS _f{i}")
                 for i, t in enumerate(terms)
-            ]).join(
-                spec.stats.doclen.where(F.col("prop") == prop.name)
-                .select("_doc", "_len"),
-                "_doc",
-            )
+            ], F.expr("max(_len) AS _len"))
             if spec.where is not None:
                 wide = wide.join(
                     df.select(F.col(id_col).alias("_doc")), "_doc", "semi"

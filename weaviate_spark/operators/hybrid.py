@@ -172,85 +172,70 @@ def fuse(
     leg). The window form references each leg once — no per-leg cache,
     no broadcast build, identical scores (same min/max/rank doubles,
     same tie rules). Measured r11: hybrid_relative_score dropped from
-    9 to 5 jobs per execution."""
-    from pyspark.sql import Window
+    9 to 5 jobs per execution.
 
+    Every column is ONE SQL string parsed JVM-side (F.expr), like
+    bm25_score_df's: the composed F.* form cost a py4j round trip per
+    function, column and literal. Values are identical: same
+    arithmetic order, same literals (``repr`` keeps the exact double,
+    the D suffix keeps it a double), same rounding."""
+    idc = f"`{id_col}`"
     contribs = []
     for li, (leg_df, weight) in enumerate(legs):
-        # the leg is a <= cap-row frame in one partition (GlobalLimit);
-        # coalesce(1) makes that explicit so the unpartitioned window
-        # below is bounded by construction
-        leg1 = leg_df.coalesce(1)
+        w = f"{float(weight)!r}D"
         if fusion == "ranked":
             # weight / (rank + 60), rank 0-based (hybrid_fusion.go:33),
             # ranked by (_secondary desc, id asc)
-            rank = F.row_number().over(
-                Window.partitionBy().orderBy(
-                    F.col("_secondary").desc(), F.col(id_col).asc())
-            ) - 1
-            c = leg1.select(
-                F.col(id_col),
-                (F.lit(weight) / (rank + 60)).alias("_contrib"),
-                F.col("_secondary").alias("_sec"),
-            )
+            contrib = (f"{w} / ((row_number() OVER (ORDER BY _secondary DESC, "
+                       f"{idc} ASC) - 1) + 60)")
         elif fusion == "relativeScore":
-            w = Window.partitionBy()
-            mx = F.max("_secondary").over(w)
-            mn = F.min("_secondary").over(w)
-            c = leg1.select(
-                id_col,
-                F.when(mx == mn, F.lit(weight)).otherwise(
-                    F.lit(weight) * (F.col("_secondary") - mn) / (mx - mn)
-                ).alias("_contrib"),
-                F.col("_secondary").alias("_sec"),
-            )
+            mx, mn = "max(_secondary) OVER ()", "min(_secondary) OVER ()"
+            contrib = (f"CASE WHEN {mx} = {mn} THEN {w} "
+                       f"ELSE {w} * (_secondary - {mn}) / ({mx} - {mn}) END")
         else:
             raise ValueError(f"unknown fusion {fusion!r}")
+        # the leg is a <= cap-row frame in one partition (GlobalLimit);
+        # coalesce(1) makes that explicit so the unpartitioned window
+        # is bounded by construction
+        c = leg_df.coalesce(1).select(
+            idc, F.expr(f"{contrib} AS _contrib"), "_secondary")
         if explain_names is not None:
-            name = explain_names[li]
+            name = explain_names[li].replace("'", "''")
             # round BEFORE formatting: raw contributions land exactly on
             # %.6f half boundaries (0.5/64 = 0.0078125), where Java's
             # formatter (HALF_UP) and C printf (half-even) disagree; a
             # 6dp-rounded double is never at a format boundary, so both
             # engines print identically
             if fusion == "ranked":
-                line = F.format_string(
-                    f"Hybrid (Result Set {name}) Document %d contributed "
-                    "%.6f to the score",
-                    F.col(id_col), F.round(F.col("_contrib"), 6),
-                )
+                line = (f"format_string('Hybrid (Result Set {name}) Document %d "
+                        f"contributed %.6f to the score', {idc}, round(_contrib, 6))")
             else:
-                line = F.format_string(
-                    f"Hybrid (Result Set {name}) Document %d: original "
-                    "score %.6f, normalized score: %.6f",
-                    F.col(id_col), F.round(F.col("_sec"), 6),
-                    F.round(F.col("_contrib"), 6),
-                )
-            c = c.select(id_col, "_contrib", F.lit(li).alias("_leg"),
-                         line.alias("_line"))
+                line = (f"format_string('Hybrid (Result Set {name}) Document %d: "
+                        "original score %.6f, normalized score: %.6f', "
+                        f"{idc}, round(_secondary, 6), round(_contrib, 6))")
+            c = c.select(idc, "_contrib", F.expr(f"{li} AS _leg"),
+                         F.expr(f"{line} AS _line"))
         else:
-            c = c.select(id_col, "_contrib")
+            c = c.select(idc, "_contrib")
         contribs.append(c)
 
     out = contribs[0]
     for c in contribs[1:]:
         out = out.unionByName(c)
+    score = F.expr(f"round(sum(_contrib), {int(round_digits)}) AS _score")
     if explain_names is None:
-        return out.groupBy(id_col).agg(
-            F.round(F.sum("_contrib"), round_digits).alias("_score"))
-    grouped = out.groupBy(id_col).agg(
-        F.round(F.sum("_contrib"), round_digits).alias("_score"),
-        F.array_sort(F.collect_list(F.struct("_leg", "_line"))).alias("_lines"),
-    )
-    lines = F.transform(F.col("_lines"), lambda s: s["_line"])
+        return out.groupBy(idc).agg(score)
+    grouped = out.groupBy(idc).agg(
+        score, F.expr("array_sort(collect_list(struct(_leg, _line))) AS _lines"))
+    lines = "transform(_lines, s -> s._line)"
     if fusion == "ranked":
         # hybrid_fusion.go:40-47: "{prev}\n{line}" accumulated in leg order
-        exp = F.concat(F.lit("\n"), F.array_join(lines, "\n"))
+        exp = f"concat(chr(10), array_join({lines}, chr(10)))"
     else:
         # hybrid_fusion.go:139-146: latest leg first, " - " chained onto
         # the previous accumulation (which carries its own leading \n)
-        exp = F.concat(F.lit("\n"), F.array_join(F.reverse(lines), " - \n"))
-    return grouped.select(id_col, "_score", exp.alias("explain_score"))
+        exp = f"concat(chr(10), array_join(reverse({lines}), concat(' - ', chr(10))))"
+    return grouped.select(idc, "_score", F.expr(f"{exp} AS explain_score"))
 
 
 def hybrid_oracle_sql(

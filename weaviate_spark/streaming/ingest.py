@@ -94,12 +94,15 @@ def stream_ingest_with_index_maintenance(
       session's persisted shingle/signature/shingle-set near-dup index
       (dedup.append_to_dedup_index; merge deferred to compaction).
     * ``bm25=True`` — advance the written BM25 inverted-index artifacts
-      (bm25.advance_bm25_artifacts): postings/doclen gain the batch's
-      segment files, term_df/corpus_stats gain delta rows, and the
-      artifact re-roots to the new source fingerprint — no corpus
-      re-tokenize. Requires ``target_dir`` shaped
-      ``<sf_dir>/<collection>.parquet`` (the table-loader layout the
-      artifacts are keyed by) and an append-only id stream.
+      (bm25.advance_bm25_artifacts): the postings and doclen tables
+      gain the batch's segment files, term_df/corpus_stats one delta
+      file each (written on the driver), and the artifact re-roots to
+      the new source fingerprint — no corpus re-tokenize. The next
+      query reloads the advanced artifact: postings joined with doclen
+      into one cached frame clustered by document. Requires
+      ``target_dir`` shaped ``<sf_dir>/<collection>.parquet`` (the
+      table-loader layout the artifacts are keyed by) and an
+      append-only id stream.
     * ``vector_index_key`` — record an append segment against every
       quantized vector index (BQ/PQ/RQ and the IVF cell assignment that
       rides on PQ) built under the key
