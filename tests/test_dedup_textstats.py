@@ -527,7 +527,7 @@ def test_incremental_dedup_index_append(spark):
         [(2, base + " tomorrow"), (3, base + " yesterday")],
         ["doc_id", "text"],
     )
-    append_to_dedup_index(new_docs, "doc_id", "text", 3, key,
+    append_to_dedup_index(new_docs, "doc_id", key,
                           before=registry.stamp(source_paths(*key)))
     grown = corpus_a.where("doc_id != 3").unionByName(new_docs)
     got = sorted(
@@ -574,17 +574,16 @@ def test_incremental_index_variants_and_segments(spark):
                       jaccard_threshold=0.5, table_key=key).collect()
 
     # two append segments: doc 3 arrives, then is REPLACED (and doc 2
-    # becomes a near-dup of 1) — with num_hashes=16 passed, yet the
-    # 32-hash sibling must not go stale
+    # becomes a near-dup of 1) — the 32-hash sibling must not go stale
     append_to_dedup_index(
         spark.createDataFrame([(3, "interim text that will be replaced")],
                               ["doc_id", "text"]),
-        "doc_id", "text", 3, key, before=registry.stamp(source_paths(*key)))
+        "doc_id", key, before=registry.stamp(source_paths(*key)))
     append_to_dedup_index(
         spark.createDataFrame(
             [(3, base + " yesterday"), (2, base + " tomorrow")],
             ["doc_id", "text"]),
-        "doc_id", "text", 3, key, before=registry.stamp(source_paths(*key)))
+        "doc_id", key, before=registry.stamp(source_paths(*key)))
 
     logical = spark.createDataFrame(
         [(1, base), (2, base + " tomorrow"), (3, base + " yesterday")],

@@ -308,7 +308,8 @@ def test_incremental_vector_index_append(spark):
     built under the corpus key (here a BQ table and a PQ table) as
     O(batch) segments; after compaction the indexes equal a from-scratch
     encode of the grown corpus, with last-write-wins for re-arrived ids
-    — the async vector-index-queue analogue."""
+    (a re-arrived id with a NULL vector leaves every index) — the async
+    vector-index-queue analogue."""
     import random
 
     from pyspark.sql import functions as F
@@ -333,11 +334,11 @@ def test_incremental_vector_index_append(spark):
     with_pq_index(df, "vec_id", "embedding", CODEBOOK, key)
     with_sq_index(df, "vec_id", "embedding", 64, -1.0, 1.0, key)
 
-    # batch replaces vec_id 3 and adds 30/31
-    batch_rows = [(3, [1.0] * 64)] + mk(2, 30)
+    # batch replaces vec_id 3, nulls vec_id 5 and adds 30/31
+    batch_rows = [(3, [1.0] * 64), (5, None)] + mk(2, 30)
     batch = spark.createDataFrame(batch_rows, ["vec_id", "embedding"])
     before = registry.stamp(source_paths(*key))
-    assert append_to_vector_indexes(batch, key, before) == 3
+    assert append_to_vector_indexes(batch, "vec_id", key, before) == 3
 
     logical = {i: v for i, v in base_rows}
     logical.update({i: v for i, v in batch_rows})
@@ -349,12 +350,12 @@ def test_incremental_vector_index_append(spark):
     }
     want_bq = {
         (r["vec_id"], r["_bq0"], r["_bq1"])
-        for r in grown.select(
+        for r in grown.where(F.col("embedding").isNotNull()).select(
             "vec_id",
             *[c.alias(f"_bq{w}") for w, c in enumerate(bq_encode(F.col("embedding"), 64))],
         ).collect()
     }
-    assert got_bq == want_bq and len(got_bq) == 32
+    assert got_bq == want_bq and len(got_bq) == 31
 
     got_pq = {
         (r["_id"], tuple(r["_pq"]))
@@ -366,7 +367,7 @@ def test_incremental_vector_index_append(spark):
             grown, "vec_id", "embedding", CODEBOOK, ("fresh-vec", "emb")
         ).collect()
     }
-    assert got_pq == want_pq and len(got_pq) == 32
+    assert got_pq == want_pq and len(got_pq) == 31
 
     got_sq = {
         (r["vec_id"], *(r[f"_sq{w}"] for w in range(16)))
@@ -375,8 +376,9 @@ def test_incremental_vector_index_append(spark):
     }
     want_sq = {
         (i, *sq_pack_py(v, -1.0, 1.0)) for i, v in logical.items()
+        if v is not None
     }
-    assert got_sq == want_sq and len(got_sq) == 32
+    assert got_sq == want_sq and len(got_sq) == 31
     registry.clear()
 
 

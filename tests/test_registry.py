@@ -5,6 +5,8 @@ advanced them, and built once under concurrent resolvers."""
 
 from __future__ import annotations
 
+import pathlib
+import re
 import sys
 import threading
 import types
@@ -141,3 +143,19 @@ def test_release_never_waits_on_a_busy_entry(session, tmp_path):
     assert released and not builder.is_alive()
     assert not registry.View("t")
     assert registry.resolve(session, "t", (p,), (), lambda: "new") == "new"
+
+
+def test_no_copied_segment_store():
+    """Segment append and compaction live in incremental.py only; every
+    index that advances by appends (vector codes, near-dup) resolves
+    and appends through it."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    pattern = re.compile(r"^\s*_MAX_SEGMENTS\s*=|^\s*def _compact\(")
+    hits = [
+        f"{path.relative_to(root)}:{no}: {line.strip()}"
+        for path in sorted((root / "weaviate_spark").rglob("*.py"))
+        if path.relative_to(root).as_posix() != "weaviate_spark/incremental.py"
+        for no, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert not hits, "use weaviate_spark/incremental.py instead:\n" + "\n".join(hits)

@@ -78,7 +78,7 @@ def test_stream_ingest_maintains_dedup_index(spark, tmp_path):
     from weaviate_spark.operators.dedup import (
         minhash_lsh_pairs, with_shingle_table,
     )
-    from weaviate_spark.streaming.ingest import stream_ingest_with_dedup_index
+    from weaviate_spark.streaming.ingest import stream_ingest_with_index_maintenance
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
     schema = "doc_id long, text string"
@@ -97,8 +97,8 @@ def test_stream_ingest_maintains_dedup_index(spark, tmp_path):
          (3, "unrelated words describing entirely different topics")],
         schema,
     ).write.parquet(src)
-    q = stream_ingest_with_dedup_index(
-        spark, src, schema, tgt, "doc_id", "text", key,
+    q = stream_ingest_with_index_maintenance(
+        spark, src, schema, tgt, "doc_id", dedup_index_key=key,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     assert q.awaitTermination(120)  # False = still running: timed out
@@ -131,7 +131,7 @@ def test_stream_ingest_upsert_sink_replaces_by_id(spark, tmp_path):
     from weaviate_spark.operators.dedup import (
         minhash_lsh_pairs, with_shingle_table,
     )
-    from weaviate_spark.streaming.ingest import stream_ingest_with_dedup_index
+    from weaviate_spark.streaming.ingest import stream_ingest_with_index_maintenance
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
     schema = "doc_id long, text string"
@@ -151,8 +151,8 @@ def test_stream_ingest_upsert_sink_replaces_by_id(spark, tmp_path):
         [(2, base + " tomorrow"), (3, "still unrelated filler content entirely")],
         schema,
     ).write.parquet(src)
-    q = stream_ingest_with_dedup_index(
-        spark, src, schema, tgt, "doc_id", "text", key,
+    q = stream_ingest_with_index_maintenance(
+        spark, src, schema, tgt, "doc_id", dedup_index_key=key,
         checkpoint_dir=str(tmp_path / "ckpt"), upsert=True,
     )
     assert q.awaitTermination(120)  # False = still running: timed out
@@ -230,7 +230,7 @@ def test_stream_ingest_maintains_bm25_and_dedup(spark, tmp_path):
         schema,
     ).write.parquet(src)
     q = stream_ingest_with_index_maintenance(
-        spark, src, schema, tgt, "doc_id", text_col="text",
+        spark, src, schema, tgt, "doc_id",
         dedup_index_key=key, bm25=True,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )

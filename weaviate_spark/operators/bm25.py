@@ -107,9 +107,10 @@ class CorpusStats:
     and document lengths come from one term-filtered postings lookup —
     the same work the reference's keyword search does against its LSM
     inverted segments, whose entries carry the property length. On disk
-    postings are partitioned by term bucket (a query reads only its own
-    terms' directories) and lengths live in a doclen table beside them;
-    see ``_postings_handle`` for how the two meet in a session.
+    postings are partitioned by term bucket and lengths live in a doclen
+    table beside them; see ``_postings_handle`` for how the two meet in
+    a session. Without postings, scoring recomputes the statistics from
+    the corpus.
 
     ``term_df`` is the whole (prop, term, df) table on the driver, as
     Arrow: a read looks up its own terms with ``doc_freq``, no job."""
@@ -272,8 +273,8 @@ def load_stats(corpus_stats: "pa.Table", term_df: "pa.Table") -> CorpusStats:
 # Materialized stats tables — the Spark analogue of the reference's
 # long-lived propLengthTracker + inverted-index statistics. The four
 # tables are WRITTEN parquet under .artifacts/bm25 (postings
-# partitioned by a 64-way term hash bucket so a query's term lookup
-# partition-prunes; doclen partitioned by prop; the two small stats
+# partitioned by a 64-way term hash bucket; doclen partitioned by
+# prop; the two small stats
 # tables written and read on the driver), built once at first use per
 # (source fingerprint, property set) and SURVIVING the session —
 # exactly like the reference's LSM inverted segments. The session
@@ -288,9 +289,6 @@ TERM_BUCKETS = 64
 # (v2: corpus_stats stores mergeable sum_len instead of avg_len, and the
 # props.json manifest enables incremental advance)
 ARTIFACT_FORMAT = 2
-# memory-cache the session's postings handle for repeat queries;
-# disable to exercise the pure file-backed partition-pruned scans
-CACHE_INDEX_TABLES = True
 # the postings handle every read scores from
 POSTINGS_COLS = ("prop", "_doc", "_term", "_f", "_len")
 
@@ -335,16 +333,12 @@ def _postings_handle(post: DataFrame) -> DataFrame:
 
 
 def _read_postings(spark: SparkSession, root: str) -> DataFrame:
-    """The written postings with each document's length joined from
-    the doclen table. With CACHE_INDEX_TABLES this is the cached
-    doc-clustered handle (the local analogue of OS page cache +
-    executor block cache); at 100 TB you leave it off and the handle is
-    the lazy join, which keeps the ``_tb`` partition column, so the
-    term-bucket pruning reaches the postings scan (tests/test_bm25.py
-    pins it with the flag disabled)."""
-    post = spark.read.parquet(f"{root}/postings").join(
-        spark.read.parquet(f"{root}/doclen"), ["prop", "_doc"])
-    return _postings_handle(post) if CACHE_INDEX_TABLES else post
+    """The session handle of a written artifact: its postings with each
+    document's length joined from the doclen table, cached and
+    clustered by document (the local analogue of OS page cache +
+    executor block cache)."""
+    return _postings_handle(spark.read.parquet(f"{root}/postings").join(
+        spark.read.parquet(f"{root}/doclen"), ["prop", "_doc"]))
 
 
 def _write_small(table: "pa.Table", path: str, mode: str) -> None:
@@ -412,9 +406,7 @@ def _write_index_artifact(
             "fold": spec.fold,
         }, mf)
     # the build's postings already carry _len: no join with doclen
-    handle = (_postings_handle(post) if CACHE_INDEX_TABLES
-              else _read_postings(corpus.sparkSession, root))
-    return load_stats(cs, tdf), handle
+    return load_stats(cs, tdf), _postings_handle(post)
 
 
 def compact_bm25_artifacts(
@@ -607,8 +599,8 @@ def bm25_search(
 ) -> DataFrame:
     """Top-k BM25F search; returns (id_col, _score) plus match count.
 
-    Default path feeds scoring from the materialized stats tables, so
-    only candidate documents are tokenized per query; pass
+    Default path feeds scoring from the materialized index tables, so
+    no document is tokenized per query; pass
     ``use_stats_tables=False`` to recompute statistics from the corpus
     inside this query (the two paths produce identical scores —
     tests/test_bm25.py pins it, and the driver oracle is always the
@@ -656,13 +648,13 @@ def bm25_score_df(
     ONE shuffle: ``groupBy(doc).agg(count(*) AS len, sum(term = t_i) AS
     f_i ...)`` — doc length and all per-term frequencies come out of the
     same aggregation (wide form), so only doc rows (not token rows x
-    terms) move. With spec.stats set, the corpus pass disappears
-    entirely and only candidate docs are tokenized.
+    terms) move. With spec.stats set (the materialized tables and their
+    postings), no document is tokenized: see the inverted-index path.
     """
     id_col = spec.id_col
     if corpus_df is None:
         corpus_df = df
-    stats_from_tables = spec.stats is not None
+    postings = spec.stats.postings if spec.stats is not None else None
 
     analysis = _query_analysis(spec)
     n_docs_collection: float | None = (
@@ -675,24 +667,13 @@ def bm25_score_df(
         if not qboost:
             continue
         terms = sorted(qboost)
-        if stats_from_tables and spec.stats.postings is not None:
+        if postings is not None:
             # inverted-index path: NO document is tokenized at query
             # time — term frequencies and lengths come from the
-            # term-filtered postings lookup (pushdown on term); only docs
-            # holding >= 1 query term ever materialize (docs without
-            # matches can't score, same result set)
-            post = spec.stats.postings
-            if "_tb" in post.columns:
-                # file-backed handle: the term hash-bucket is a
-                # partition column, so this predicate prunes the scan to
-                # the query terms' directories (PartitionFilters)
-                import zlib
-
-                buckets = sorted({
-                    zlib.crc32(t.encode("utf-8")) % TERM_BUCKETS for t in terms
-                })
-                post = post.where(F.col("_tb").isin(buckets))
-            post = post.where(
+            # term-filtered postings lookup; only docs holding >= 1
+            # query term ever materialize (docs without matches can't
+            # score, same result set)
+            post = postings.where(
                 (F.col("prop") == prop.name) & F.col("_term").isin(terms)
             )
             # F.expr strings: each per-term aggregate is ONE py4j call
@@ -706,7 +687,7 @@ def bm25_score_df(
                 F.expr(f"sum(CASE WHEN _term = '{t}' THEN _f ELSE 0 END) AS _f{i}")
                 for i, t in enumerate(terms)
             ], F.expr("max(_len) AS _len"))
-            if spec.where is not None:
+            if spec.where is not None or corpus_df is not df:
                 wide = wide.join(
                     df.select(F.col(id_col).alias("_doc")), "_doc", "semi"
                 )
@@ -714,12 +695,11 @@ def bm25_score_df(
                              spec.stats.doc_freq(prop.name, terms),
                              spec.stats.avg_len.get(prop.name, 0.0)))
             continue
-        # with precomputed stats only candidates are tokenized; otherwise
-        # the corpus is (its wide agg also yields the stats)
-        base = df if stats_from_tables else corpus_df
-        # single-file inputs arrive as 1 partition — tokenization is the
-        # CPU-heavy stage, spread it (no-op when input is already split)
-        base = ensure_min_partitions(base)
+        # recompute path: the corpus is tokenized and its wide agg also
+        # yields the stats. Single-file inputs arrive as 1 partition —
+        # tokenization is the CPU-heavy stage, spread it (no-op when the
+        # input is already split)
+        base = ensure_min_partitions(corpus_df)
         toks = base.select(
             F.col(id_col).alias("_doc"),
             F.explode(tokenize_for_class(
@@ -734,29 +714,25 @@ def bm25_score_df(
             ],
         )
 
-        if stats_from_tables:
-            avg = spec.stats.avg_len.get(prop.name, 0.0)
-            n_t = spec.stats.doc_freq(prop.name, terms)
-        else:
-            # per-query stats over the unfiltered corpus: cache the wide
-            # frame — the stats agg and the scoring projection both read it
-            wide = wide.cache()
-            register_cache(wide)
-            srow = wide.agg(
-                F.avg("_len").alias("_avglen"),
-                *[
-                    F.sum(F.when(F.col(f"_f{i}") > 0, 1).otherwise(0)).alias(f"_n{i}")
-                    for i in range(len(terms))
-                ],
-            ).collect()[0]
-            n_t = {t: float(srow[f"_n{i}"] or 0) for i, t in enumerate(terms)}
-            avg = float(srow["_avglen"] or 0.0)
-            if corpus_df is not df:
-                # scoring reads only candidate docs out of the cached corpus
-                # aggregation (ids semi-join; no second tokenize pass)
-                wide = wide.join(
-                    df.select(F.col(id_col).alias("_doc")), "_doc", "semi"
-                )
+        # per-query stats over the unfiltered corpus: cache the wide
+        # frame — the stats agg and the scoring projection both read it
+        wide = wide.cache()
+        register_cache(wide)
+        srow = wide.agg(
+            F.avg("_len").alias("_avglen"),
+            *[
+                F.sum(F.when(F.col(f"_f{i}") > 0, 1).otherwise(0)).alias(f"_n{i}")
+                for i in range(len(terms))
+            ],
+        ).collect()[0]
+        n_t = {t: float(srow[f"_n{i}"] or 0) for i, t in enumerate(terms)}
+        avg = float(srow["_avglen"] or 0.0)
+        if corpus_df is not df:
+            # scoring reads only candidate docs out of the cached corpus
+            # aggregation (ids semi-join; no second tokenize pass)
+            wide = wide.join(
+                df.select(F.col(id_col).alias("_doc")), "_doc", "semi"
+            )
         per_prop.append((prop, wide, qboost, n_t, avg))
 
     if not per_prop:

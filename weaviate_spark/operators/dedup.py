@@ -34,16 +34,13 @@ collision behavior; mirrored exactly in SQL via
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from weaviate_spark import registry
+from weaviate_spark import incremental
 from weaviate_spark.cache import ensure_min_partitions, register_cache
 from weaviate_spark.functions.distance import as_matrix, distance, micros, pairwise
 from weaviate_spark.functions.text import tokenize
-from weaviate_spark.sources.tables import source_paths
 
 
 # ---------------------------------------------------------------------------
@@ -128,49 +125,9 @@ def minhash_signatures(
     return hashed.groupBy("_doc", "_i").agg(F.min("_h").alias("_minhash"))
 
 
-# The persisted dedup-index analogue, one derived-state registry entry
-# per (corpus key, shingle_n): an incremental near-dup pipeline keeps
-# per-doc shingle/signature/set tables and refreshes them on ingest, so
-# the tokenize+shingle pass is index maintenance, not query work. NOT
-# in the per-query cache registry (persists deliberately).
-#
-# The maintenance is LSM-shaped (the reference's analogue is per-write
-# inverted/LSM segment flush + background compaction,
-# adapters/repos/db/lsmkv/): each append lands as a small immutable
-# SEGMENT — one localCheckpoint'ed shingle frame per micro-batch, O(batch)
-# work — and queries read a compacted generation. Compaction (segment
-# merge, last-write-wins per doc id) runs lazily at the next query, or
-# inside append once _MAX_SEGMENTS segments pile up (bounding plan
-# depth), and is the only O(corpus) step — amortized exactly like LSM
-# compaction. Every frame is localCheckpoint(eager=True): lineage is
-# truncated (plans never deepen with batch count, and segments built in
-# a defunct foreachBatch don't root in the dead stream), and replaced
-# generations are reclaimed by Spark's ContextCleaner when the last
-# reference drops — so a query still holding last generation's frames
-# never races an explicit unpersist. The registry's per-entry lock
-# serializes an index's builds/appends/compactions and gives resolvers a
-# consistent sh/sig/sets generation — a long compaction of corpus A
-# never blocks the first query on corpus B.
-_MAX_SEGMENTS = 16
-
-
-class _DedupIndex:
-    """One index for a (corpus key, n): the compacted shingle table, the
-    signature variants derived from it (keyed by num_hashes — ALL
-    variants are maintained through compaction, none go stale), the
-    shingle-set table, and the not-yet-merged append segments. All field
-    access happens under the registry entry's lock."""
-
-    __slots__ = ("sh", "sig", "sets", "pending")
-
-    def __init__(self, sh: DataFrame):
-        self.sh = sh                  # (_doc, _shingle), compacted
-        self.sig = {}                 # num_hashes -> wide signature table
-        self.sets = None              # (_doc, _ss) or None (built on demand)
-        self.pending = []             # [(ids, shingle frame), ...] arrival order
-
-
 def _ckpt(df: DataFrame) -> DataFrame:
+    """The near-dup index's base build checkpoint (a traced benchmark
+    run times index builds by this call)."""
     return df.localCheckpoint(eager=True)
 
 
@@ -188,50 +145,6 @@ def _sig_agg(sh: DataFrame, num_hashes: int) -> DataFrame:
     )
 
 
-def _compact(idx: "_DedupIndex") -> None:
-    """Merge pending segments into the next generation (caller holds
-    the index entry's lock). Last-write-wins per doc id: a doc takes its rows
-    from the latest segment that carries its id (matching the
-    reference's object-upsert semantics — a re-arrived id is a
-    replacement), ids in any segment drop their old-generation rows via
-    a broadcast anti-join, and every signature variant is re-derived
-    for the affected docs from the same merged shingle rows. All three
-    tables advance together under the lock, so resolvers never see a
-    torn generation."""
-    if not idx.pending:
-        return
-    parts_ids, parts_sh = [], []
-    for seq, (ids, seg_sh) in enumerate(idx.pending):
-        parts_ids.append(ids.select("_doc", F.lit(seq).alias("_seq")))
-        parts_sh.append(seg_sh.select("_doc", "_shingle", F.lit(seq).alias("_seq")))
-    all_ids = reduce(DataFrame.unionByName, parts_ids)
-    all_sh = reduce(DataFrame.unionByName, parts_sh)
-    latest = all_ids.groupBy("_doc").agg(F.max("_seq").alias("_seq"))
-    # join on (doc, seq) keeps only each doc's latest version; a doc
-    # whose latest text is too short to shingle correctly ends up with
-    # zero rows (but its id still evicts the old rows below). The
-    # dropDuplicates guards a retried micro-batch re-appending an
-    # identical segment and duplicate ids within one batch.
-    new_sh = (
-        all_sh.join(latest, ["_doc", "_seq"])
-        .select("_doc", "_shingle")
-        .dropDuplicates(["_doc", "_shingle"])
-    )
-    ids = latest.select("_doc")
-
-    def _merge(old: DataFrame | None, fresh: DataFrame) -> DataFrame | None:
-        if old is None:
-            return None
-        return _ckpt(
-            old.join(F.broadcast(ids), "_doc", "left_anti").unionByName(fresh)
-        )
-
-    sh = _merge(idx.sh, new_sh)
-    sig = {k: _merge(old_sig, _sig_agg(new_sh, k)) for k, old_sig in idx.sig.items()}
-    sets = _merge(idx.sets, shingle_sets(new_sh))
-    idx.sh, idx.sig, idx.sets, idx.pending = sh, sig, sets, []
-
-
 def _resolve_index(
     df: DataFrame,
     id_col: str,
@@ -241,29 +154,25 @@ def _resolve_index(
     num_hashes: int | None = None,
     want_sets: bool = False,
 ) -> tuple[DataFrame, DataFrame | None, DataFrame | None]:
-    """Return (shingle, signature, set) tables from ONE generation —
-    building, compacting, or extending (a new num_hashes variant, the
-    sets table) under the index lock, so a query never mixes tables
-    from two generations while a streaming append runs."""
-    def _current(idx: _DedupIndex):
-        if idx.pending:
-            _compact(idx)
-        if num_hashes is not None and num_hashes not in idx.sig:
-            idx.sig[num_hashes] = _ckpt(_sig_agg(idx.sh, num_hashes))
-        if want_sets and idx.sets is None:
-            idx.sets = _ckpt(shingle_sets(idx.sh))
-        return (
-            idx.sh,
-            idx.sig.get(num_hashes) if num_hashes is not None else None,
-            idx.sets if want_sets else None,
-        )
-
-    return registry.resolve(
-        df.sparkSession, "dedup", source_paths(*table_key[:2]),
-        (*table_key[2:], n),
-        lambda: _DedupIndex(_ckpt(shingle_df(df, id_col, text_col, n))),
-        use=_current,
+    """(shingle, signature, set) tables of the persisted near-dup index
+    of (corpus key, n), from ONE generation. The shingle table is an
+    index of the segment store (incremental.py, registry family
+    "dedup"): built here once, advanced by append_to_dedup_index,
+    rebuilt when the table is written otherwise. The signature variants
+    (by num_hashes) and the set table are its derived per-doc tables,
+    built on first request and maintained through every compaction."""
+    derived = {}
+    if num_hashes is not None:
+        derived["sig", num_hashes] = lambda sh: _sig_agg(sh, num_hashes)
+    if want_sets:
+        derived["sets"] = shingle_sets
+    sh, tables = incremental.resolve(
+        df.sparkSession, "dedup", table_key, (n,), "_doc",
+        lambda: _ckpt(shingle_df(df, id_col, text_col, n)),
+        lambda batch: shingle_df(batch, id_col, text_col, n),
+        derived,
     )
+    return sh, tables.get(("sig", num_hashes)), tables.get("sets")
 
 
 def with_shingle_table(
@@ -274,48 +183,24 @@ def with_shingle_table(
 
 
 def append_to_dedup_index(
-    new_docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    table_key: tuple,
-    num_hashes: int = 16,
-    *,
-    before: tuple,
+    new_docs: DataFrame, id_col: str, table_key: tuple, *, before: tuple,
 ) -> None:
     """INCREMENTAL index maintenance: record `new_docs` as an append
-    segment for EVERY index built under `table_key` (all shingle_n
-    values; every signature variant merges at compaction — a sibling
-    built with a different num_hashes never goes silently stale).
-
-    O(batch) per call: one tokenize+shingle pass per indexed n, written
-    to a localCheckpoint'ed segment; the O(corpus) merge is deferred to
+    segment for EVERY near-dup index built under `table_key` (all
+    shingle_n values; every signature variant and the set table merge at
+    compaction). O(batch) per index; the O(corpus) merge is deferred to
     compaction (next query, or segment cap). Semantics are the
     reference's object upsert: a re-arrived id REPLACES its indexed
     version, so after compaction the index equals a from-scratch
     rebuild over the logical corpus — latest version per id
     (tests/test_dedup_textstats.py pins the equality). No-op for a
     table_key that was never built: the next query builds the full
-    corpus tables and sees the new docs anyway.
-
-    `n`/`num_hashes` are accepted for call-site symmetry but existing
-    indexes dictate which variants are maintained. ``before`` is the
-    registry stamp of the table taken before the batch was written; the
-    advanced indexes are re-stamped to the table as written."""
-    ids = None
-
-    def _append(idx: _DedupIndex, variant: tuple) -> None:
-        nonlocal ids
-        if ids is None:
-            ids = _ckpt(new_docs.select(F.col(id_col).alias("_doc")).distinct())
-        seg_sh = _ckpt(shingle_df(new_docs, id_col, text_col, variant[-1]))
-        idx.pending.append((ids, seg_sh))
-        if len(idx.pending) >= _MAX_SEGMENTS:
-            _compact(idx)
-
-    registry.advance(new_docs.sparkSession, "dedup",
-                     source_paths(*table_key[:2]), tuple(table_key[2:]),
-                     _append, before)
+    corpus tables and sees the new docs anyway. Each index shingles the
+    batch with the pipeline (text column, n) it was built with.
+    ``before`` is the registry stamp of the table taken before the batch
+    was written; the advanced indexes are re-stamped to the table as
+    written."""
+    incremental.append("dedup", table_key, new_docs, id_col, before)
 
 
 def minhash_lsh_pairs(

@@ -107,7 +107,7 @@ def hybrid_search(spark: SparkSession, sf_dir: str, spec: HybridSpec) -> DataFra
         )
         # stats over the unfiltered collection (reference semantics), fed
         # from the session-level materialized tables — the keyword leg
-        # tokenizes only the shared filtered scan
+        # tokenizes no document
         bspec = with_materialized_stats(bspec, full, (sf_dir, spec.collection))
         sparse = (
             bm25_score_df(df, bspec)

@@ -91,12 +91,6 @@ def hamming_col(word_cols: Sequence[Column], query_words: Sequence[int]) -> Colu
     return acc
 
 
-# session-persisted encoded tables (ingest-time artifact), registry
-# family incremental.FAMILY. Incremental: streaming appends land as O(batch)
-# segments via append_to_vector_indexes (the async vector-index-queue
-# analogue, vector_index_queue.go) and merge at the next resolve — see
-# weaviate_spark/incremental.py.
-
 # Written BQ artifact (the flat index's compress-at-ingest analogue,
 # flat/index.go:60-78, persisted like the BM25 postings tables): the
 # packed sign-bit words live in a parquet table of (id, _bq0.._bqN) —
@@ -169,15 +163,34 @@ def _bq_code_frame(
     )
 
 
-def append_to_vector_indexes(batch_df: DataFrame, table_key: tuple,
-                             before: tuple) -> int:
+def _code_table(
+    df: DataFrame, table_key: tuple, variant: tuple, id_col: str,
+    build, encode,
+) -> DataFrame:
+    """The session-persisted encoded table (ingest-time artifact) of
+    ``df``: an index of the segment store (weaviate_spark/
+    incremental.py, registry family "vector") whose id column is
+    ``id_col``, built once from ``build()``. Streaming appends land as O(batch) segments via
+    append_to_vector_indexes (the async vector-index-queue analogue,
+    vector_index_queue.go) and merge at the next resolve."""
+    frame, _ = incremental.resolve(
+        df.sparkSession, "vector", table_key, variant, id_col,
+        lambda: incremental.checkpoint(build()), encode)
+    return frame
+
+
+def append_to_vector_indexes(batch_df: DataFrame, id_col: str,
+                             table_key: tuple, before: tuple) -> int:
     """Record an append segment against EVERY quantized index (BQ/SQ/PQ/
     RQ/IVF-PQ, any dim/codebook/normalization variant) built under
     ``table_key`` — each entry re-encodes only the batch with its own
     stored encode pipeline, and is re-stamped to the table as written
     (``before``: the registry stamp taken before the batch was written).
-    Returns the number of indexes advanced (0 = none built)."""
-    return incremental.append(table_key, batch_df, before)
+    Replace-by-id: every ``id_col`` value of the batch evicts its
+    indexed codes at compaction, also when its new vector is NULL and
+    encodes to nothing. Returns the number of indexes advanced (0 =
+    none built)."""
+    return incremental.append("vector", table_key, batch_df, id_col, before)
 
 
 def with_bq_index(
@@ -200,9 +213,7 @@ def with_bq_index(
                 return df.sparkSession.read.parquet(f"{root}/codes")
         return _encode(df)
 
-    return incremental.resolve(
-        df.sparkSession, table_key, ("bq", dim), id_col, _build,
-        _encode)
+    return _code_table(df, table_key, ("bq", dim), id_col, _build, _encode)
 
 
 def bq_topk(
@@ -564,10 +575,9 @@ def with_sq_index(
                 return df.sparkSession.read.parquet(f"{root}/codes")
         return _encode(df)
 
-    return incremental.resolve(
-        df.sparkSession, table_key,
-        ("sq", dim, float(lo), float(hi), bool(normalize)), id_col, _build,
-        _encode)
+    return _code_table(
+        df, table_key, ("sq", dim, float(lo), float(hi), bool(normalize)),
+        id_col, _build, _encode)
 
 
 def sq_topk(
@@ -763,9 +773,8 @@ def with_pq_index(
             "_id long, _v array<float>, _pq array<int>",
         )
 
-    return incremental.resolve(
-        df.sparkSession, table_key, ("pq", normalize), "_id",
-        lambda: _encode(df), _encode)
+    return _code_table(df, table_key, ("pq", normalize), "_id",
+                       lambda: _encode(df), _encode)
 
 
 def pq_lut_py(vector: Sequence[float], codebook, round_digits: int = 6,
@@ -958,9 +967,8 @@ def with_rq_index(
             "_lower double, _step double",
         )
 
-    return incremental.resolve(
-        df.sparkSession, table_key, ("rq", normalize), "_id",
-        lambda: _encode(df), _encode)
+    return _code_table(df, table_key, ("rq", normalize), "_id",
+                       lambda: _encode(df), _encode)
 
 
 def rq_topk(
@@ -1081,9 +1089,8 @@ def with_ivfpq_index(
             "_id long, _v array<float>, _cell int, _pq array<int>",
         )
 
-    return incremental.resolve(
-        df.sparkSession, table_key, ("ivfpq", normalize), "_id",
-        lambda: _encode(df), _encode)
+    return _code_table(df, table_key, ("ivfpq", normalize), "_id",
+                       lambda: _encode(df), _encode)
 
 
 def ivfpq_topk(

@@ -70,10 +70,7 @@ def stream_ingest_with_index_maintenance(
     target_dir: str,
     id_col: str,
     *,
-    text_col: Optional[str] = None,
     dedup_index_key: Optional[tuple] = None,
-    shingle_n: int = 3,
-    num_hashes: int = 16,
     bm25: bool = False,
     vector_index_key: Optional[tuple] = None,
     distinct_sketch: Optional[tuple] = None,
@@ -90,9 +87,12 @@ def stream_ingest_with_index_maintenance(
     the derived index structures in O(batch), so queries between batches
     never re-tokenize or re-scan the standing corpus.
 
-    * ``dedup_index_key`` — record an append segment against the
-      session's persisted shingle/signature/shingle-set near-dup index
-      (dedup.append_to_dedup_index; merge deferred to compaction).
+    * ``dedup_index_key`` — record an append segment against every
+      persisted near-dup index (shingle table with its signature and
+      shingle-set tables) built under the key
+      (dedup.append_to_dedup_index; merge deferred to compaction; each
+      index shingles the batch with the text column and n it was built
+      with).
     * ``bm25=True`` — advance the written BM25 inverted-index artifacts
       (bm25.advance_bm25_artifacts): the postings and doclen tables
       gain the batch's segment files, term_df/corpus_stats one delta
@@ -119,8 +119,11 @@ def stream_ingest_with_index_maintenance(
       estimates (optionally per group) readable at any time via
       sketches.hll_sketch_estimate without rescanning the table.
 
-    Dedup-index semantics are the reference's object upsert: a
-    re-arrived id REPLACES its indexed version. Pick the sink to match:
+    The near-dup and vector indexes follow the reference's object
+    upsert (one segment store, weaviate_spark/incremental.py): a
+    re-arrived id REPLACES its indexed version, and an id whose new
+    vector is NULL (or whose new text is too short to shingle) leaves
+    the index. Pick the sink to match:
 
     * ``upsert=True`` — each batch MERGEs into the table by ``id_col``
       (crud.upsert under optimistic-concurrency retry), so table and
@@ -132,7 +135,7 @@ def stream_ingest_with_index_maintenance(
     * ``upsert=False`` (default) — plain parquet append, O(batch).
       Correct for append-only id streams (the common ingest case); if
       an id DOES re-arrive, the raw log keeps the superseded rows while
-      the dedup index tracks only the latest version — read the table
+      the indexes track only the latest version — read the table
       through the crud/upsert path (or run with ``upsert=True``) when
       ids can repeat.
     """
@@ -176,14 +179,13 @@ def stream_ingest_with_index_maintenance(
         else:
             batch_df.write.mode("append").parquet(target_dir)
         if dedup_index_key is not None:
-            append_to_dedup_index(
-                batch_df, id_col, text_col, shingle_n, dedup_index_key,
-                num_hashes=num_hashes, before=dedup_before,
-            )
+            append_to_dedup_index(batch_df, id_col, dedup_index_key,
+                                  before=dedup_before)
         if fp_before is not None:
             bm25_mod.advance_bm25_artifacts(batch_df, sf_dir, coll, fp_before)
         if vector_index_key is not None:
-            append_to_vector_indexes(batch_df, vector_index_key, before=vector_before)
+            append_to_vector_indexes(batch_df, id_col, vector_index_key,
+                                     before=vector_before)
         if distinct_sketch is not None:
             from weaviate_spark.operators.sketches import append_to_hll_sketch
 
@@ -199,35 +201,6 @@ def stream_ingest_with_index_maintenance(
         spark, source_dir, schema, target_dir, transform=transform,
         checkpoint_dir=checkpoint_dir, available_now=available_now,
         sink=_sink,
-    )
-
-
-def stream_ingest_with_dedup_index(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    target_dir: str,
-    id_col: str,
-    text_col: str,
-    index_key: tuple,
-    shingle_n: int = 3,
-    num_hashes: int = 16,
-    checkpoint_dir: Optional[str] = None,
-    available_now: bool = True,
-    transform: Optional[Callable[[DataFrame], DataFrame]] = None,
-    upsert: bool = False,
-):
-    """Near-dup-index-only form of stream_ingest_with_index_maintenance
-    (kept as the named entry point for the common case). New options
-    (transform/upsert) come AFTER the original positional tail
-    (checkpoint_dir, available_now) so existing positional callers keep
-    their meaning."""
-    return stream_ingest_with_index_maintenance(
-        spark, source_dir, schema, target_dir, id_col,
-        text_col=text_col, dedup_index_key=index_key,
-        shingle_n=shingle_n, num_hashes=num_hashes,
-        transform=transform, checkpoint_dir=checkpoint_dir,
-        available_now=available_now, upsert=upsert,
     )
 
 
